@@ -15,26 +15,17 @@ frames an IVF probe actually needs:
 
 Admitting a batch assigns it against the PERSISTED centroids (one
 broadcast of the tiny centroid frame; the corpus never reshuffles)
-and appends the batch's rows. Whether the quantizer is still fit for
-the grown corpus is decided by a DRIFT GATE, not a schedule: the
-integer L1 distance, in basis points, between the per-cell population
-shares before and after admission. Basis-point arithmetic is all
-integer (no float shares), so the gate value is a pure function of
-the counts — deterministic across engines and partitionings, the
-same discipline as the md5 admission gates. A fired gate means the
-cell populations no longer resemble what the quantizer was trained
-on (recall decays as cells bloat unevenly) and a retrain is due;
-an unfired gate means the batch is absorbed for the cost of one
-assignment pass.
+and appends the batch's rows to the admitted zone. Retraining is
+decided by the per-cell population DRIFT GATE over that zone; the
+zone, the gate and the streaming-admission ledger are the persisted-
+index core shared with the PQ indexes (``operators/index_zone.py``).
 
 Scale: admission cost is O(batch × k) with a broadcast join —
 independent of corpus size; the drift gate reads only the per-cell
 counts (k rows). Retraining remains the only corpus-sized job, and
 the gate is what keeps it off the critical path. Reference analog:
 the reference maintains no vector index (it has no relational
-operators at all — SURVEY §2.4); this mirrors the ingestion-time
-maintenance discipline of its streaming zones
-(``IntegrationSource.scala``'s append-only epochs).
+operators at all — SURVEY §2.4).
 """
 
 from __future__ import annotations
@@ -45,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from hyppo_worker_spark.functions import vectors as V
+from hyppo_worker_spark.operators.index_zone import AdmittedZone
 from hyppo_worker_spark.operators.similarity import kmeans_centroids
 
 
@@ -65,7 +57,14 @@ class IvfIndex:
         self.n_iter = n_iter
         self.drift_threshold_bp = drift_threshold_bp
         self._cents_dir = os.path.join(path, "centroids")
-        self._asg_dir = os.path.join(path, "assignments")
+        self.zone = AdmittedZone(
+            os.path.join(path, "assignments"),
+            ("cell",),
+            lambda spark: self.centroids(spark).select(
+                F.col("cent_id").alias("cell")
+            ),
+            n_centroids,
+        )
 
     def exists(self) -> bool:
         return os.path.isdir(self._cents_dir)
@@ -89,16 +88,13 @@ class IvfIndex:
             n_centroids=self.n_centroids, n_iter=self.n_iter,
         )
         cents.write.mode("overwrite").parquet(self._cents_dir)
-        assigned = self.assign(spark, corpus, id_col, vec_col)
-        assigned.withColumn("admitted", F.lit(False)).write.mode(
-            "overwrite"
-        ).parquet(self._asg_dir)
+        self.zone.write_base(self.assign(spark, corpus, id_col, vec_col))
 
     def centroids(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self._cents_dir)
 
     def assignments(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self._asg_dir)
+        return self.zone.read(spark)
 
     # -- admission -----------------------------------------------------
 
@@ -107,30 +103,12 @@ class IvfIndex:
         id_col: str = "vec_id", vec_col: str = "embedding",
     ) -> DataFrame:
         """(vec_id, cell) for ``batch`` against the PERSISTED
-        centroids: broadcast the tiny centroid frame, argmax cosine
-        per vector (ties → lowest cent_id — the Lloyd assignment
-        tie-break, so an admitted vector lands exactly where a full
-        retrain's final assignment pass would put it when the
-        centroids agree). One batch scan, no corpus shuffle."""
-        cn = self.centroids(spark).withColumn(
-            "cent_norm", V.norm(F.col("cent"))
-        )
-        v = batch.select(
-            F.col(id_col).alias("vec_id"),
-            V.as_double(F.col(vec_col)).alias("__v"),
-        ).withColumn("__vnorm", V.norm(F.col("__v")))
-        scored = v.join(F.broadcast(cn)).withColumn(
-            "__sim",
-            V.dot(F.col("__v"), F.col("cent"))
-            / (F.col("__vnorm") * F.col("cent_norm")),
-        )
-        w = W.partitionBy("vec_id").orderBy(
-            F.col("__sim").desc(), "cent_id"
-        )
-        return (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("vec_id", F.col("cent_id").alias("cell"))
+        centroids: :meth:`probe_cells` at nprobe=1, so an admitted
+        vector lands exactly where a full retrain's final assignment
+        pass would put it when the centroids agree. One batch scan,
+        no corpus shuffle."""
+        return self.probe_cells(spark, batch, id_col, vec_col).select(
+            F.col("q_id").alias("vec_id"), "cell"
         )
 
     def admit(
@@ -140,41 +118,12 @@ class IvfIndex:
         """Assign ``batch`` against the persisted quantizer and append
         its (vec_id, cell, admitted=true) rows — no retrain, nothing
         existing rewritten."""
-        assigned = self.assign(spark, batch, id_col, vec_col)
-        assigned.withColumn("admitted", F.lit(True)).write.mode(
-            "append"
-        ).parquet(self._asg_dir)
-        return assigned
+        return self.zone.append(self.assign(spark, batch, id_col, vec_col))
 
-    # -- zone maintenance ------------------------------------------------
-
-    def compact_assignments(
-        self, spark: SparkSession, *,
-        max_files: int | None = None,
-        target_file_bytes: int = 128 * 1024 * 1024,
-    ) -> dict | None:
-        """Compact the append-only ``assignments/`` zone (p28's
-        small-files discipline applied to the index): admission writes
-        one parquet dir per batch BY DESIGN (append-only, replay-
-        friendly), so over thousands of batches the file count — and
-        every drift-gate read's per-file open cost — grows without
-        bound. With ``max_files`` set this is a cheap no-op below the
-        threshold (one listing), making it safe to call after every
-        admission; the rewrite itself preserves rows and columns
-        exactly, so counts, drift, and search are value-identical on
-        the compacted zone (tested). Run in a maintenance window — the
-        directory swap is not atomic (see ``maintenance.compact``)."""
-        from hyppo_worker_spark.operators.maintenance import (
-            compact,
-            dataset_file_stats,
-        )
-
-        if (
-            max_files is not None
-            and dataset_file_stats(self._asg_dir)["n_files"] <= max_files
-        ):
-            return None
-        return compact(spark, self._asg_dir, target_file_bytes)
+    def drift_report(self, spark: SparkSession) -> DataFrame:
+        """(cell, n_base, n_admitted, drift_bp, retrain_needed) from
+        the persisted index — the maintenance decision as data."""
+        return self.zone.drift_report(spark, self.drift_threshold_bp)
 
     # -- read path (query the persisted index) ---------------------------
 
@@ -274,144 +223,4 @@ class IvfIndex:
                 "cos_sim",
                 "rank",
             )
-        )
-
-    # -- drift gate ----------------------------------------------------
-
-    def cell_counts(self, spark: SparkSession) -> DataFrame:
-        """(cell, n_base, n_admitted) over the persisted assignments,
-        one row per trained cell (empty cells included — a cell that
-        lost all mass is itself drift evidence)."""
-        cells = self.centroids(spark).select(
-            F.col("cent_id").alias("cell")
-        )
-        counts = self.assignments(spark).groupBy("cell").agg(
-            F.sum(F.when(~F.col("admitted"), 1).otherwise(0)).alias(
-                "n_base"
-            ),
-            F.sum(F.when(F.col("admitted"), 1).otherwise(0)).alias(
-                "n_admitted"
-            ),
-        )
-        return (
-            cells.join(counts, "cell", "left")
-            .select(
-                "cell",
-                F.coalesce("n_base", F.lit(0)).cast("long").alias("n_base"),
-                F.coalesce("n_admitted", F.lit(0))
-                .cast("long")
-                .alias("n_admitted"),
-            )
-        )
-
-    @staticmethod
-    def fold_admitted_counts(
-        base: DataFrame, prev_cum: DataFrame | None, cur: DataFrame
-    ) -> DataFrame:
-        """Incremental (cell, n_base, n_admitted) counts: fold the
-        PREVIOUS cumulative admitted counts with the CURRENT batch's —
-        O(batch + k) per trigger instead of rescanning every admitted
-        batch dir (O(total admitted) I/O, unbounded on a continuous
-        pipeline). Integer addition is associative, so the fold is
-        value-identical to a cumulative recompute, and replaying a
-        batch against the same previous ledger reproduces identical
-        rows (replay-idempotent).
-
-        ``base``: (cell, n_base) — fixed after train;
-        ``prev_cum``: (cell, n_admitted_cum) from the previous ledger
-        row, or None for the first batch; ``cur``: (cell, __cur) this
-        batch's per-cell counts. Both joined sides are k-row frames —
-        broadcast singletons."""
-        if prev_cum is None:
-            prev = base.select(
-                "cell", F.lit(0).cast("long").alias("__prev")
-            )
-        else:
-            prev = prev_cum.select(
-                "cell", F.col("n_admitted_cum").alias("__prev")
-            )
-        return (
-            base.join(F.broadcast(prev), "cell", "left")
-            .join(F.broadcast(cur), "cell", "left")
-            .select(
-                "cell",
-                "n_base",
-                (
-                    F.coalesce("__prev", F.lit(0))
-                    + F.coalesce("__cur", F.lit(0))
-                )
-                .cast("long")
-                .alias("n_admitted"),
-            )
-        )
-
-    @staticmethod
-    def drift_bp_int(counts: list[tuple[int, int]]) -> int:
-        """Integer basis-point L1 drift over (n_base, n_admitted)
-        pairs — the DRIVER-SIDE twin of :meth:`drift_bp_col` for
-        bounded (k-row) count lists: same floor-div arithmetic, same
-        zero-base guard (each cell contributes the maximal 10000 bp so
-        the gate FIRES on an empty/wiped base). Python ``//`` equals
-        SQL ``div`` on the non-negative operands counts are. Exists so
-        a streaming admission ledger (k rows of integers per trigger)
-        can fold on the driver instead of paying broadcast-build +
-        tiny-scan-recompute jobs per trigger; equality with the
-        Catalyst form is pinned by test."""
-        tb = sum(nb for nb, _ in counts)
-        tt = sum(nb + na for nb, na in counts)
-        if tb == 0 or tt == 0:
-            return 10000 * len(counts)
-        return sum(
-            abs((10000 * nb) // tb - (10000 * (nb + na)) // tt)
-            for nb, na in counts
-        )
-
-    @staticmethod
-    def drift_bp_col(counts: DataFrame) -> DataFrame:
-        """Attach the integer basis-point L1 population drift to a
-        (cell, n_base, n_admitted) frame: per cell,
-        |floor(1e4·n_base/Σn_base) − floor(1e4·(n_base+n_admitted)/Σall)|,
-        summed. All-integer (floor division), so the value is
-        independent of partitioning and engine float semantics. The
-        totals frame is a broadcast singleton (audit-whitelisted
-        scalar crossJoin)."""
-        tot = counts.agg(
-            F.sum("n_base").alias("__tb"),
-            F.sum(F.col("n_base") + F.col("n_admitted")).alias("__tt"),
-        )
-        shared = counts.crossJoin(F.broadcast(tot))
-        # `div` (not float `/` + floor): pure int64 arithmetic — no
-        # double mantissa limit to hit when counts reach 1e12 rows.
-        # Zero-base guard: an index trained on an empty corpus (or one
-        # whose counts got wiped) has __tb=0, where `div` yields NULL —
-        # a NULL drift_bp would make retrain_needed NULL and an
-        # unhealthy index would silently never signal. Force maximal
-        # per-cell drift (10000 bp) instead so the gate FIRES.
-        per_cell = shared.withColumn(
-            "__d",
-            F.when(
-                (F.col("__tb") == 0) | (F.col("__tt") == 0),
-                F.lit(10000),
-            )
-            .otherwise(
-                F.abs(
-                    F.expr("(10000 * n_base) div __tb")
-                    - F.expr("(10000 * (n_base + n_admitted)) div __tt")
-                )
-            )
-            .cast("long"),
-        )
-        drift = per_cell.agg(F.sum("__d").alias("drift_bp"))
-        return (
-            per_cell.select("cell", "n_base", "n_admitted")
-            .crossJoin(F.broadcast(drift))
-        )
-
-    def drift_report(self, spark: SparkSession) -> DataFrame:
-        """(cell, n_base, n_admitted, drift_bp, retrain_needed) from
-        the persisted index — the maintenance decision as data."""
-        rep = self.drift_bp_col(self.cell_counts(spark))
-        return rep.withColumn(
-            "retrain_needed",
-            F.col("drift_bp") > F.lit(self.drift_threshold_bp),
         )

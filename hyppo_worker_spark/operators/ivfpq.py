@@ -15,9 +15,10 @@ Spark-first layout, reusing the persisted-index machinery as-is:
 
 - ``coarse/``    : an ``IvfIndex`` (centroids + assignments);
 - ``codebooks/`` : shared per-subspace residual codebooks (m×k rows);
-- ``codes/``     : (vec_id, m, code) PARTITIONED BY cell — the
-  inverted lists hold CODES, not vectors (the point of PQ), and a
-  nprobe=p query reads p/k of the codes via partition pruning.
+- ``codes/``     : (vec_id, m, code, admitted) PARTITIONED BY cell —
+  an append-only admitted zone; the inverted lists hold CODES, not
+  vectors (the point of PQ), and a nprobe=p query reads p/k of the
+  codes via partition pruning.
 
 Search is coarse probe → per-(query, cell) residual ADC lookup table
 (m×k rows per query, broadcast) → table-lookup sum over the probed
@@ -29,10 +30,11 @@ against the persisted codebooks.
 
 At 100 TB: the codes table is ~m bytes/vector (the only thing
 scanned at query time), training remains the only corpus-sized job,
-and both halves inherit their drift gates (``IvfIndex.drift_report``
-per cell, ``PqIndex.drift_report`` per subspace) for retrain
-scheduling. Reference analog: the reference maintains no vector index
-(no relational operators at all — SURVEY §2.4); the persisted-artifact
+and both halves carry a drift gate for retrain scheduling
+(``coarse.drift_report`` per cell, ``drift_report`` per residual
+subspace — the admitted-zone core in ``operators/index_zone.py``).
+Reference analog: the reference maintains no vector index (no
+relational operators at all — SURVEY §2.4); the persisted-artifact
 reuse mirrors its warm-executor affinity (WorkerFSM.scala:161-199).
 """
 
@@ -47,6 +49,7 @@ from hyppo_worker_spark.functions import vectors as V
 from hyppo_worker_spark.operators.ivf_index import IvfIndex
 from hyppo_worker_spark.operators.pq import (
     ADC_SCALE,
+    code_zone,
     pq_codebooks,
     pq_encode,
 )
@@ -79,7 +82,10 @@ class IvfPqIndex:
             n_iter=n_iter,
         )
         self._books_dir = os.path.join(path, "codebooks")
-        self._codes_dir = os.path.join(path, "codes")
+        self.zone = code_zone(
+            os.path.join(path, "codes"), self.codebooks, m * k,
+            partition_by=["cell"],
+        )
 
     def exists(self) -> bool:
         return self.coarse.exists() and os.path.isdir(self._books_dir)
@@ -87,27 +93,40 @@ class IvfPqIndex:
     # -- training --------------------------------------------------------
 
     def _residuals(
-        self, spark: SparkSession, corpus: DataFrame,
+        self, spark: SparkSession, batch: DataFrame, asg: DataFrame,
         id_col: str, vec_col: str,
     ) -> DataFrame:
-        """(vec_id, cell, rv = v − centroid[cell]) against the
-        PERSISTED coarse quantizer — elementwise zip_with subtraction,
-        bit-exact mirrored by the oracle's list_transform."""
-        cents = self.coarse.centroids(spark)
-        asg = self.coarse.assignments(spark).select("vec_id", "cell")
-        v = corpus.select(
+        """(vec_id, cell, rv = v − centroid[cell]) for ``batch`` given
+        its (vec_id, cell) assignment against the PERSISTED coarse
+        quantizer — elementwise zip_with subtraction, bit-exact
+        mirrored by the oracle's list_transform."""
+        v = batch.select(
             F.col(id_col).alias("vec_id"),
             V.as_double(F.col(vec_col)).alias("v"),
         )
         return (
             v.join(asg, "vec_id")
-            .join(F.broadcast(cents), F.col("cell") == F.col("cent_id"))
+            .join(
+                F.broadcast(self.coarse.centroids(spark)),
+                F.col("cell") == F.col("cent_id"),
+            )
             .select(
                 "vec_id",
                 "cell",
                 F.zip_with("v", "cent", lambda a, b: a - b).alias("rv"),
             )
         )
+
+    def _encode_residuals(
+        self, spark: SparkSession, resid: DataFrame
+    ) -> DataFrame:
+        """(vec_id, m, code, cell): PQ-encode residuals against the
+        PERSISTED codebooks (one broadcast of m·k rows)."""
+        codes = pq_encode(
+            resid, self.codebooks(spark), "vec_id", "rv",
+            m=self.m, dim=self.dim,
+        ).withColumnRenamed("__id", "vec_id")
+        return codes.join(resid.select("vec_id", "cell"), "vec_id")
 
     def train(
         self, corpus: DataFrame, id_col: str = "vec_id",
@@ -128,30 +147,24 @@ class IvfPqIndex:
         from hyppo_worker_spark.session import tracked_persist
 
         resid = tracked_persist(
-            self._residuals(spark, corpus, id_col, vec_col)
+            self._residuals(
+                spark, corpus,
+                self.coarse.assignments(spark).select("vec_id", "cell"),
+                id_col, vec_col,
+            )
         )
         books = pq_codebooks(
             resid, "vec_id", "rv",
             m=self.m, k=self.k, dim=self.dim, n_iter=self.n_iter,
         )
         books.write.mode("overwrite").parquet(self._books_dir)
-        codes = pq_encode(
-            resid, self.codebooks(spark), "vec_id", "rv",
-            m=self.m, dim=self.dim,
-        ).withColumnRenamed("__id", "vec_id")
-        (
-            codes.join(resid.select("vec_id", "cell"), "vec_id")
-            .withColumn("admitted", F.lit(False))
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(self._codes_dir)
-        )
+        self.zone.write_base(self._encode_residuals(spark, resid))
 
     def codebooks(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self._books_dir)
 
     def codes(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self._codes_dir)
+        return self.zone.read(spark)
 
     # -- incremental admission ----------------------------------------------
 
@@ -159,32 +172,16 @@ class IvfPqIndex:
         self, spark: SparkSession, batch: DataFrame,
         id_col: str = "vec_id", vec_col: str = "embedding",
     ) -> DataFrame:
-        """(vec_id, cell, m, code) for a NEW batch against the
+        """(vec_id, m, code, cell) for a NEW batch against the
         PERSISTED artifacts — the composed admission step: coarse
         assignment (one broadcast of k centroid rows), residual vs the
         assigned centroid, PQ encode against the persisted codebooks
         (one broadcast of m·k rows). O(batch·(k + m·k)), independent
         of corpus size; no training anywhere."""
         asg = self.coarse.assign(spark, batch, id_col, vec_col)
-        cents = self.coarse.centroids(spark)
-        v = batch.select(
-            F.col(id_col).alias("vec_id"),
-            V.as_double(F.col(vec_col)).alias("v"),
+        return self._encode_residuals(
+            spark, self._residuals(spark, batch, asg, id_col, vec_col)
         )
-        resid = (
-            v.join(asg, "vec_id")
-            .join(F.broadcast(cents), F.col("cell") == F.col("cent_id"))
-            .select(
-                "vec_id",
-                "cell",
-                F.zip_with("v", "cent", lambda a, b: a - b).alias("rv"),
-            )
-        )
-        codes = pq_encode(
-            resid, self.codebooks(spark), "vec_id", "rv",
-            m=self.m, dim=self.dim,
-        ).withColumnRenamed("__id", "vec_id")
-        return codes.join(resid.select("vec_id", "cell"), "vec_id")
 
     def admit(
         self, spark: SparkSession, batch: DataFrame,
@@ -192,16 +189,10 @@ class IvfPqIndex:
     ) -> DataFrame:
         """Encode ``batch`` against the persisted index and append its
         (vec_id, cell, m, code, admitted=true) rows — append-only,
-        nothing existing rewritten (the IvfIndex/PqIndex admission
-        contract for the composed layout)."""
-        codes = self.encode_batch(spark, batch, id_col, vec_col)
-        (
-            codes.withColumn("admitted", F.lit(True))
-            .write.mode("append")
-            .partitionBy("cell")
-            .parquet(self._codes_dir)
+        nothing existing rewritten."""
+        return self.zone.append(
+            self.encode_batch(spark, batch, id_col, vec_col)
         )
-        return codes
 
     def drift_report(
         self, spark: SparkSession, *, drift_threshold_bp: int = 500
@@ -211,59 +202,7 @@ class IvfPqIndex:
         names which residual codebooks to retrain; the coarse side
         keeps its own cell-population gate via
         ``self.coarse.drift_report``."""
-        from hyppo_worker_spark.operators.pq import subspace_drift
-
-        cells = self.codebooks(spark).select(
-            "m", F.col("cent_id").alias("code")
-        )
-        counts = (
-            cells.join(
-                self.codes(spark).groupBy("m", "code").agg(
-                    F.sum(F.when(~F.col("admitted"), 1).otherwise(0))
-                    .alias("n_base"),
-                    F.sum(F.when(F.col("admitted"), 1).otherwise(0))
-                    .alias("n_admitted"),
-                ),
-                ["m", "code"],
-                "left",
-            )
-            .select(
-                "m",
-                "code",
-                F.coalesce("n_base", F.lit(0)).cast("long").alias("n_base"),
-                F.coalesce("n_admitted", F.lit(0))
-                .cast("long")
-                .alias("n_admitted"),
-            )
-        )
-        return subspace_drift(counts, drift_threshold_bp)
-
-    # -- zone maintenance --------------------------------------------------
-
-    def compact_codes(
-        self, spark: SparkSession, *,
-        max_files: int | None = None,
-        target_file_bytes: int = 128 * 1024 * 1024,
-    ) -> dict | None:
-        """Compact the cell-partitioned ``codes/`` zone, PRESERVING
-        the hive partitioning (partition_by=["cell"]) so the read
-        path's literal partition filter keeps pruning after the
-        rewrite — value-identical search asserted in tests. No-op
-        below ``max_files`` when set."""
-        from hyppo_worker_spark.operators.maintenance import (
-            compact,
-            dataset_file_stats,
-        )
-
-        if (
-            max_files is not None
-            and dataset_file_stats(self._codes_dir)["n_files"] <= max_files
-        ):
-            return None
-        return compact(
-            spark, self._codes_dir, target_file_bytes,
-            partition_by=["cell"],
-        )
+        return self.zone.drift_report(spark, drift_threshold_bp)
 
     # -- read path ---------------------------------------------------------
 

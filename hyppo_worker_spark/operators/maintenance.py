@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -57,17 +58,26 @@ def compact(
     the rename scheme assumes a local POSIX filesystem (object stores
     need a manifest/versioned-directory indirection instead — the
     pattern table formats like Iceberg implement). Run compaction in a
-    maintenance window or behind a catalog pointer.
+    maintenance window or behind a catalog pointer. A crash inside an
+    earlier swap is repaired at entry: a dataset left only at
+    ``<path>.__old__`` (crash between the renames) is renamed back,
+    and a stale ``.__old__`` or ``.__compacting__`` sibling (crash
+    during the write or the final delete) is removed.
     ``partition_by`` preserves a hive-partitioned layout (e.g. an
     index's cell-partitioned inverted lists): the rewrite repartitions
     BY those columns so each partition directory lands from one task
     and partition pruning keeps working on the compacted zone. Returns
     before/after file stats.
     """
+    tmp = path.rstrip("/") + ".__compacting__"
+    old = path.rstrip("/") + ".__old__"
+    if not os.path.exists(path) and os.path.isdir(old):
+        os.rename(old, path)
+    shutil.rmtree(old, ignore_errors=True)
+    shutil.rmtree(tmp, ignore_errors=True)
     before = dataset_file_stats(path)
     n_parts = max(1, -(-before["total_bytes"] // target_file_bytes))
     df = spark.read.format(fmt).load(path)
-    tmp = path.rstrip("/") + ".__compacting__"
     if partition_by:
         shaped = df.repartition(*[F.col(c) for c in partition_by])
         writer = shaped.write.mode("overwrite").format(fmt).partitionBy(
@@ -77,11 +87,8 @@ def compact(
         shaped = df.repartition(n_parts)
         writer = shaped.write.mode("overwrite").format(fmt)
     writer.save(tmp)
-    old = path.rstrip("/") + ".__old__"
     os.rename(path, old)
     os.rename(tmp, path)
-    import shutil
-
     shutil.rmtree(old)
     after = dataset_file_stats(path)
     return {"before": before, "after": after, "target_partitions": n_parts}

@@ -34,10 +34,13 @@ the only corpus-scale shuffle is the final per-query top-k.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from hyppo_worker_spark.functions import vectors as V
+from hyppo_worker_spark.operators.index_zone import AdmittedZone
 from hyppo_worker_spark.operators.similarity import FIXED_POINT_SCALE
 
 ADC_SCALE = 1_000_000  # contribution grid: floor(sqdist * 1e6) longs
@@ -225,14 +228,15 @@ class PqIndex:
     """Filesystem-backed PQ index — the codes-side twin of
     ``ivf_index.IvfIndex``: codebooks train ONCE on the standing
     corpus and persist (``codebooks/`` m×k rows, ``codes/`` narrow
-    (vec_id, m, code, admitted) rows, append-only admission); a new
-    embedding batch is admitted by ENCODING against the persisted
-    codebooks (one broadcast of m·k rows; O(batch·m·k), independent
-    of corpus size). Retraining is decided per SUBSPACE by the same
-    all-integer basis-point population-drift gate: a drifted subspace
-    means that slice of the vectors stopped resembling what its
-    codebook was trained on (reconstruction error decays there
-    first), and m-keyed drift tells you WHICH codebooks to retrain.
+    (vec_id, m, code, admitted) rows in an append-only admitted zone,
+    ``operators/index_zone.py``); a new embedding batch is admitted by
+    ENCODING against the persisted codebooks (one broadcast of m·k
+    rows; O(batch·m·k), independent of corpus size). Retraining is
+    decided per SUBSPACE by the zone's basis-point drift gate grouped
+    by ``m``: a drifted subspace means that slice of the vectors
+    stopped resembling what its codebook was trained on
+    (reconstruction error decays there first), and m-keyed drift
+    tells you WHICH codebooks to retrain.
     """
 
     def __init__(
@@ -245,8 +249,6 @@ class PqIndex:
         n_iter: int = 2,
         drift_threshold_bp: int = 500,
     ) -> None:
-        import os
-
         self.path = path
         self.m = m
         self.k = k
@@ -254,11 +256,11 @@ class PqIndex:
         self.n_iter = n_iter
         self.drift_threshold_bp = drift_threshold_bp
         self._books_dir = os.path.join(path, "codebooks")
-        self._codes_dir = os.path.join(path, "codes")
+        self.zone = code_zone(
+            os.path.join(path, "codes"), self.codebooks, m * k
+        )
 
     def exists(self) -> bool:
-        import os
-
         return os.path.isdir(self._books_dir)
 
     def train(
@@ -274,16 +276,13 @@ class PqIndex:
             m=self.m, k=self.k, dim=self.dim, n_iter=self.n_iter,
         )
         books.write.mode("overwrite").parquet(self._books_dir)
-        codes = self.encode(spark, corpus, id_col, vec_col)
-        codes.withColumn("admitted", F.lit(False)).write.mode(
-            "overwrite"
-        ).parquet(self._codes_dir)
+        self.zone.write_base(self.encode(spark, corpus, id_col, vec_col))
 
     def codebooks(self, spark) -> DataFrame:
         return spark.read.parquet(self._books_dir)
 
     def codes(self, spark) -> DataFrame:
-        return spark.read.parquet(self._codes_dir)
+        return self.zone.read(spark)
 
     def encode(
         self, spark, batch: DataFrame, id_col: str = "vec_id",
@@ -303,96 +302,29 @@ class PqIndex:
         self, spark, batch: DataFrame, id_col: str = "vec_id",
         vec_col: str = "embedding",
     ) -> DataFrame:
-        codes = self.encode(spark, batch, id_col, vec_col)
-        codes.withColumn("admitted", F.lit(True)).write.mode(
-            "append"
-        ).parquet(self._codes_dir)
-        return codes
-
-    def compact_codes(
-        self, spark, *,
-        max_files: int | None = None,
-        target_file_bytes: int = 128 * 1024 * 1024,
-    ) -> dict | None:
-        """Compact the append-only ``codes/`` zone — the PQ twin of
-        ``IvfIndex.compact_assignments`` (same no-op-below-threshold
-        contract; rows/columns preserved, so ADC and the per-subspace
-        drift gate are value-identical on the compacted zone)."""
-        from hyppo_worker_spark.operators.maintenance import (
-            compact,
-            dataset_file_stats,
-        )
-
-        if (
-            max_files is not None
-            and dataset_file_stats(self._codes_dir)["n_files"] <= max_files
-        ):
-            return None
-        return compact(spark, self._codes_dir, target_file_bytes)
+        return self.zone.append(self.encode(spark, batch, id_col, vec_col))
 
     def drift_report(self, spark) -> DataFrame:
         """(m, code, n_base, n_admitted, drift_bp, retrain_needed) —
         the drift stat and gate PER SUBSPACE (drift_bp constant within
-        an m group): integer `div` arithmetic throughout, so the gate
-        value is a pure function of the counts."""
-        cells = self.codebooks(spark).select(
+        an m group)."""
+        return self.zone.drift_report(spark, self.drift_threshold_bp)
+
+
+def code_zone(
+    path: str, codebooks, grid_size: int,
+    partition_by: list[str] | None = None,
+) -> AdmittedZone:
+    """The admitted zone of a PQ-coded index: (vec_id, m, code, …)
+    rows keyed by (m, code) over the codebooks' grid, drift grouped
+    per subspace. Shared by ``PqIndex`` and ``IvfPqIndex``."""
+    return AdmittedZone(
+        path,
+        ("m", "code"),
+        lambda spark: codebooks(spark).select(
             "m", F.col("cent_id").alias("code")
-        )
-        counts = (
-            cells.join(
-                self.codes(spark).groupBy("m", "code").agg(
-                    F.sum(F.when(~F.col("admitted"), 1).otherwise(0))
-                    .alias("n_base"),
-                    F.sum(F.when(F.col("admitted"), 1).otherwise(0))
-                    .alias("n_admitted"),
-                ),
-                ["m", "code"],
-                "left",
-            )
-            .select(
-                "m",
-                "code",
-                F.coalesce("n_base", F.lit(0)).cast("long").alias("n_base"),
-                F.coalesce("n_admitted", F.lit(0))
-                .cast("long")
-                .alias("n_admitted"),
-            )
-        )
-        return subspace_drift(counts, self.drift_threshold_bp)
-
-
-def subspace_drift(counts: DataFrame, threshold_bp: int) -> DataFrame:
-    """Attach (drift_bp, retrain_needed) PER SUBSPACE to an
-    (m, code, n_base, n_admitted) frame — the m-keyed twin of
-    ``IvfIndex.drift_bp_col``, shared by the persisted PQ index and
-    the streaming-admission ledgers: integer `div` arithmetic (pure
-    function of the counts), per-m totals broadcast. Zero-base guard:
-    a subspace with __tb=0 (or __tt=0) forces maximal per-cell drift
-    so the gate FIRES instead of going NULL."""
-    tot = counts.groupBy("m").agg(
-        F.sum("n_base").alias("__tb"),
-        F.sum(F.col("n_base") + F.col("n_admitted")).alias("__tt"),
-    )
-    per_cell = counts.join(F.broadcast(tot), "m").withColumn(
-        "__d",
-        F.when(
-            (F.col("__tb") == 0) | (F.col("__tt") == 0),
-            F.lit(10000),
-        )
-        .otherwise(
-            F.abs(
-                F.expr("(10000 * n_base) div __tb")
-                - F.expr("(10000 * (n_base + n_admitted)) div __tt")
-            )
-        )
-        .cast("long"),
-    )
-    drift = per_cell.groupBy("m").agg(F.sum("__d").alias("drift_bp"))
-    return (
-        per_cell.select("m", "code", "n_base", "n_admitted")
-        .join(F.broadcast(drift), "m")
-        .withColumn(
-            "retrain_needed",
-            F.col("drift_bp") > F.lit(threshold_bp),
-        )
+        ),
+        grid_size,
+        by=("m",),
+        partition_by=partition_by,
     )

@@ -957,6 +957,7 @@ def s12_incremental_ivf_maintenance(
     import tempfile
 
     from hyppo_worker_spark.functions import text as TX
+    from hyppo_worker_spark.operators.index_zone import group_drift_bp
     from hyppo_worker_spark.operators.ivf_index import IvfIndex
 
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
@@ -988,31 +989,9 @@ def s12_incremental_ivf_maintenance(
     probe = batch.select(
         "vec_id", F.array(*[F.lit(float(x)) for x in c0]).alias("embedding")
     )
-    probe_asg = idx.assign(spark, probe)
-    base = idx.cell_counts(spark).select(
-        "cell", "n_base", F.lit(0).cast("long").alias("n_admitted")
-    )
-    probe_counts = (
-        base.drop("n_admitted")
-        .join(
-            probe_asg.groupBy("cell").agg(
-                F.count(F.lit(1)).alias("n_admitted")
-            ),
-            "cell",
-            "left",
-        )
-        .select(
-            "cell",
-            "n_base",
-            F.coalesce("n_admitted", F.lit(0)).cast("long").alias(
-                "n_admitted"
-            ),
-        )
-    )
     probe_fires = (
-        IvfIndex.drift_bp_col(probe_counts)
-        .agg(F.max("drift_bp").alias("d"))
-        .collect()[0][0]  # 1-row bounded pull — the gate decision
+        group_drift_bp(idx.zone.counts(spark, idx.assign(spark, probe)))
+        .collect()[0]["drift_bp"]  # 1-row bounded pull — the gate decision
         > _S12_GATE_BP
     )
     out = (
@@ -1143,15 +1122,9 @@ def s13_streaming_ivf_admission(
     import os
     import shutil
     import tempfile
-    import time
 
     from hyppo_worker_spark.functions import text as TX
     from hyppo_worker_spark.operators.ivf_index import IvfIndex
-    from hyppo_worker_spark.queries.pipeline_queries import (
-        _move_staged_blocks,
-    )
-    from hyppo_worker_spark.session import scoped_conf
-    from hyppo_worker_spark.streaming import drain_stream
 
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     is_new = TX.md5_bucket("vec_id", 100) < _S12_BATCH_PCT
@@ -1166,8 +1139,37 @@ def s13_streaming_ivf_admission(
         drift_threshold_bp=_S12_GATE_BP,
     )
     idx.train(corpus)
+    rows = _stream_admission(
+        spark, work, batch_all, idx.zone, lambda b: idx.assign(spark, b)
+    )  # 24 ledger rows — bounded pull (work dir deleted next)
+    shutil.rmtree(work, ignore_errors=True)
+    return local_frame(spark, 
+        rows,
+        "batch_seq long, cell long, n_base long, n_admitted_cum long, "
+        "drift_bp long, retrain_needed boolean",
+    ).orderBy("batch_seq", "cell")
 
-    # stage the 30% as three md5-sub-split time-ordered blocks
+
+def _stream_admission(
+    spark: SparkSession, work: str, batch_all: DataFrame, zone, encode
+) -> list:
+    """The s13/s17 streaming-admission loop: stage ``batch_all`` as
+    three md5-sub-split time-ordered stream blocks, admit each
+    micro-batch through an ``AdmissionLedger`` over ``zone`` inside
+    foreachBatch (``encode`` maps a batch to its key rows against the
+    persisted artifacts), and return every ledger row."""
+    import os
+    import time
+
+    from hyppo_worker_spark.functions import text as TX
+    from hyppo_worker_spark.operators.index_zone import AdmissionLedger
+    from hyppo_worker_spark.queries.pipeline_queries import (
+        _move_staged_blocks,
+    )
+    from hyppo_worker_spark.session import scoped_conf
+    from hyppo_worker_spark.streaming import drain_stream
+
+    ledger = AdmissionLedger(spark, work, zone, encode, _S12_GATE_BP)
     src = os.path.join(work, "stream")
     os.makedirs(src)
     stage = os.path.join(work, "stage")
@@ -1186,84 +1188,6 @@ def s13_streaming_ivf_admission(
     )
     _move_staged_blocks(stage, src, time.time(), 3)
 
-    adm_dir = os.path.join(work, "admitted")
-    ledger_dir = os.path.join(work, "ledger")
-
-    # The base-corpus cell populations are FIXED after train: pull the
-    # k rows once (bounded: n_centroids=8) instead of rescanning the
-    # assignments zone inside every trigger.
-    base_counts = sorted(
-        (int(r["cell"]), int(r["n_base"]))
-        for r in idx.cell_counts(spark).select("cell", "n_base").collect()
-    )
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        # per-batch OVERWRITE directories make replay idempotent by
-        # construction (identical bytes, no double-append)
-        asg = idx.assign(spark, batch)
-        batch_dir = os.path.join(adm_dir, f"batch={batch_id}")
-        asg.write.mode("overwrite").parquet(batch_dir)
-        # INCREMENTAL gate (VERDICT r11 item 2): fold the PREVIOUS
-        # ledger row (k rows, persisted per batch) with THIS batch's
-        # counts — O(batch + k) I/O per trigger, instead of re-reading
-        # every admitted/batch=* dir (O(total admitted), unbounded on
-        # a continuous pipeline). Counts are integers and associative,
-        # so the fold is value-identical to the cumulative recompute;
-        # replay of batch b re-reads ledger batch=b−1 (written by a
-        # COMPLETED earlier batch) and rewrites identical bytes.
-        #
-        # The fold itself runs DRIVER-SIDE (VERDICT r12 item 1): every
-        # frame past the batch count is ≤ k rows of integers, and the
-        # drift arithmetic (floor-div basis points, zero-base guard)
-        # is a pure integer function of the counts — identical whether
-        # Catalyst or the driver evaluates it. The r12-measured cost of
-        # the in-plan form was ~6 extra jobs per trigger (broadcast
-        # builds for prev/cur/tot/drift plus the tiny batch-dir scan
-        # recomputed by each of drift_bp_col's self-joins); the batch
-        # count and the ledger read below are the only cluster jobs.
-        cur = {
-            int(r["cell"]): int(r["n"])
-            for r in spark.read.parquet(batch_dir)
-            .groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }  # bounded pull: ≤ k cells
-        prev = (
-            {
-                int(r["cell"]): int(r["n_admitted_cum"])
-                for r in spark.read.parquet(
-                    os.path.join(ledger_dir, f"batch={int(batch_id) - 1}")
-                )
-                .select("cell", "n_admitted_cum")
-                .collect()
-            }  # bounded pull: k ledger rows
-            if int(batch_id) > 0
-            else {}
-        )
-        n_adm = {
-            c: prev.get(c, 0) + cur.get(c, 0) for c, _ in base_counts
-        }
-        drift_bp = IvfIndex.drift_bp_int(
-            [(nb, n_adm[c]) for c, nb in base_counts]
-        )
-        local_frame(spark, 
-            [
-                (
-                    c,
-                    nb,
-                    n_adm[c],
-                    drift_bp,
-                    drift_bp > _S12_GATE_BP,
-                    int(batch_id),
-                )
-                for c, nb in base_counts
-            ],
-            "cell long, n_base long, n_admitted_cum long, "
-            "drift_bp long, retrain_needed boolean, batch_seq long",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(ledger_dir, f"batch={batch_id}")
-        )
-
     with scoped_conf(spark, "spark.sql.shuffle.partitions", "4"):
         q = (
             spark.readStream.schema(
@@ -1271,31 +1195,13 @@ def s13_streaming_ivf_admission(
             )
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
-            .writeStream.foreachBatch(sink)
+            .writeStream.foreachBatch(ledger.admit)
             .option("checkpointLocation", os.path.join(work, "ckpt"))
             .trigger(availableNow=True)
             .start()
         )
         drain_stream(q, 300)
-
-    rows = (
-        spark.read.option("basePath", ledger_dir).parquet(ledger_dir)
-        .select(
-            F.col("batch_seq").cast("long"),
-            F.col("cell").cast("long"),
-            F.col("n_base").cast("long"),
-            F.col("n_admitted_cum").cast("long"),
-            F.col("drift_bp").cast("long"),
-            "retrain_needed",
-        )
-        .orderBy("batch_seq", "cell")
-    ).collect()  # 24 ledger rows — bounded pull (work dir deleted next)
-    shutil.rmtree(work, ignore_errors=True)
-    return local_frame(spark, 
-        rows,
-        "batch_seq long, cell long, n_base long, n_admitted_cum long, "
-        "drift_bp long, retrain_needed boolean",
-    ).orderBy("batch_seq", "cell")
+    return ledger.read()
 
 
 # --------------------------------------------------------------------------
@@ -1408,6 +1314,7 @@ def s14_incremental_pq_maintenance(
     import tempfile
 
     from hyppo_worker_spark.functions import text as TX
+    from hyppo_worker_spark.operators.index_zone import group_drift_bp
     from hyppo_worker_spark.operators.pq import PqIndex
 
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
@@ -1437,58 +1344,12 @@ def s14_incremental_pq_maintenance(
         "vec_id",
         F.array(*[F.lit(float(x)) for x in flat]).alias("embedding"),
     )
-    probe_codes = idx.encode(spark, probe)
-    base = (
-        idx.codebooks(spark)
-        .select("m", F.col("cent_id").alias("code"))
-        .join(
-            idx.codes(spark)
-            .filter(~F.col("admitted"))
-            .groupBy("m", "code")
-            .agg(F.count(F.lit(1)).alias("n_base")),
-            ["m", "code"],
-            "left",
-        )
-        .select(
-            "m", "code",
-            F.coalesce("n_base", F.lit(0)).cast("long").alias("n_base"),
-        )
-    )
-    probe_counts = (
-        base.join(
-            probe_codes.groupBy("m", "code").agg(
-                F.count(F.lit(1)).alias("n_admitted")
-            ),
-            ["m", "code"],
-            "left",
-        )
-        .select(
-            "m", "code", "n_base",
-            F.coalesce("n_admitted", F.lit(0))
-            .cast("long")
-            .alias("n_admitted"),
-        )
-    )
-    tot = probe_counts.groupBy("m").agg(
-        F.sum("n_base").alias("__tb"),
-        F.sum(F.col("n_base") + F.col("n_admitted")).alias("__tt"),
-    )
-    probe_drift = (
-        probe_counts.join(F.broadcast(tot), "m")
-        .withColumn(
-            "__d",
-            F.abs(
-                F.expr("(10000 * n_base) div __tb")
-                - F.expr("(10000 * (n_base + n_admitted)) div __tt")
-            ).cast("long"),
-        )
-        .groupBy("m")
-        .agg(F.sum("__d").alias("drift_bp"))
-    )
     fires_all = (
-        probe_drift.agg(
-            F.min("drift_bp").alias("mn")
-        ).collect()[0][0]  # 1-row bounded pull — the gate decision
+        group_drift_bp(
+            idx.zone.counts(spark, idx.encode(spark, probe)), idx.zone.by
+        )
+        .agg(F.min("drift_bp").alias("mn"))
+        .collect()[0][0]  # 1-row bounded pull — the gate decision
         > _S12_GATE_BP
     )
     out = (
@@ -2027,15 +1888,9 @@ def s17_streaming_ivfpq_admission(
     import os
     import shutil
     import tempfile
-    import time
 
     from hyppo_worker_spark.functions import text as TX
     from hyppo_worker_spark.operators.ivfpq import IvfPqIndex
-    from hyppo_worker_spark.queries.pipeline_queries import (
-        _move_staged_blocks,
-    )
-    from hyppo_worker_spark.session import scoped_conf
-    from hyppo_worker_spark.streaming import drain_stream
 
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     is_new = TX.md5_bucket("vec_id", 100) < _S12_BATCH_PCT
@@ -2048,136 +1903,10 @@ def s17_streaming_ivfpq_admission(
         n_cells=8, m=8, k=8, dim=64, n_iter=2,
     )
     idx.train(corpus)
-
-    # base per-(m, code) populations are FIXED after train: one
-    # bounded pull (m·k = 64 rows) instead of a per-trigger zone scan
-    base_counts = sorted(
-        (int(r["m"]), int(r["code"]), int(r["n"]))
-        for r in idx.codes(spark)
-        .filter(~F.col("admitted"))
-        .groupBy("m", "code")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    grid = sorted(
-        (int(r["m"]), int(r["cent_id"]))
-        for r in idx.codebooks(spark).select("m", "cent_id").collect()
-    )  # bounded: m·k rows — empty (m, code) cells must appear in the
-    # ledger (a code that lost all mass is drift evidence)
-    base_by_key = {(m, c): 0 for m, c in grid}
-    base_by_key.update({(m, c): n for m, c, n in base_counts})
-
-    src = os.path.join(work, "stream")
-    os.makedirs(src)
-    stage = os.path.join(work, "stage")
-    (
-        batch_all.select(
-            "vec_id", V.as_double(F.col("embedding")).alias("embedding")
-        )
-        .withColumn("blk", TX.md5_bucket("vec_id", 3).cast("int"))
-        .coalesce(1)
-        .write.partitionBy("blk")
-        .parquet(stage)
-    )
-    _move_staged_blocks(stage, src, time.time(), 3)
-
-    adm_dir = os.path.join(work, "admitted")
-    ledger_dir = os.path.join(work, "ledger")
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        codes = idx.encode_batch(spark, batch)
-        batch_dir = os.path.join(adm_dir, f"batch={batch_id}")
-        codes.write.mode("overwrite").parquet(batch_dir)
-        # incremental per-(m, code) fold: prev ledger row + this
-        # batch's counts — O(batch + m·k) per trigger (s13 discipline).
-        # Folded DRIVER-SIDE like s13 (VERDICT r12 item 1): every
-        # frame past the batch count is ≤ m·k rows of integers and the
-        # per-subspace drift (floor-div basis points, zero-base guard)
-        # is a pure integer function of the counts — the batch count
-        # and the prev-ledger read are the only cluster jobs, versus
-        # ~6 extra per trigger for the in-plan broadcast-join form.
-        cur = {
-            (int(r["m"]), int(r["code"])): int(r["n"])
-            for r in spark.read.parquet(batch_dir)
-            .groupBy("m", "code")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }  # bounded pull: ≤ m·k codes
-        prev = (
-            {
-                (int(r["m"]), int(r["code"])): int(r["n_admitted_cum"])
-                for r in spark.read.parquet(
-                    os.path.join(ledger_dir, f"batch={int(batch_id) - 1}")
-                )
-                .select("m", "code", "n_admitted_cum")
-                .collect()
-            }  # bounded pull: m·k ledger rows
-            if int(batch_id) > 0
-            else {}
-        )
-        from hyppo_worker_spark.operators.ivf_index import IvfIndex
-
-        n_adm = {
-            mc: prev.get(mc, 0) + cur.get(mc, 0) for mc in base_by_key
-        }
-        subspaces = sorted({mi for mi, _ in base_by_key})
-        drift = {
-            mi: IvfIndex.drift_bp_int(
-                [
-                    (nb, n_adm[(m2, c2)])
-                    for (m2, c2), nb in sorted(base_by_key.items())
-                    if m2 == mi
-                ]
-            )
-            for mi in subspaces
-        }
-        local_frame(spark, 
-            [
-                (
-                    mi,
-                    c,
-                    nb,
-                    n_adm[(mi, c)],
-                    drift[mi],
-                    drift[mi] > _S12_GATE_BP,
-                    int(batch_id),
-                )
-                for (mi, c), nb in sorted(base_by_key.items())
-            ],
-            "m int, code int, n_base long, n_admitted_cum long, "
-            "drift_bp long, retrain_needed boolean, batch_seq long",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(ledger_dir, f"batch={batch_id}")
-        )
-
-    with scoped_conf(spark, "spark.sql.shuffle.partitions", "4"):
-        q = (
-            spark.readStream.schema(
-                "vec_id long, embedding array<double>"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        drain_stream(q, 300)
-
-    rows = (
-        spark.read.option("basePath", ledger_dir).parquet(ledger_dir)
-        .select(
-            F.col("batch_seq").cast("long"),
-            F.col("m").cast("long"),
-            F.col("code").cast("long"),
-            F.col("n_base").cast("long"),
-            F.col("n_admitted_cum").cast("long"),
-            F.col("drift_bp").cast("long"),
-            "retrain_needed",
-        )
-        .orderBy("batch_seq", "m", "code")
-    ).collect()  # 3 × m·k = 192 ledger rows — bounded pull (work dir
-    # deleted next)
+    rows = _stream_admission(
+        spark, work, batch_all, idx.zone,
+        lambda b: idx.encode_batch(spark, b),
+    )  # 3 × m·k = 192 ledger rows — bounded pull (work dir deleted next)
     shutil.rmtree(work, ignore_errors=True)
     return local_frame(spark, 
         rows,

@@ -379,10 +379,9 @@ class HyppoEngine:
             if timer is not None:
                 timer.cancel()
             op_done.set()
-            try:
-                sc.clearJobGroup()
-            except Exception:  # noqa: BLE001
-                pass
+            # PySpark has no SparkContext.clearJobGroup; without this
+            # the slot thread keeps the finished item's group
+            sc._jsc.clearJobGroup()  # noqa: SLF001
             slot.current_delivery = None
             slot.current_group = None
             self.resources.release_all(leases)

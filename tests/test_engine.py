@@ -48,6 +48,17 @@ def test_queue_routing(engine):
     assert qname == "hyppo.integration.Test_Source-v1"
 
 
+def test_run_once_clears_job_group(engine, spark):
+    """The executing thread's job group is cleared once the item
+    finishes: later Spark work on the slot thread must not run (and
+    be cancelled) under a finished item's ``hyppo-exec-…`` group."""
+    stub = ProcessedDataStub()
+    engine.registry.register(stub)
+    engine.submit(ValidateIntegrationRequest(integration=stub.details()))
+    assert engine.run_once(0)
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+
 def test_full_pipeline_through_engine(engine):
     """Chained via response callbacks: validate → create tasks →
     fetch → persist → job completed — the coordinator round-trip of

@@ -10,6 +10,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from hyppo_worker_spark.operators.index_zone import (
+    drift_bp,
+    drift_bp_int,
+    fold_ledger,
+)
 from hyppo_worker_spark.operators.ivf_index import IvfIndex
 
 
@@ -107,19 +112,25 @@ def test_drift_gate_fires_on_planted_shift(spark, tmp_path):
 
 
 def test_drift_is_integer_and_partition_invariant(spark, tmp_path):
+    from hyppo_worker_spark.operators.pq import PqIndex
+
     idx = IvfIndex(str(tmp_path / "ivf"), n_centroids=4, n_iter=2)
     idx.train(_corpus(spark))
     idx.admit(spark, _corpus(spark, n=20, tag=3))
-    a = idx.drift_report(spark).orderBy("cell").collect()
-    b = (
-        IvfIndex.drift_bp_col(
-            idx.cell_counts(spark).repartition(13)
+    # grouped input: a PQ zone, drift per subspace ("m",)
+    pq = PqIndex(str(tmp_path / "pq"), m=2, k=4, dim=8, n_iter=2)
+    pq.train(_corpus(spark))
+    pq.admit(spark, _corpus(spark, n=20, tag=3))
+    for ix in (idx, pq):
+        keys = list(ix.zone.keys)
+        a = ix.drift_report(spark).orderBy(*keys).collect()
+        b = (
+            drift_bp(ix.zone.counts(spark).repartition(13), ix.zone.by)
+            .orderBy(*keys)
+            .collect()
         )
-        .orderBy("cell")
-        .collect()
-    )
-    assert [r.drift_bp for r in a] == [r.drift_bp for r in b]
-    assert all(isinstance(r.drift_bp, int) for r in a)
+        assert [r.drift_bp for r in a] == [r.drift_bp for r in b]
+        assert all(isinstance(r.drift_bp, int) for r in a)
 
 
 def test_untrained_index_does_not_exist(spark, tmp_path):
@@ -136,64 +147,73 @@ def test_fold_matches_cumulative_recompute_and_replay(spark, tmp_path):
     previous ledger yields identical rows (VERDICT r11 item 2)."""
     idx = IvfIndex(str(tmp_path / "ivf"), n_centroids=4, n_iter=2)
     idx.train(_corpus(spark))
-    base = idx.cell_counts(spark).select("cell", "n_base")
+    base = {(r.cell,): r.n_base for r in idx.zone.counts(spark).collect()}
 
-    prev = None
+    prev = {}
     ledgers = []
     for seq, tag in enumerate((3, 5, 7)):
         batch = _corpus(spark, n=10 + 4 * seq, tag=tag)
-        asg = idx.assign(spark, batch)
-        cur = asg.groupBy("cell").agg(F.count(F.lit(1)).alias("__cur"))
-        folded = IvfIndex.fold_admitted_counts(base, prev, cur)
-        rows = {
-            (r.cell, r.n_base, r.n_admitted) for r in folded.collect()
+        cur = {
+            (r.cell,): r["count"]
+            for r in idx.assign(spark, batch).groupBy("cell").count().collect()
         }
+        folded = fold_ledger(base, prev, cur, n_by=0, grid_size=4)
         # cumulative recompute: admit for real and read the full zone
         idx.admit(spark, batch)
         cum = {
-            (r.cell, r.n_base, r.n_admitted)
-            for r in idx.cell_counts(spark).collect()
+            (r.cell, r.n_base, r.n_admitted, r.drift_bp)
+            for r in idx.drift_report(spark).collect()
         }
-        assert rows == cum, f"fold != cumulative at batch {seq}"
+        assert set(folded) == cum, f"fold != cumulative at batch {seq}"
         # replay: same prev + same batch -> identical rows
-        replay = {
-            (r.cell, r.n_base, r.n_admitted)
-            for r in IvfIndex.fold_admitted_counts(
-                base, prev, cur
-            ).collect()
-        }
-        assert replay == rows
-        ledger = folded.select(
-            "cell", F.col("n_admitted").alias("n_admitted_cum")
-        )
-        ledgers.append(ledger)
-        prev = ledger
+        assert fold_ledger(base, prev, cur, n_by=0, grid_size=4) == folded
+        ledgers.append(folded)
+        prev = {(c,): n_adm for c, _, n_adm, _ in folded}
     assert len(ledgers) == 3
+
+
+def test_driver_folds_reject_keys_beyond_trained_grid():
+    """The driver-side folds are bounded by the trained grid (k cells,
+    or m·k codes): an oversize key list raises instead of folding."""
+    base = {(c,): 1 for c in range(5)}
+    with pytest.raises(AssertionError):
+        fold_ledger(base, {}, {}, n_by=0, grid_size=4)
+    with pytest.raises(AssertionError):
+        fold_ledger(dict(list(base.items())[:4]), {}, {(7,): 1},
+                    n_by=0, grid_size=4)
+    with pytest.raises(AssertionError):
+        drift_bp_int([(1, 0)] * 5, grid_size=4)
 
 
 def test_zero_base_drift_gate_fires_not_null(spark):
     """An index whose base counts are all zero (trained on an empty
     corpus, or counts wiped) must FIRE the drift gate, not return
-    NULL drift_bp / NULL retrain_needed (ADVICE r11)."""
+    NULL drift_bp / NULL retrain_needed (ADVICE r11) — ungrouped (IVF
+    cells) and grouped per subspace (PQ codes)."""
     counts = spark.createDataFrame(
         [(0, 0, 5), (1, 0, 0), (2, 0, 3), (3, 0, 0)],
         "cell long, n_base long, n_admitted long",
     )
-    rep = IvfIndex.drift_bp_col(counts).collect()
-    assert all(r.drift_bp is not None for r in rep)
-    assert all(r.drift_bp == 4 * 10000 for r in rep)  # maximal per cell
+    grouped = spark.createDataFrame(
+        [(m, c, 0, m + c) for m in range(2) for c in range(4)],
+        "m long, code long, n_base long, n_admitted long",
+    )
     gated = IvfIndex(
         "/nonexistent", drift_threshold_bp=500
     )
-    out = (
-        IvfIndex.drift_bp_col(counts)
-        .withColumn(
-            "retrain_needed",
-            F.col("drift_bp") > F.lit(gated.drift_threshold_bp),
+    for frame, by in ((counts, ()), (grouped, ("m",))):
+        rep = drift_bp(frame, by).collect()
+        assert all(r.drift_bp is not None for r in rep)
+        assert all(r.drift_bp == 4 * 10000 for r in rep)  # maximal per key
+        out = (
+            drift_bp(frame, by)
+            .withColumn(
+                "retrain_needed",
+                F.col("drift_bp") > F.lit(gated.drift_threshold_bp),
+            )
+            .collect()
         )
-        .collect()
-    )
-    assert all(r.retrain_needed is True for r in out)
+        assert all(r.retrain_needed is True for r in out)
 
 
 def test_persisted_search_matches_in_query_ivf(spark, tmp_path):
@@ -267,9 +287,9 @@ def test_compact_assignments_preserves_counts_and_drift(spark, tmp_path):
         tuple(r) for r in idx.drift_report(spark).collect()
     }
     # below-threshold: no-op
-    assert idx.compact_assignments(spark, max_files=10_000) is None
+    assert idx.zone.compact(spark, max_files=10_000) is None
     assert dataset_file_stats(asg_dir)["n_files"] == before_files
-    stats = idx.compact_assignments(spark, max_files=4)
+    stats = idx.zone.compact(spark, max_files=4)
     after_files = dataset_file_stats(asg_dir)["n_files"]
     assert stats is not None and after_files < before_files
     after = {tuple(r) for r in idx.drift_report(spark).collect()}
@@ -277,10 +297,10 @@ def test_compact_assignments_preserves_counts_and_drift(spark, tmp_path):
 
 
 def test_drift_bp_int_matches_catalyst_form(spark):
-    """The driver-side integer fold (drift_bp_int — the r13 streaming-
-    ledger path in s13/s17) must equal drift_bp_col on the same
-    counts, including the zero-base guard and exact floor-div
-    tie values."""
+    """The driver-side integer fold (drift_bp_int — the streaming-
+    ledger path in s13/s17) must equal drift_bp on the same counts,
+    including the zero-base guard and exact floor-div tie values,
+    ungrouped and grouped per subspace."""
     cases = [
         [(10, 0), (10, 0), (10, 0)],            # no admission: 0 drift
         [(7, 5), (3, 0), (90, 1), (0, 44)],     # uneven shift
@@ -293,5 +313,21 @@ def test_drift_bp_int_matches_catalyst_form(spark):
             [(i, nb, na) for i, (nb, na) in enumerate(pairs)],
             "cell long, n_base long, n_admitted long",
         )
-        col_val = IvfIndex.drift_bp_col(frame).collect()[0]["drift_bp"]
-        assert IvfIndex.drift_bp_int(pairs) == int(col_val), pairs
+        col_val = drift_bp(frame).collect()[0]["drift_bp"]
+        assert drift_bp_int(pairs, len(pairs)) == int(col_val), pairs
+    # grouped ("m",): every case above is one subspace of a single frame
+    grouped = spark.createDataFrame(
+        [
+            (m, c, nb, na)
+            for m, pairs in enumerate(cases)
+            for c, (nb, na) in enumerate(pairs)
+        ],
+        "m long, code long, n_base long, n_admitted long",
+    )
+    by_m = {
+        r["m"]: r["drift_bp"]
+        for r in drift_bp(grouped, ("m",)).collect()
+    }
+    assert by_m == {
+        m: drift_bp_int(pairs, 4) for m, pairs in enumerate(cases)
+    }

@@ -129,7 +129,7 @@ def test_compact_codes_keeps_partitioning_and_search(spark, tmp_path):
     q = corpus.filter(F.col("vec_id") < 4)
     before = {tuple(r) for r in idx.search(spark, q, topk=3).collect()}
     codes_dir = str(tmp_path / "pq" / "codes")
-    idx.compact_codes(spark)
+    idx.zone.compact(spark)
     cell_dirs = glob.glob(os.path.join(codes_dir, "cell=*"))
     assert cell_dirs, "hive partitioning lost by compaction"
     assert dataset_file_stats(codes_dir)["n_files"] >= len(cell_dirs)

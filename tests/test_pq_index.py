@@ -134,7 +134,7 @@ def test_compact_codes_preserves_subspace_drift(spark, tmp_path):
     codes_dir = str(tmp_path / "pq" / "codes")
     before_files = dataset_file_stats(codes_dir)["n_files"]
     before = {tuple(r) for r in idx.drift_report(spark).collect()}
-    stats = idx.compact_codes(spark, max_files=4)
+    stats = idx.zone.compact(spark, max_files=4)
     assert stats is not None
     assert dataset_file_stats(codes_dir)["n_files"] < before_files
     after = {tuple(r) for r in idx.drift_report(spark).collect()}
