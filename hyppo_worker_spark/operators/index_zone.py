@@ -35,6 +35,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hyppo_worker_spark.generations import Generations
 from hyppo_worker_spark.session import local_frame
 
 BP = 10000  # one share = 10000 basis points
@@ -138,9 +139,12 @@ def fold_ledger(
 
 
 class AdmittedZone:
-    """The append-only ``(key…, admitted)`` parquet directory of one
-    persisted index. ``grid`` returns the trained key grid (one row
-    per key, ``grid_size`` rows); ``by`` names the drift group
+    """The append-only ``(key…, admitted)`` parquet table of one
+    persisted index, kept as generations at ``path``
+    (``generations.py``): a base write or a compaction publishes a new
+    generation, an admission appends to the current one. ``grid``
+    returns the trained key grid (one row per key, ``grid_size``
+    rows); ``by`` names the drift group
     (``()`` for IVF cells, ``("m",)`` for PQ subspaces);
     ``partition_by`` keeps a hive layout (IVF-PQ's ``cell=`` inverted
     lists) through every write and compaction."""
@@ -161,24 +165,27 @@ class AdmittedZone:
         self.grid_size = grid_size
         self.by = by
         self.partition_by = partition_by
-
-    def _write(self, rows: DataFrame, admitted: bool, mode: str) -> None:
-        w = rows.withColumn("admitted", F.lit(admitted)).write.mode(mode)
-        if self.partition_by:
-            w = w.partitionBy(*self.partition_by)
-        w.parquet(self.path)
+        self.gens = Generations(path)
 
     def write_base(self, rows: DataFrame) -> None:
-        """(Re)write the zone as the trained corpus' rows."""
-        self._write(rows, False, "overwrite")
+        """(Re)write the zone as the trained corpus' rows: a new
+        generation, published by the pointer flip."""
+        self.gens.commit(
+            rows.withColumn("admitted", F.lit(False)),
+            partition_by=self.partition_by,
+        )
 
     def append(self, rows: DataFrame) -> DataFrame:
-        """Append an admitted batch's rows; returns ``rows``."""
-        self._write(rows, True, "append")
+        """Append an admitted batch's rows to the current generation;
+        returns ``rows``."""
+        w = rows.withColumn("admitted", F.lit(True)).write.mode("append")
+        if self.partition_by:
+            w = w.partitionBy(*self.partition_by)
+        w.parquet(self.gens.current())
         return rows
 
     def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.path)
+        return self.gens.read(spark)
 
     def counts(
         self, spark: SparkSession, probe: DataFrame | None = None
@@ -233,7 +240,7 @@ class AdmittedZone:
         this is a one-listing no-op at or below the threshold, safe to
         call after every admission. Rows and columns are preserved, so
         counts, drift and search are value-identical after the
-        rewrite. Run in a maintenance window (see
+        rewrite, and the swap is a pointer flip (see
         ``maintenance.compact``)."""
         from hyppo_worker_spark.operators.maintenance import (
             compact,
@@ -242,7 +249,8 @@ class AdmittedZone:
 
         if (
             max_files is not None
-            and dataset_file_stats(self.path)["n_files"] <= max_files
+            and dataset_file_stats(self.gens.current())["n_files"]
+            <= max_files
         ):
             return None
         return compact(

@@ -5,10 +5,10 @@ At 100 TB the small-files problem is operational, not theoretical:
 a streaming sink or a many-task ingestion job (each engine task writes
 its own records file) leaves thousands of KB-sized parquet files, and
 every downstream scan pays per-file open cost. ``compact`` rewrites a
-dataset to approximately ``target_file_bytes`` per file; the analog of
-the reference's HandleJobCompleted finalization hook ("commit
-manifest, swap partitions" — SURVEY.md §2.A op 7) doing a VACUUM-style
-rewrite.
+generation table to approximately ``target_file_bytes`` per file and
+publishes it with a pointer flip; the analog of the reference's
+HandleJobCompleted finalization hook ("commit manifest, swap
+partitions" — SURVEY.md §2.A op 7) doing a VACUUM-style rewrite.
 
 ``zorder_by``/``zorder_key`` here are the N-dimensional maintenance-
 rewrite form of z-ordering (bounds collected once driver-side, sampled
@@ -21,10 +21,11 @@ from __future__ import annotations
 
 import glob
 import os
-import shutil
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from hyppo_worker_spark.generations import Generations
 
 
 def dataset_file_stats(path: str) -> dict:
@@ -46,51 +47,31 @@ def compact(
     spark: SparkSession,
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    fmt: str = "parquet",
     partition_by: list[str] | None = None,
 ) -> dict:
-    """Rewrite a dataset into ~target-sized files.
+    """Rewrite the generation table at ``path`` (``generations.py``)
+    into ~target-sized files.
 
-    Partition count = ceil(current bytes / target); the rewrite goes
-    through a temp sibling directory then swaps it in via two
-    sequential renames. The swap is NOT atomic: a reader racing the
-    swap can observe a brief window with no dataset at the path, and
-    the rename scheme assumes a local POSIX filesystem (object stores
-    need a manifest/versioned-directory indirection instead — the
-    pattern table formats like Iceberg implement). Run compaction in a
-    maintenance window or behind a catalog pointer. A crash inside an
-    earlier swap is repaired at entry: a dataset left only at
-    ``<path>.__old__`` (crash between the renames) is renamed back,
-    and a stale ``.__old__`` or ``.__compacting__`` sibling (crash
-    during the write or the final delete) is removed.
-    ``partition_by`` preserves a hive-partitioned layout (e.g. an
-    index's cell-partitioned inverted lists): the rewrite repartitions
-    BY those columns so each partition directory lands from one task
-    and partition pruning keeps working on the compacted zone. Returns
-    before/after file stats.
+    Partition count = ceil(current bytes / target). The rewrite is the
+    table's next generation and the swap is the pointer flip: a reader
+    sees the old files or the new ones, never a missing dataset, and a
+    crash at any step leaves the old generation current (the next
+    commit deletes the half-written one). ``partition_by`` preserves a
+    hive-partitioned layout (e.g. an index's cell-partitioned inverted
+    lists): the rewrite repartitions BY those columns so each partition
+    directory lands from one task and partition pruning keeps working
+    on the compacted zone. Returns before/after file stats.
     """
-    tmp = path.rstrip("/") + ".__compacting__"
-    old = path.rstrip("/") + ".__old__"
-    if not os.path.exists(path) and os.path.isdir(old):
-        os.rename(old, path)
-    shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
-    before = dataset_file_stats(path)
+    gens = Generations(path)
+    before = dataset_file_stats(gens.current())
     n_parts = max(1, -(-before["total_bytes"] // target_file_bytes))
-    df = spark.read.format(fmt).load(path)
+    df = gens.read(spark)
     if partition_by:
-        shaped = df.repartition(*[F.col(c) for c in partition_by])
-        writer = shaped.write.mode("overwrite").format(fmt).partitionBy(
-            *partition_by
-        )
+        df = df.repartition(*[F.col(c) for c in partition_by])
     else:
-        shaped = df.repartition(n_parts)
-        writer = shaped.write.mode("overwrite").format(fmt)
-    writer.save(tmp)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    after = dataset_file_stats(path)
+        df = df.repartition(n_parts)
+    gens.commit(df, partition_by=partition_by)
+    after = dataset_file_stats(gens.current())
     return {"before": before, "after": after, "target_partitions": n_parts}
 
 

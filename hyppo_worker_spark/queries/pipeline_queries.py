@@ -527,7 +527,7 @@ def p05_streaming_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = SketchRollupSink(spark, os.path.join(work, "store"))
     q = maintain_sketches(stream, sink, os.path.join(work, "ckpt"))
     drain_stream(q, 300)
-    n_batches = len(os.listdir(sink.marker_dir))
+    multi_batch = (sink.gens.last_batch() or 0) >= 1
 
     base = events.select(
         F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day"), "user_id"
@@ -558,7 +558,7 @@ def p05_streaming_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                     <= F.col("exact_users")
                 )
             ).alias("estimate_within_5pct"),
-            F.lit(n_batches >= 2).alias("multi_batch"),
+            F.lit(multi_batch).alias("multi_batch"),
         )
         .orderBy("day")
     )

@@ -61,6 +61,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from hyppo_worker_spark.generations import publish_json
+
 FORMAT_NAME = "hyppo_integration"
 
 
@@ -258,12 +260,7 @@ def fold_task_log_generations(task_log: str, generations: list[str]) -> int:
             folded += sum(1 for line in fh if line.strip())
 
     new_base = {"lines": prev_lines + folded, "archived": archived_all}
-    tmp = base_path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(new_base, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, base_path)  # atomic pointer flip, THEN unlink
+    publish_json(base_path, new_base)  # atomic pointer flip, THEN unlink
     for name in new_names:
         os.unlink(os.path.join(task_log, name))
     return new_base["lines"]
@@ -426,8 +423,9 @@ def _manifest_path(path: str) -> str:
 def _publish_manifest(path: str, manifest: dict) -> None:
     """Atomic pointer flip with VERSION history: every successful
     commit writes an immutable ``_MANIFEST-v{n}.json`` snapshot
-    (n = previous version + 1) and then os.replace's the
-    ``_MANIFEST.json`` latest pointer. Each snapshot lists the FULL
+    (n = previous version + 1) and then flips the ``_MANIFEST.json``
+    latest pointer, each through ``publish_json`` (fsync, then
+    ``os.replace``). Each snapshot lists the FULL
     file set visible at that version, so a time-travel read is just
     "open snapshot n, read its files" — the manifest-level form of
     Delta/Iceberg snapshot isolation (public technique). Append-mode
@@ -440,15 +438,8 @@ def _publish_manifest(path: str, manifest: dict) -> None:
         with open(_manifest_path(path), encoding="utf-8") as fh:
             prev = json.load(fh).get("version", 0)
     manifest = dict(manifest, version=prev + 1)
-    snap = os.path.join(path, f"_MANIFEST-v{prev + 1}.json")
-    tmp = snap + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(manifest, fh, indent=1, sort_keys=True)
-    os.replace(tmp, snap)
-    tmp = _manifest_path(path) + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(manifest, fh, indent=1, sort_keys=True)
-    os.replace(tmp, _manifest_path(path))
+    publish_json(os.path.join(path, f"_MANIFEST-v{prev + 1}.json"), manifest)
+    publish_json(_manifest_path(path), manifest)
 
 
 def list_versions(path: str) -> list[dict]:
@@ -555,19 +546,16 @@ class IntegrationStreamWriter(DataSourceStreamWriter):
         files = [
             {"file": m.file, "rows": m.rows, "md5": m.md5} for m in committed
         ]
-        tmp = os.path.join(self._path, f"_MANIFEST-{batchId}.json.tmp")
         final = os.path.join(self._path, f"_MANIFEST-{batchId}.json")
         replaced = None
         if os.path.exists(final):  # epoch replay: supersede, don't append
             with open(final, encoding="utf-8") as fh:
                 replaced = {f["file"] for f in json.load(fh)["files"]}
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(
-                {"epoch": batchId, "files": files,
-                 "total_rows": sum(f["rows"] for f in files)},
-                fh, indent=1, sort_keys=True,
-            )
-        os.replace(tmp, final)
+        publish_json(
+            final,
+            {"epoch": batchId, "files": files,
+             "total_rows": sum(f["rows"] for f in files)},
+        )
         if replaced:
             for name in replaced - {f["file"] for f in files}:
                 p = os.path.join(self._path, name)
@@ -934,10 +922,7 @@ def erase_rows(path: str, should_erase, *, reconcile: bool = False) -> dict:
             continue
         if "total_rows" in m:
             m["total_rows"] = sum(e["rows"] for e in m["files"])
-        tmp = os.path.join(path, mname + ".tmp")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(m, fh, indent=1, sort_keys=True)
-        os.replace(tmp, os.path.join(path, mname))
+        publish_json(os.path.join(path, mname), m)
         manifests_updated += 1
 
     return {

@@ -21,9 +21,10 @@ Per micro-batch of new (a_id, b_id) pairs (foreachBatch):
    that subgraph only — cost scales with the AFFECTED components +
    batch, not the corpus;
 4. **merge + commit**: untouched state rows pass through; the
-   recomputed rows replace the affected ones; staged-swap commit via
-   `streaming/commit.py` (marker after data — CC merge is not
-   idempotent under replay of a half-applied batch).
+   recomputed rows replace the affected ones; the result is the next
+   generation (`generations.py`), whose pointer flip also acks the
+   batch — CC merge is not idempotent, so a replay must see either
+   the whole batch applied and acked or none of it.
 
 The test pins the invariant that matters: after every batch, the
 maintained state EQUALS a from-scratch CC over all edges seen so far,
@@ -36,17 +37,13 @@ step 1/2 joins are comp-keyed and touch only affected partitions.
 
 from __future__ import annotations
 
-import glob
 import os
 
 from hyppo_worker_spark.session import local_frame
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hyppo_worker_spark.streaming.commit import (
-    BucketedMarkedTableCommitter,
-    MarkedTableCommitter,
-)
+from hyppo_worker_spark.generations import Generations
 
 # Auto-layout thresholds (VERDICT r8 item 6), from the measured
 # crossover (tools/crossover_bucketed_commit.py, NOTES_r8): per-batch
@@ -70,15 +67,13 @@ AUTO_N_BUCKETS = 64
 AUTO_BUCKET_MIN_BYTES = 512 * 1024 * 1024
 
 
-def _dir_bytes(root: str) -> int:
-    total = 0
-    for dirpath, _dirs, files in os.walk(root):
-        for name in files:
-            try:
-                total += os.path.getsize(os.path.join(dirpath, name))
-            except OSError:
-                pass
-    return total
+def _dir_bytes(roots: list[str]) -> int:
+    return sum(
+        os.path.getsize(os.path.join(dirpath, name))
+        for root in roots
+        for dirpath, _dirs, files in os.walk(root)
+        for name in files
+    )
 
 
 class IncrementalCCSink:
@@ -97,24 +92,23 @@ class IncrementalCCSink:
     batch of a 100 TB ingest), exactly the broadcast-join shape:
     size-adaptive physical strategy under one logical contract.
 
-    ``n_buckets`` selects the committer layout:
+    ``n_buckets`` selects the table layout:
 
-    - ``None`` — whole-table staged-swap commits (every batch
-      rewrites the full state);
-    - an int — hash-bucketed commits (only buckets holding a
+    - ``None`` — one whole generation (every batch rewrites the full
+      state);
+    - an int — one generation per hash bucket (only buckets holding a
       recomputed node are rewritten), layout fixed at construction;
-    - ``"auto"`` — size-adaptive (the committer analog of the
-      local-solve bound): start whole-table, and MIGRATE to
+    - ``"auto"`` — size-adaptive (the layout analog of the
+      local-solve bound): start whole, and MIGRATE to
       ``AUTO_N_BUCKETS`` hash buckets at the first batch that finds
       the committed state at or above ``auto_bucket_min_bytes``
       (default ``AUTO_BUCKET_MIN_BYTES`` — see the measured-crossover
-      note above). The migration commit writes the full merged state
-      once, partitioned by bucket, through the whole-dir staged swap
-      (same cost as the whole-table commit it replaces); every later
-      batch prunes to touched buckets. The decision is re-derived
-      from the table itself (``bucket=`` dirs present → bucketed), so
-      restarts and crash rollbacks land on the correct layout without
-      a side manifest.
+      note above). The migration is an ordinary commit that writes
+      the full merged state once, partitioned by bucket, and
+      references every bucket (same cost as the whole-table commit it
+      replaces); every later batch prunes to touched buckets. The
+      layout is read from the table's pointer, so restarts and
+      crashed batches land on the committed layout.
     """
 
     def __init__(
@@ -127,100 +121,26 @@ class IncrementalCCSink:
     ) -> None:
         self.spark = spark
         self.table_dir = os.path.join(base_dir, "cc_state")
-        self.marker_dir = os.path.join(base_dir, "cc_markers")
+        self.gens = Generations(self.table_dir)
         self.local_solve_max_edges = local_solve_max_edges
         self.auto = n_buckets == "auto"
         self.auto_bucket_min_bytes = auto_bucket_min_bytes
         self.n_buckets = None if self.auto else n_buckets
-        self._whole_committer = MarkedTableCommitter(
-            self.table_dir, self.marker_dir
-        )
-        self._bucketed_committer = BucketedMarkedTableCommitter(
-            self.table_dir, self.marker_dir
-        )
-        if self.auto:
-            self._committer = None  # resolved per batch
-        elif n_buckets is None:
-            self._committer = self._whole_committer
-        else:
-            self._committer = self._bucketed_committer
-
-    # ---- auto layout ----------------------------------------------------
-
-    def _table_is_bucketed(self) -> bool:
-        if not os.path.isdir(self.table_dir):
-            return False
-        return any(
-            name.startswith("bucket=") for name in os.listdir(self.table_dir)
-        )
-
-    def _recover_dispatch(self) -> None:
-        """Run the recovery protocol matching the newest UNMARKED
-        generation root, dispatching on the shape tag the COMMIT
-        recorded (``commit.record_shape`` — written before the root
-        exists), never on the root's file-naming conventions: a
-        whole-dir generation with ``marksuccessfuljobs=false`` and an
-        empty table carries neither ``_SUCCESS`` nor ``part-*``, and
-        the old heuristic would hand it to the bucketed recover, which
-        rmtree's it WITHOUT restoring — losing the pre-batch state.
-        The listing heuristic survives only as a fallback for legacy
-        roots committed before tags existed. Marked and stale roots
-        are GC'd identically by either recover."""
-        from hyppo_worker_spark.streaming.commit import read_shape
-
-        olds = sorted(
-            glob.glob(self.table_dir + ".old-*"),
-            key=lambda p: int(p.rsplit("-", 1)[1]),
-        )
-        committer = self._whole_committer
-        if olds:
-            newest = olds[-1]
-            newest_id = int(newest.rsplit("-", 1)[1])
-            if not self._whole_committer.done(newest_id) and os.path.isdir(
-                newest
-            ):
-                shape = read_shape(self.marker_dir, newest_id)
-                if shape == "bucketed":
-                    committer = self._bucketed_committer
-                elif shape is None:
-                    # legacy root (pre-tag): fall back to the listing
-                    names = os.listdir(newest)
-                    whole_shape = "_SUCCESS" in names or any(
-                        n.startswith("part-") for n in names
-                    )
-                    if not whole_shape:
-                        committer = self._bucketed_committer
-        committer.recover()
 
     def _resolve_auto(self) -> bool:
-        """Pick this batch's layout (post-recovery table state); returns
+        """Pick this batch's layout from the committed table; returns
         True when THIS batch must migrate whole → bucketed."""
-        if self._table_is_bucketed():
-            self.n_buckets = AUTO_N_BUCKETS
-            self._committer = self._bucketed_committer
-            return False
-        self.n_buckets = None
-        self._committer = self._whole_committer
-        if (
-            os.path.isdir(self.table_dir)
-            and _dir_bytes(self.table_dir) >= self.auto_bucket_min_bytes
-        ):
-            self.n_buckets = AUTO_N_BUCKETS
-            return True
-        return False
-
-    # ---- state access ----------------------------------------------------
+        bucketed = self.gens.is_split()
+        migrate = (
+            not bucketed
+            and self.gens.exists()
+            and _dir_bytes(self.gens.paths()) >= self.auto_bucket_min_bytes
+        )
+        self.n_buckets = AUTO_N_BUCKETS if bucketed or migrate else None
+        return migrate
 
     def state(self) -> DataFrame:
-        if self.auto and self._committer is None:
-            # read before any batch ran: derive layout from the table
-            self.n_buckets = (
-                AUTO_N_BUCKETS if self._table_is_bucketed() else None
-            )
-        df = self.spark.read.parquet(self.table_dir)
-        if self.n_buckets is not None and self._table_is_bucketed():
-            df = df.select("node", "comp", "bucket")
-        return df
+        return self.gens.read(self.spark)
 
     def _bucket_of(self, col: str):
         return F.pmod(F.xxhash64(F.col(col)), F.lit(self.n_buckets)).cast(
@@ -230,14 +150,9 @@ class IncrementalCCSink:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from hyppo_worker_spark.operators.dedup import connected_components
 
-        if self._whole_committer.done(batch_id):
+        if self.gens.done(batch_id):
             return
-        migrate = False
-        if self.auto:
-            self._recover_dispatch()
-            migrate = self._resolve_auto()
-        else:
-            self._committer.recover()
+        migrate = self.auto and self._resolve_auto()
         bucketed_state = self.n_buckets is not None and not migrate
         new_edges = (
             batch_df.select(
@@ -248,10 +163,10 @@ class IncrementalCCSink:
             .localCheckpoint(eager=True)
         )
         if new_edges.isEmpty():
-            self._committer.mark_only(batch_id)
+            self.gens.ack(batch_id)
             return
 
-        if os.path.isdir(self.table_dir):
+        if self.gens.exists():
             state = self.state()
             endpoints = (
                 new_edges.select(F.col("a_id").alias("node"))
@@ -324,15 +239,13 @@ class IncrementalCCSink:
             )
             if migrate:
                 # one-time layout migration: the full merged state
-                # swaps in already bucket-partitioned (whole-dir
-                # protocol — same write volume as the whole-table
-                # commit it replaces); later batches prune
+                # lands bucket-partitioned and replaces the whole
+                # generation (same write volume as a whole-table
+                # commit); later batches prune
                 merged = merged.withColumn("bucket", self._bucket_of("node"))
-                self._whole_committer.commit(
-                    merged, batch_id, partition_by="bucket"
-                )
+                self.gens.commit(merged, batch_id, ["bucket"], split=True)
             else:
-                self._whole_committer.commit(merged, batch_id)
+                self.gens.commit(merged, batch_id)
             return
 
         # bucketed: rewrite ONLY the buckets holding a recomputed node
@@ -340,7 +253,7 @@ class IncrementalCCSink:
             "bucket", self._bucket_of("node")
         ).localCheckpoint(eager=True)
         if touched is None:
-            self._bucketed_committer.commit(recomputed, batch_id)
+            self.gens.commit(recomputed, batch_id, ["bucket"], split=True)
             return
         touched_buckets = [
             r[0] for r in recomputed.select("bucket").distinct().collect()
@@ -352,7 +265,7 @@ class IncrementalCCSink:
             .select("node", "comp", "bucket")
         )
         merged = untouched_in_touched.unionByName(recomputed)
-        self._bucketed_committer.commit(merged, batch_id)
+        self.gens.commit(merged, batch_id, ["bucket"], split=True)
 
 
 def maintain_cc(edges: DataFrame, sink: IncrementalCCSink, checkpoint_dir: str):

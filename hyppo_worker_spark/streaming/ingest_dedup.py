@@ -19,8 +19,8 @@ Per micro-batch (foreachBatch; each step is a DataFrame program):
    the index.
 
 Batch replays (at-least-once delivery after a crash) are absorbed by
-the marker guard from ``IdempotentBatchSink`` — admission is
-ack-early, never re-run, so a replayed batch cannot reject ITSELF
+a started-marker guard, ack-early like ``IdempotentBatchSink`` —
+admission is never re-run, so a replayed batch cannot reject ITSELF
 against the index entries it already wrote.
 
 Scale: each batch's work is proportional to the batch (broadcast

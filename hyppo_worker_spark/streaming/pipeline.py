@@ -8,18 +8,18 @@ memory sink + ``processAllAvailable`` for deterministic drains).
 
 Scale notes: watermarks bound the state store; the windowed
 aggregates shuffle on (window, key) exactly like their batch
-equivalents (q19); ``foreach_batch_idempotent`` implements the
-at-most-once marker guard that the engine's unsafe-persist ack
+equivalents (q19); ``IdempotentBatchSink`` implements the
+at-most-once ack-early guard that the engine's unsafe-persist ack
 semantics require (``TaskFSM.scala:75-84`` analog: a batch that was
 started is never re-run even after restart).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from hyppo_worker_spark.generations import Generations
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, value double"
@@ -101,24 +101,21 @@ def running_user_totals(events: DataFrame) -> DataFrame:
 
 
 class IdempotentBatchSink:
-    """foreachBatch sink with an at-most-once marker guard: each
-    (queryName, batchId) writes a marker file BEFORE the write runs;
-    a replayed batch whose marker exists is skipped, mirroring the
-    engine's unsafe-persist contract (ack-early, never re-run)."""
+    """foreachBatch sink with an at-most-once guard: each batch id is
+    acked in the ``ack_dir`` pointer (``generations.py``) BEFORE the
+    write runs; a replayed batch already acked is skipped, mirroring
+    the engine's unsafe-persist contract (ack-early, never re-run)."""
 
-    def __init__(self, marker_dir: str, write_fn):
-        self.marker_dir = marker_dir
+    def __init__(self, ack_dir: str, write_fn):
+        self.acks = Generations(ack_dir)
         self.write_fn = write_fn
         self.skipped: list[int] = []
-        os.makedirs(marker_dir, exist_ok=True)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(self.marker_dir, f"batch-{batch_id}.started")
-        if os.path.exists(marker):
+        if self.acks.done(batch_id):
             self.skipped.append(batch_id)
             return
-        with open(marker, "w") as f:
-            f.write("started")
+        self.acks.ack(batch_id)
         self.write_fn(batch_df, batch_id)
 
 

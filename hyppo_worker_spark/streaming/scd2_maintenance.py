@@ -1,8 +1,8 @@
 """Streaming SCD2 dimension maintenance: a CDC update stream applied
 to a type-2 history continuously — the streaming twin of the batch
 q51/q52 pair, built on `operators/merge.py:scd2_apply` through the
-same foreachBatch + marker discipline as the sketch maintenance
-sinks.
+same foreachBatch + generation-commit discipline as the sketch
+maintenance sinks.
 
 Per micro-batch:
 
@@ -20,19 +20,12 @@ Per micro-batch:
    rescanned for matching (the operator joins only the open slice),
    so per-batch cost is O(open dimension + batch), independent of
    history depth;
-4. rewrite via STAGED SWAP, then mark. The batch's marker is written
-   only AFTER the new table generation is durably in place (write to
-   ``<table>.staging-<id>``, rename current → ``.old-<id>``, rename
-   staging in, mark, drop old) — so a crash anywhere in the batch
-   replays it against the PRE-batch table and cannot drop data
-   (ADVICE r4: the previous ack-early marker had an at-most-once
-   window — a crash between marker and rewrite lost the batch
-   forever). Replays of a MARKED batch are still absorbed by the
-   marker guard (scd2_apply is NOT idempotent: a replayed changed
-   row would close-and-reopen a version per replay), and
-   the committer's ``recover()`` heals the one non-atomic window (current renamed
-   out, staging not yet renamed in) by restoring the newest
-   generation on the next call.
+4. commit the new table as the next generation (`generations.py`):
+   the pointer flip that publishes it also acks the batch, so a crash
+   anywhere in the batch replays it against the PRE-batch table and
+   cannot drop data, and a replayed ACKED batch is skipped —
+   scd2_apply is NOT idempotent (a replayed changed row would
+   close-and-reopen a version per replay).
 
 At 100 TB the rewrite targets the affected key-bucket partitions of
 the dimension, exactly as `operators/merge.py`'s module doc lays out.
@@ -44,6 +37,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from hyppo_worker_spark.generations import Generations
 
 OPEN_TS = "9999-12-31 00:00:00"
 
@@ -63,11 +58,8 @@ class Scd2DimensionSink:
         self.key = key
         self.compare_cols = list(compare_cols)
         self.ts_col = ts_col
-        from hyppo_worker_spark.streaming.commit import MarkedTableCommitter
-
         self.table_dir = os.path.join(base_dir, "scd2_dim")
-        self.marker_dir = os.path.join(base_dir, "scd2_markers")
-        self._committer = MarkedTableCommitter(self.table_dir, self.marker_dir)
+        self.gens = Generations(self.table_dir)
 
     def _compact(self, batch_df: DataFrame) -> DataFrame:
         from hyppo_worker_spark.operators.merge import merge_upsert
@@ -78,19 +70,18 @@ class Scd2DimensionSink:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from hyppo_worker_spark.operators.merge import scd2_apply
 
-        if self._committer.done(batch_id):
+        if self.gens.done(batch_id):
             return
-        self._committer.recover()
         if batch_df.isEmpty():
-            self._committer.mark_only(batch_id)
+            self.gens.ack(batch_id)
             return
         new_ts = (
             batch_df.agg(F.max(self.ts_col).alias("t")).first().t
         )
         new_ts = str(new_ts)
         updates = self._compact(batch_df).drop(self.ts_col)
-        if os.path.isdir(self.table_dir):
-            current = self.spark.read.parquet(self.table_dir)
+        if self.gens.exists():
+            current = self.gens.read(self.spark)
             dim = scd2_apply(
                 current,
                 updates,
@@ -103,16 +94,12 @@ class Scd2DimensionSink:
             dim = updates.withColumn("valid_from", F.lit(new_ts)).withColumn(
                 "valid_to", F.lit(OPEN_TS)
             )
-        # Staged swap + marker-after-data via the shared committer
-        # (streaming/commit.py): a crash at any point replays against
-        # the pre-batch table instead of dropping the batch (ADVICE
-        # r4); the mid-swap window is healed by recover() above.
-        self._committer.commit(dim, batch_id)
+        self.gens.commit(dim, batch_id)
 
     # -- query side ---------------------------------------------------------
 
     def history(self) -> DataFrame:
-        return self.spark.read.parquet(self.table_dir)
+        return self.gens.read(self.spark)
 
     def open_dim(self) -> DataFrame:
         return self.history().filter(F.col("valid_to") == OPEN_TS)

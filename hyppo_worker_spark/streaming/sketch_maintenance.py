@@ -14,14 +14,12 @@ micro-batches. Per batch (foreachBatch):
 3. rewrite the table (it is sketch-count sized, not event-count
    sized; the rewrite is O(days), object-store friendly).
 
-Batch replays are absorbed by the marker guard — written AFTER the
-staged-swap rewrite (`streaming/commit.py:MarkedTableCommitter`), so
-a crash inside an unmarked batch replays it against the pre-batch
-table instead of dropping it (ADVICE r4's at-most-once window,
-closed). NOTE the idempotency contract (and the test pins): a
-replayed MARKED batch must NOT be re-unioned — HLL union is
-idempotent for identical inputs, but the count column alongside it
-is not.
+Each rewrite is a generation commit (`generations.py`): the pointer
+flip that publishes the new table also acks the batch, so a crash
+anywhere before it replays the batch against the pre-batch table
+instead of dropping it, and a replayed ACKED batch is skipped. It
+must be: HLL union is idempotent for identical inputs, but the count
+column alongside it is not.
 
 At 100 TB the same shape holds: the raw events append to their own
 sink; this side table stays kilobytes per day, and dashboards union
@@ -35,17 +33,16 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hyppo_worker_spark.generations import Generations
+
 
 class SketchRollupSink:
     """foreachBatch callable maintaining (day, sketch, n_events)."""
 
     def __init__(self, spark: SparkSession, base_dir: str) -> None:
-        from hyppo_worker_spark.streaming.commit import MarkedTableCommitter
-
         self.spark = spark
         self.table_dir = os.path.join(base_dir, "day_sketches")
-        self.marker_dir = os.path.join(base_dir, "markers")
-        self._committer = MarkedTableCommitter(self.table_dir, self.marker_dir)
+        self.gens = Generations(self.table_dir)
 
     def _batch_sketches(self, batch_df: DataFrame) -> DataFrame:
         return (
@@ -61,12 +58,11 @@ class SketchRollupSink:
         )
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self._committer.done(batch_id):
+        if self.gens.done(batch_id):
             return
-        self._committer.recover()
         new = self._batch_sketches(batch_df)
-        if os.path.isdir(self.table_dir):
-            old = self.spark.read.parquet(self.table_dir)
+        if self.gens.exists():
+            old = self.gens.read(self.spark)
             merged = (
                 old.select(
                     "day",
@@ -98,17 +94,14 @@ class SketchRollupSink:
             )
         else:
             merged = new
-        # commit() pins rows (eager localCheckpoint) before the staged
-        # swap replaces the directory they were read from, and marks
-        # the batch only after the swap.
-        self._committer.commit(merged, batch_id)
+        self.gens.commit(merged, batch_id)
 
     # -- query side ---------------------------------------------------------
 
     def estimates(self) -> DataFrame:
         """Per-day distinct-user estimates + the union-of-sketches
         TOTAL row — no event scan anywhere."""
-        t = self.spark.read.parquet(self.table_dir)
+        t = self.gens.read(self.spark)
         per_day = t.select(
             "day",
             F.hll_sketch_estimate("sketch").alias("est_users"),
@@ -142,7 +135,7 @@ class CmsRollupSink:
     stronger contract than HLL's tolerance-checked estimates).
 
     Replay guard: counter addition is NOT idempotent, so the same
-    marker-after-staged-swap contract as SketchRollupSink applies.
+    ack-by-generation-commit contract as SketchRollupSink applies.
     """
 
     def __init__(
@@ -156,11 +149,8 @@ class CmsRollupSink:
         self.spark = spark
         self.depth = depth
         self.width = width
-        from hyppo_worker_spark.streaming.commit import MarkedTableCommitter
-
         self.table_dir = os.path.join(base_dir, "cms_counters")
-        self.marker_dir = os.path.join(base_dir, "cms_markers")
-        self._committer = MarkedTableCommitter(self.table_dir, self.marker_dir)
+        self.gens = Generations(self.table_dir)
 
     def _batch_counters(self, batch_df: DataFrame) -> DataFrame:
         from hyppo_worker_spark.functions import text as TX
@@ -175,22 +165,21 @@ class CmsRollupSink:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from hyppo_worker_spark.operators.sketches import merge_counters
 
-        if self._committer.done(batch_id):
+        if self.gens.done(batch_id):
             return
-        self._committer.recover()
         new = self._batch_counters(batch_df)
-        if os.path.isdir(self.table_dir):
-            old = self.spark.read.parquet(self.table_dir)
+        if self.gens.exists():
+            old = self.gens.read(self.spark)
             merged = merge_counters(old, new)
         else:
             merged = new
-        self._committer.commit(merged, batch_id)
+        self.gens.commit(merged, batch_id)
 
     def estimate(self, probes: DataFrame, key_col: str) -> DataFrame:
         """Point-query the maintained sketch (broadcast join + min)."""
         from hyppo_worker_spark.operators.sketches import cms_estimate
 
-        counters = self.spark.read.parquet(self.table_dir)
+        counters = self.gens.read(self.spark)
         return cms_estimate(
             counters, probes, key_col, depth=self.depth, width=self.width
         )
@@ -217,7 +206,7 @@ class KmvRollupSink:
 
     KMV union is IDEMPOTENT for replayed identical inputs (the k
     smallest of a set don't change when you union it in twice), but
-    the marker-after-staged-swap guard is kept anyway so every
+    the generation commit's ack guard is kept anyway so every
     maintenance sink shares one replay contract.
     """
 
@@ -226,11 +215,8 @@ class KmvRollupSink:
     ) -> None:
         self.spark = spark
         self.k = k
-        from hyppo_worker_spark.streaming.commit import MarkedTableCommitter
-
         self.table_dir = os.path.join(base_dir, "kmv_sketches")
-        self.marker_dir = os.path.join(base_dir, "kmv_markers")
-        self._committer = MarkedTableCommitter(self.table_dir, self.marker_dir)
+        self.gens = Generations(self.table_dir)
 
     def _batch_sketches(self, batch_df: DataFrame) -> DataFrame:
         from pyspark.sql import Window as W
@@ -250,12 +236,11 @@ class KmvRollupSink:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window as W
 
-        if self._committer.done(batch_id):
+        if self.gens.done(batch_id):
             return
-        self._committer.recover()
         new = self._batch_sketches(batch_df)
-        if os.path.isdir(self.table_dir):
-            old = self.spark.read.parquet(self.table_dir)
+        if self.gens.exists():
+            old = self.gens.read(self.spark)
             both = old.unionByName(new).distinct()
         else:
             both = new
@@ -265,13 +250,13 @@ class KmvRollupSink:
             .filter(F.col("rn") <= self.k)
             .select("source", "h")
         )
-        self._committer.commit(merged, batch_id)
+        self.gens.commit(merged, batch_id)
 
     def union_estimate(self, sources: list[str]) -> int:
         """Estimated distinct keys across ``sources`` from the merged
         sketches ((k-1) << 52 div t; exact when the merged sketch is
         smaller than k)."""
-        t = self.spark.read.parquet(self.table_dir)
+        t = self.gens.read(self.spark)
         merged = (
             t.filter(F.col("source").isin(sources))
             .select("h")

@@ -155,12 +155,12 @@ def test_bucketed_touches_only_needed_buckets(spark, tmp_path):
     sink = IncrementalCCSink(spark, str(tmp_path / "cc"), n_buckets=8)
     sink(spark.createDataFrame(
         [(i, i + 1) for i in range(0, 40, 2)], "a_id long, b_id long"), 0)
-    table = sink.table_dir
-
     def snapshot():
+        # the files of the generations the table references now
         out = {}
-        for f in g.glob(os.path.join(table, "bucket=*", "*.parquet")):
-            out[f] = os.path.getmtime(f)
+        for gen in sink.gens.paths():
+            for f in g.glob(os.path.join(gen, "*.parquet")):
+                out[f] = os.path.getmtime(f)
         return out
 
     before = snapshot()
@@ -183,71 +183,20 @@ def test_bucketed_touches_only_needed_buckets(spark, tmp_path):
     assert got == want
 
 
-def test_bucketed_replay_and_rollback(spark, tmp_path):
-    """Marked replays are no-ops; an UNMARKED partially-swapped
-    generation (incl. a bucket the batch CREATED) rolls back to the
-    pre-batch table so the replay applies exactly once."""
-    import os
-    import shutil
-
-    sink = IncrementalCCSink(spark, str(tmp_path / "cc"), n_buckets=4)
-    b0 = spark.createDataFrame([(1, 2), (5, 6)], "a_id long, b_id long")
-    sink(b0, 0)
-    s0 = {
-        (r.node, r.comp)
-        for r in sink.state().select("node", "comp").collect()
-    }
-    sink(b0, 0)  # marked replay: no-op
-    assert {
-        (r.node, r.comp)
-        for r in sink.state().select("node", "comp").collect()
-    } == s0
-
-    # simulate a crash: batch 1 swapped some buckets + created one,
-    # but its marker never landed
-    table = sink.table_dir
-    old_root = table + ".old-1"
-    os.makedirs(old_root)
-    # move bucket dirs around as a half-finished swap would:
-    buckets = sorted(
-        n for n in os.listdir(table) if n.startswith("bucket=")
-    )
-    victim = buckets[0]
-    shutil.move(os.path.join(table, victim), os.path.join(old_root, victim))
-    # fake post-batch content for the victim bucket + a created bucket
-    os.makedirs(os.path.join(table, victim))
-    with open(os.path.join(table, victim, "junk.parquet"), "wb") as fh:
-        fh.write(b"not really parquet")
-    fake_new = "bucket=99"
-    os.makedirs(os.path.join(table, fake_new))
-    with open(os.path.join(old_root, f"created-{fake_new}"), "w") as fh:
-        fh.write("created")
-
-    sink._committer.recover()
-    assert not os.path.exists(os.path.join(table, fake_new))
-    got = {
-        (r.node, r.comp)
-        for r in sink.state().select("node", "comp").collect()
-    }
-    assert got == s0
-
-
 def test_auto_layout_both_sides_of_crossover(spark, tmp_path):
     """n_buckets="auto" (VERDICT r8 item 6): below the byte threshold
     the sink stays whole-table; the first batch that finds the state
-    at/over it migrates to bucket=<i>/ dirs via one whole-dir swap;
-    later batches prune. Content equals full recompute throughout."""
-    import os
-
+    at/over it migrates to bucket=<i>/ dirs via one commit; later
+    batches prune. Content equals full recompute throughout."""
     from hyppo_worker_spark.streaming.incremental_cc import AUTO_N_BUCKETS
 
     # side 1: default threshold (512 MB) — tiny state stays whole
     whole = IncrementalCCSink(spark, str(tmp_path / "a"), n_buckets="auto")
     whole(spark.createDataFrame([(1, 2)], "a_id long, b_id long"), 0)
     whole(spark.createDataFrame([(2, 3)], "a_id long, b_id long"), 1)
-    assert not any(
-        n.startswith("bucket=") for n in os.listdir(whole.table_dir)
-    ), "tiny state must keep the whole-table layout"
+    assert not whole.gens.is_split(), (
+        "tiny state must keep the whole-table layout"
+    )
     assert _state(whole) == _full(spark, [(1, 2), (2, 3)])
 
     # side 2: 1-byte threshold — batch 1 finds the committed state
@@ -269,10 +218,7 @@ def test_auto_layout_both_sides_of_crossover(spark, tmp_path):
             for r in sink.state().select("node", "comp").collect()
         }
         assert got == _full(spark, seen), f"batch {i}"
-        bucketed = any(
-            n.startswith("bucket=") for n in os.listdir(sink.table_dir)
-        )
-        assert bucketed == (i >= 1), f"batch {i}: wrong layout"
+        assert sink.gens.is_split() == (i >= 1), f"batch {i}: wrong layout"
     assert sink.n_buckets == AUTO_N_BUCKETS
 
     # restart (fresh sink object) lands on the bucketed layout and a
@@ -286,85 +232,3 @@ def test_auto_layout_both_sides_of_crossover(spark, tmp_path):
     after = {(r.node, r.comp) for r in
              sink2.state().select("node", "comp").collect()}
     assert before == after
-
-
-def test_auto_layout_rollback_of_unmarked_migration(spark, tmp_path):
-    """A migration generation whose marker never landed must roll the
-    table back to the FLAT pre-batch layout (whole-dir protocol), and
-    the replayed batch then re-migrates — exactly once overall."""
-    import os
-    import shutil
-
-    sink = IncrementalCCSink(
-        spark, str(tmp_path / "cc"), n_buckets="auto", auto_bucket_min_bytes=1
-    )
-    sink(spark.createDataFrame([(1, 2), (5, 6)], "a_id long, b_id long"), 0)
-
-    # snapshot the flat pre-migration table, run the migration batch,
-    # then forge the crash state: reinstate the pre-batch generation
-    # as .old-1 (the commit GC'd it) and delete the batch marker —
-    # exactly what a crash between swap and marker leaves behind
-    state_before = _state(sink)
-    table = sink.table_dir
-    flat_snapshot = str(tmp_path / "flat_snapshot")
-    shutil.copytree(table, flat_snapshot)
-    sink(spark.createDataFrame([(2, 3)], "a_id long, b_id long"), 1)
-    assert any(n.startswith("bucket=") for n in os.listdir(table))
-    shutil.copytree(flat_snapshot, table + ".old-1")
-    os.remove(os.path.join(sink.marker_dir, "batch-1.done"))
-
-    # restart: recovery must dispatch WHOLE-dir rollback (old root has
-    # _SUCCESS/part files), restoring the flat table
-    sink2 = IncrementalCCSink(
-        spark, str(tmp_path / "cc"), n_buckets="auto", auto_bucket_min_bytes=1
-    )
-    sink2._recover_dispatch()
-    assert not any(n.startswith("bucket=") for n in os.listdir(table))
-    assert _state(sink2) == state_before
-
-    # the replayed batch re-applies and re-migrates
-    sink2(spark.createDataFrame([(2, 3)], "a_id long, b_id long"), 1)
-    assert any(n.startswith("bucket=") for n in os.listdir(table))
-    assert _state(sink2) == _full(spark, [(1, 2), (5, 6), (2, 3)])
-
-
-def test_recover_dispatch_uses_recorded_shape_not_listing(spark, tmp_path):
-    """ADVICE r9: a whole-dir generation root can carry NEITHER
-    _SUCCESS nor part-* files (marksuccessfuljobs=false plus an empty
-    pre-batch table). The old listing heuristic misdispatched that to
-    the bucketed recover, which rmtree's the root WITHOUT restoring
-    it — losing the pre-batch generation. Dispatch now reads the shape
-    tag the commit recorded, so the empty whole-dir generation is
-    rolled BACK over the table."""
-    import os
-    import shutil
-
-    from hyppo_worker_spark.streaming.commit import read_shape, record_shape
-
-    sink = IncrementalCCSink(spark, str(tmp_path / "cc"), n_buckets="auto")
-    table = sink.table_dir
-
-    # pre-batch state: an empty table directory (what an empty-DF
-    # generation committed under marksuccessfuljobs=false looks like)
-    os.makedirs(table)
-
-    # forge batch 0's crash between swap and marker: the whole-dir
-    # protocol tagged the generation, renamed the (empty) table aside,
-    # swapped staging in — marker never landed
-    record_shape(sink.marker_dir, 0, "whole")
-    os.rename(table, table + ".old-0")
-    os.makedirs(table)
-    spark.createDataFrame(
-        [(1, 1), (2, 1)], "node long, comp long"
-    ).coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "post"))
-    shutil.rmtree(table)
-    shutil.copytree(str(tmp_path / "post"), table)
-
-    sink._recover_dispatch()
-
-    # the pre-batch (empty) generation is RESTORED, not destroyed:
-    # the replayed batch will merge against the true pre-batch state
-    assert os.path.isdir(table)
-    assert os.listdir(table) == []
-    assert not os.path.isdir(table + ".old-0")
-    assert read_shape(sink.marker_dir, 0) is None  # tag GC'd with root

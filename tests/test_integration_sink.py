@@ -209,3 +209,41 @@ def test_read_committed_of_never_created_zone_is_empty(registered, tmp_path):
     FileNotFoundError (flake caught in the r8 full-suite run)."""
     missing = str(tmp_path / "never-created")
     assert read_committed(registered, missing, SCHEMA).count() == 0
+
+
+def test_manifest_publishes_fsync_before_replace(tmp_path, monkeypatch):
+    """Every manifest JSON (version snapshot, latest pointer, streaming
+    epoch) is fsynced before the ``os.replace`` that publishes it: an
+    un-fsynced rename can surface an EMPTY manifest after a power
+    loss, and readers trust the manifest alone."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from hyppo_worker_spark.sources.integration_source import (
+        IntegrationStreamWriter,
+        _publish_manifest,
+    )
+
+    synced: set[int] = set()  # inodes fsynced so far
+    published: list[tuple[str, bool]] = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        real_fsync(fd)
+        synced.add(os.fstat(fd).st_ino)
+
+    def replace(src, dst):
+        published.append((os.path.basename(dst), os.stat(src).st_ino in synced))
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    out = str(tmp_path / "zone")
+    os.makedirs(out)
+    _publish_manifest(out, {"files": [], "total_rows": 0})
+    schema = StructType([StructField("task_id", LongType())])
+    IntegrationStreamWriter(schema, {"path": out}).commit([], 0)
+
+    assert [name for name, _ in published] == [
+        "_MANIFEST-v1.json", "_MANIFEST.json", "_MANIFEST-0.json",
+    ]
+    assert all(was_synced for _, was_synced in published), published

@@ -56,7 +56,7 @@ def test_train_persists_and_reload_assigns_like_retrain(spark, tmp_path):
 def test_admit_appends_without_rewriting(spark, tmp_path):
     idx = IvfIndex(str(tmp_path / "ivf"), n_centroids=4, n_iter=2)
     idx.train(_corpus(spark))
-    asg_dir = str(tmp_path / "ivf" / "assignments")
+    asg_dir = idx.zone.gens.current()  # appends land in this generation
     before = {
         p: os.path.getmtime(p)
         for p in glob.glob(os.path.join(asg_dir, "*.parquet"))
@@ -281,16 +281,18 @@ def test_compact_assignments_preserves_counts_and_drift(spark, tmp_path):
     idx.train(_corpus(spark))
     for tag in range(2, 10):
         idx.admit(spark, _corpus(spark, n=5, tag=tag))
-    asg_dir = str(tmp_path / "ivf" / "assignments")
-    before_files = dataset_file_stats(asg_dir)["n_files"]
+    def n_files():  # the zone's current generation
+        return dataset_file_stats(idx.zone.gens.current())["n_files"]
+
+    before_files = n_files()
     before = {
         tuple(r) for r in idx.drift_report(spark).collect()
     }
     # below-threshold: no-op
     assert idx.zone.compact(spark, max_files=10_000) is None
-    assert dataset_file_stats(asg_dir)["n_files"] == before_files
+    assert n_files() == before_files
     stats = idx.zone.compact(spark, max_files=4)
-    after_files = dataset_file_stats(asg_dir)["n_files"]
+    after_files = n_files()
     assert stats is not None and after_files < before_files
     after = {tuple(r) for r in idx.drift_report(spark).collect()}
     assert after == before

@@ -31,7 +31,7 @@ def test_train_persists_cell_partitioned_codes(spark, tmp_path):
     )
     idx.train(_corpus(spark))
     assert idx.exists()
-    cell_dirs = glob.glob(str(tmp_path / "pq" / "codes" / "cell=*"))
+    cell_dirs = glob.glob(os.path.join(idx.zone.gens.current(), "cell=*"))
     assert len(cell_dirs) >= 2  # two separable clusters -> >= 2 lists
     # every vector carries exactly m codes
     rid = IvfPqIndex(
@@ -128,8 +128,8 @@ def test_compact_codes_keeps_partitioning_and_search(spark, tmp_path):
     idx.train(corpus)
     q = corpus.filter(F.col("vec_id") < 4)
     before = {tuple(r) for r in idx.search(spark, q, topk=3).collect()}
-    codes_dir = str(tmp_path / "pq" / "codes")
     idx.zone.compact(spark)
+    codes_dir = idx.zone.gens.current()
     cell_dirs = glob.glob(os.path.join(codes_dir, "cell=*"))
     assert cell_dirs, "hive partitioning lost by compaction"
     assert dataset_file_stats(codes_dir)["n_files"] >= len(cell_dirs)

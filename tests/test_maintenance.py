@@ -2,60 +2,30 @@
 
 from pyspark.sql import functions as F
 
+from hyppo_worker_spark.generations import Generations
 from hyppo_worker_spark.operators.maintenance import compact, dataset_file_stats
 
 
 def test_compact_small_files(spark, tmp_path):
-    p = str(tmp_path / "frag.parquet")
+    p = str(tmp_path / "frag")
+    gens = Generations(p)
     # 64 tiny files
-    spark.range(10000).select(
+    gens.commit(spark.range(10000).select(
         "id", (F.col("id") % 7).alias("k"), F.rand(1).alias("v")
-    ).repartition(64).write.parquet(p)
-    before = dataset_file_stats(p)
+    ).repartition(64))
+    before = dataset_file_stats(gens.current())
     assert before["n_files"] >= 64
 
-    total_before = spark.read.parquet(p).count()
-    sum_before = spark.read.parquet(p).agg(F.sum("id")).first()[0]
+    total_before = gens.read(spark).count()
+    sum_before = gens.read(spark).agg(F.sum("id")).first()[0]
 
     report = compact(spark, p, target_file_bytes=before["total_bytes"])  # → 1 file
-    after = dataset_file_stats(p)
+    after = dataset_file_stats(gens.current())
     assert after["n_files"] < before["n_files"]
     assert report["target_partitions"] == 1
 
-    assert spark.read.parquet(p).count() == total_before
-    assert spark.read.parquet(p).agg(F.sum("id")).first()[0] == sum_before
-
-
-def test_compact_repairs_crash_leftovers(spark, tmp_path):
-    """A crash inside an earlier compaction's directory swap leaves
-    either a stale ``<path>.__old__`` (crash during the final delete —
-    every later rename used to fail with ENOTEMPTY) or no dataset at
-    ``path`` at all (crash between the two renames). The next
-    ``compact`` repairs both and keeps every row."""
-    import os
-    import shutil
-
-    p = str(tmp_path / "zone")
-    spark.range(500).select(
-        "id", (F.col("id") % 7).alias("k")
-    ).repartition(8).write.parquet(p)
-    want = sorted(tuple(r) for r in spark.read.parquet(p).collect())
-
-    # leftover 1: a non-empty .__old__ next to the live dataset
-    shutil.copytree(p, p + ".__old__")
-    compact(spark, p, target_file_bytes=1 << 30)
-    assert sorted(tuple(r) for r in spark.read.parquet(p).collect()) == want
-    assert not os.path.exists(p + ".__old__")
-
-    # leftover 2: the dataset moved to .__old__, a half-written
-    # .__compacting__ beside it, nothing at path
-    os.rename(p, p + ".__old__")
-    os.makedirs(p + ".__compacting__")
-    open(os.path.join(p + ".__compacting__", "part-0.parquet"), "w").close()
-    compact(spark, p, target_file_bytes=1 << 30)
-    assert sorted(tuple(r) for r in spark.read.parquet(p).collect()) == want
-    assert not os.path.exists(p + ".__old__")
-    assert not os.path.exists(p + ".__compacting__")
+    assert gens.read(spark).count() == total_before
+    assert gens.read(spark).agg(F.sum("id")).first()[0] == sum_before
 
 
 def test_zorder_by_tightens_all_dimensions(spark):

@@ -46,7 +46,7 @@ def test_train_persists_and_encode_matches_retrain_pass(spark, tmp_path):
 def test_admit_appends_without_rewriting(spark, tmp_path):
     idx = PqIndex(str(tmp_path / "pq"), m=4, k=4, dim=16, n_iter=2)
     idx.train(_corpus(spark))
-    codes_dir = str(tmp_path / "pq" / "codes")
+    codes_dir = idx.zone.gens.current()  # appends land in this generation
     before = {
         p: os.path.getmtime(p)
         for p in glob.glob(os.path.join(codes_dir, "*.parquet"))
@@ -97,8 +97,6 @@ def test_subspace_drift_gate_quiet_then_fires(spark, tmp_path):
 def test_zero_base_subspace_gate_fires_not_null(spark, tmp_path):
     """A subspace whose base population is zero (codes zone wiped to
     admitted-only rows) must FIRE its gate, not go NULL (ADVICE r11)."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     idx = PqIndex(
@@ -110,10 +108,9 @@ def test_zero_base_subspace_gate_fires_not_null(spark, tmp_path):
     codes = idx.codes(spark).withColumn(
         "admitted", F.lit(True)
     ).collect()
-    shutil.rmtree(str(tmp_path / "pq" / "codes"))
-    spark.createDataFrame(
+    idx.zone.gens.commit(spark.createDataFrame(
         codes, "vec_id long, m int, code int, admitted boolean"
-    ).write.parquet(str(tmp_path / "pq" / "codes"))
+    ))
     rep = idx.drift_report(spark).collect()
     assert all(r.drift_bp is not None for r in rep)
     assert all(r.retrain_needed is True for r in rep)
@@ -131,11 +128,13 @@ def test_compact_codes_preserves_subspace_drift(spark, tmp_path):
     idx.train(_corpus(spark))
     for tag in range(2, 8):
         idx.admit(spark, _corpus(spark, n=5, tag=tag))
-    codes_dir = str(tmp_path / "pq" / "codes")
-    before_files = dataset_file_stats(codes_dir)["n_files"]
+    def n_files():  # the zone's current generation
+        return dataset_file_stats(idx.zone.gens.current())["n_files"]
+
+    before_files = n_files()
     before = {tuple(r) for r in idx.drift_report(spark).collect()}
     stats = idx.zone.compact(spark, max_files=4)
     assert stats is not None
-    assert dataset_file_stats(codes_dir)["n_files"] < before_files
+    assert n_files() < before_files
     after = {tuple(r) for r in idx.drift_report(spark).collect()}
     assert after == before

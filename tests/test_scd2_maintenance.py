@@ -104,34 +104,6 @@ def test_streaming_scd2_matches_sequential_batches(spark, tmp_path, staged_cdc):
     assert open_rows == {1: "A", 2: "A", 3: "C", 4: "A"}
 
 
-def test_scd2_crash_before_mark_replays_without_loss(spark, tmp_path):
-    """ADVICE r4: the marker must ack AFTER the rewrite. A crash at
-    any point inside an unmarked batch — staging written, or even
-    mid-swap with the current table renamed out — must replay that
-    batch against the pre-batch table, not lose it."""
-    import os
-
-    sink = Scd2DimensionSink(spark, str(tmp_path / "store"), "k", ["seg"])
-    b0 = spark.createDataFrame(_rows((1, "A", 1, "2024-01-01 00:00:00")), SCHEMA)
-    b1 = spark.createDataFrame(_rows((1, "B", 1, "2024-02-01 00:00:00")), SCHEMA)
-    sink(b0, 0)
-
-    # crash flavor 1: staging dir written, swap + marker never ran
-    os.makedirs(sink.table_dir + ".staging-1")
-    sink(b1, 1)  # replay: recovery drops stale staging, batch applies
-    assert sink.history().count() == 2
-
-    # crash flavor 2: mid-swap — current renamed out, staging lost,
-    # marker (correctly) absent. Next call must restore the newest
-    # generation and apply the batch exactly once.
-    sink2 = Scd2DimensionSink(spark, str(tmp_path / "store2"), "k", ["seg"])
-    sink2(b0, 0)
-    os.rename(sink2.table_dir, sink2.table_dir + ".old-1")
-    sink2(b1, 1)
-    hist = {(r.k, r.seg, r.valid_to != OPEN_TS) for r in sink2.history().collect()}
-    assert hist == {(1, "A", True), (1, "B", False)}
-
-
 def test_scd2_replay_is_noop(spark, tmp_path):
     sink = Scd2DimensionSink(spark, str(tmp_path / "store"), "k", ["seg"])
     b0 = spark.createDataFrame(

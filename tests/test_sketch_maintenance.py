@@ -5,8 +5,7 @@ not double-count."""
 
 from __future__ import annotations
 
-import os
-
+import pytest
 from pyspark.sql import functions as F
 
 from hyppo_worker_spark.session import load_tables
@@ -78,7 +77,100 @@ def test_replayed_batch_does_not_double_count(spark, tmp_path):
     }["2024-01-01"]
     assert n2 == 150
     assert abs(est2 - 150) * 20 <= 150
-    assert os.path.isdir(sink.table_dir)
+    assert sink.gens.exists()
+
+
+class _Crash(Exception):
+    pass
+
+
+def _day_batch(spark, day, users):
+    return spark.createDataFrame(
+        [(f"2024-01-0{day} 00:00:00", u) for u in users],
+        "ts string, user_id long",
+    )
+
+
+def _n_events(sink):
+    return {r.day: r.n_events for r in sink.estimates().collect()}
+
+
+def test_sketch_sink_crash_before_mark_replays_without_loss(
+    spark, tmp_path, monkeypatch
+):
+    """A crash inside an UNACKED batch — after the generation write but
+    before the pointer replace, or in the pointer's fsync — must replay
+    that batch against the pre-batch table on a fresh sink, never drop
+    it; the replay of an acked batch is a no-op."""
+    import os
+
+    def crash(*a, **kw):
+        raise _Crash()
+
+    base = str(tmp_path / "s")
+    SketchRollupSink(spark, base)(_day_batch(spark, 1, [1, 2, 3]), 0)
+
+    # crash flavor 1: generation written, pointer never replaced
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash)
+        with pytest.raises(_Crash):
+            SketchRollupSink(spark, base)(_day_batch(spark, 2, [3, 4]), 1)
+    sink = SketchRollupSink(spark, base)
+    assert _n_events(sink) == {"2024-01-01": 3, "TOTAL": 3}
+    sink(_day_batch(spark, 2, [3, 4]), 1)  # the streaming replay
+    assert _n_events(sink) == {"2024-01-01": 3, "2024-01-02": 2, "TOTAL": 5}
+
+    # crash flavor 2: pointer tmp written, its fsync fails
+    with monkeypatch.context() as m:
+        m.setattr(os, "fsync", crash)
+        with pytest.raises(_Crash):
+            SketchRollupSink(spark, base)(_day_batch(spark, 3, [5]), 2)
+    sink = SketchRollupSink(spark, base)
+    sink(_day_batch(spark, 3, [5]), 2)
+    est = _n_events(sink)
+    assert est == {
+        "2024-01-01": 3,
+        "2024-01-02": 2,
+        "2024-01-03": 1,
+        "TOTAL": 6,
+    }
+
+    # replay of an ACKED batch is still a no-op (counts not re-added)
+    seq = sink.gens.pointer()["seq"]
+    sink(_day_batch(spark, 3, [5]), 2)
+    assert _n_events(sink) == est
+    assert sink.gens.pointer()["seq"] == seq
+
+
+def test_sketch_sink_crash_after_swap_before_mark_no_double_apply(
+    spark, tmp_path, monkeypatch
+):
+    """A crash right AFTER the pointer flip, before the sink returns:
+    the flip is the batch's ack, so the streaming replay of that batch
+    must be skipped — re-applying it would double-count the additive
+    n_events counters."""
+    from hyppo_worker_spark import generations
+
+    base = str(tmp_path / "s")
+    SketchRollupSink(spark, base)(_day_batch(spark, 1, [1, 2, 3]), 0)
+    real = generations.publish_json
+
+    def flip_then_crash(*a, **kw):
+        real(*a, **kw)
+        raise _Crash()
+
+    with monkeypatch.context() as m:
+        m.setattr(generations, "publish_json", flip_then_crash)
+        with pytest.raises(_Crash):
+            SketchRollupSink(spark, base)(_day_batch(spark, 2, [3, 4]), 1)
+
+    sink = SketchRollupSink(spark, base)
+    want = {"2024-01-01": 3, "2024-01-02": 2, "TOTAL": 5}
+    assert _n_events(sink) == want
+    seq = sink.gens.pointer()["seq"]
+    sink(_day_batch(spark, 2, [3, 4]), 1)  # the streaming replay
+    assert _n_events(sink) == want  # exactly-once: no double count
+    assert sink.gens.pointer()["seq"] == seq
 
 
 # -- CMS maintenance -------------------------------------------------------
@@ -118,7 +210,7 @@ def test_incremental_cms_equals_scratch_build(spark, tmp_path):
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     scratch = cms_counters(tc, "token", "cnt", depth=3, width=64)
-    got = sorted(map(tuple, spark.read.parquet(sink.table_dir).collect()))
+    got = sorted(map(tuple, sink.gens.read(spark).collect()))
     want = sorted(map(tuple, scratch.collect()))
     assert got == want
 
@@ -183,7 +275,7 @@ def test_incremental_kmv_equals_scratch_and_estimates(spark, tmp_path):
         .filter(F.col("rn") <= 64)
         .select("source", "h")
     )
-    got = sorted(map(tuple, spark.read.parquet(sink.table_dir).collect()))
+    got = sorted(map(tuple, sink.gens.read(spark).collect()))
     want = sorted(map(tuple, scratch.collect()))
     assert got == want
 
@@ -208,91 +300,7 @@ def test_kmv_replay_is_noop(spark, tmp_path):
         [(i, "s1") for i in range(30)], "doc_id long, source string"
     )
     sink(b, 0)
-    before = sorted(map(tuple, spark.read.parquet(sink.table_dir).collect()))
+    before = sorted(map(tuple, sink.gens.read(spark).collect()))
     sink(b, 0)  # replay
-    after = sorted(map(tuple, spark.read.parquet(sink.table_dir).collect()))
+    after = sorted(map(tuple, sink.gens.read(spark).collect()))
     assert before == after
-
-
-def test_sketch_sink_crash_before_mark_replays_without_loss(spark, tmp_path):
-    """The shared committer contract (streaming/commit.py) on the HLL
-    sink: a crash inside an UNMARKED batch — stale staging dir, or
-    mid-swap with the table renamed out — must replay that batch
-    against the pre-batch table, never drop it (ADVICE r4 on scd2;
-    the sketch sinks shared the same ack-early window)."""
-    import os
-
-    from hyppo_worker_spark.streaming.sketch_maintenance import (
-        SketchRollupSink,
-    )
-
-    def batch(day, users):
-        return spark.createDataFrame(
-            [(f"2024-01-0{day} 00:00:00", u) for u in users],
-            "ts string, user_id long",
-        )
-
-    sink = SketchRollupSink(spark, str(tmp_path / "s"))
-    sink(batch(1, [1, 2, 3]), 0)
-
-    # crash flavor 1: staging written, swap + marker never happened
-    os.makedirs(sink.table_dir + ".staging-1")
-    sink(batch(2, [3, 4]), 1)
-    est = {r.day: r.n_events for r in sink.estimates().collect()}
-    assert est == {"2024-01-01": 3, "2024-01-02": 2, "TOTAL": 5}
-
-    # crash flavor 2: mid-swap — table renamed out, marker absent
-    os.rename(sink.table_dir, sink.table_dir + ".old-2")
-    sink(batch(3, [5]), 2)
-    est = {r.day: r.n_events for r in sink.estimates().collect()}
-    assert est == {
-        "2024-01-01": 3,
-        "2024-01-02": 2,
-        "2024-01-03": 1,
-        "TOTAL": 6,
-    }
-
-    # replay of a MARKED batch is still a no-op (counts not re-added)
-    sink(batch(3, [5]), 2)
-    est2 = {r.day: r.n_events for r in sink.estimates().collect()}
-    assert est2 == est
-
-
-def test_sketch_sink_crash_after_swap_before_mark_no_double_apply(
-    spark, tmp_path
-):
-    """ADVICE r5: crash AFTER the staged swap completed but BEFORE the
-    marker write — the post-batch table sits on disk unmarked. Since
-    the replay re-applies the batch, recover() must roll BACK to the
-    pre-batch generation; keeping the post-batch table would double-
-    count the additive n_events counters."""
-    import os
-    import shutil
-
-    from hyppo_worker_spark.streaming.sketch_maintenance import (
-        SketchRollupSink,
-    )
-
-    def batch(day, users):
-        return spark.createDataFrame(
-            [(f"2024-01-0{day} 00:00:00", u) for u in users],
-            "ts string, user_id long",
-        )
-
-    sink = SketchRollupSink(spark, str(tmp_path / "s"))
-    sink(batch(1, [1, 2, 3]), 0)
-    pre = str(tmp_path / "pre_batch_copy")
-    shutil.copytree(sink.table_dir, pre)
-
-    sink(batch(2, [3, 4]), 1)
-    want = {r.day: r.n_events for r in sink.estimates().collect()}
-    assert want == {"2024-01-01": 3, "2024-01-02": 2, "TOTAL": 5}
-
-    # reconstruct the crash window: post-batch table present, pre-batch
-    # generation in .old-1, marker for batch 1 missing
-    os.remove(os.path.join(sink.marker_dir, "batch-1.done"))
-    shutil.copytree(pre, sink.table_dir + ".old-1")
-
-    sink(batch(2, [3, 4]), 1)  # the streaming replay
-    got = {r.day: r.n_events for r in sink.estimates().collect()}
-    assert got == want  # exactly-once: no double-counted day-2 events

@@ -1,5 +1,6 @@
-"""A/B the whole-table vs bucketed committer in the regime bucketing
-is FOR: state much larger than a batch, batches touching few buckets.
+"""A/B the whole-table vs bucketed generation layout in the regime
+bucketing is FOR: state much larger than a batch, batches touching few
+buckets.
 
 NOTES_r8 recorded the honest negative at sf0.1 (p08's 36k-row state,
 every batch's components spread across all buckets → bucketed is pure
@@ -8,11 +9,11 @@ shape shrunk to local scale: a multi-million-row state table over 64
 hash buckets, then K maintenance batches that each update a few
 thousand keys confined to 2 buckets. Per batch:
 
-- whole-table (`MarkedTableCommitter`): read full state, anti-join
-  the delta, union, rewrite EVERYTHING;
-- bucketed (`BucketedMarkedTableCommitter`): partition-prune the read
-  to touched buckets, anti-join, union, rewrite ONLY those bucket
-  dirs.
+- whole-table (`Generations.commit`): read full state, anti-join the
+  delta, union, rewrite EVERYTHING as the next generation;
+- bucketed (`Generations.commit(..., split=True)`): partition-prune
+  the read to touched buckets, anti-join, union, rewrite ONLY those
+  buckets' generations.
 
 Both ends are verified identical (order-insensitive row hash) and the
 per-batch walls + bytes written are printed as one JSON line.
@@ -33,11 +34,8 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from hyppo_worker_spark.generations import Generations  # noqa: E402
 from hyppo_worker_spark.session import get_spark  # noqa: E402
-from hyppo_worker_spark.streaming.commit import (  # noqa: E402
-    BucketedMarkedTableCommitter,
-    MarkedTableCommitter,
-)
 
 N_BUCKETS = 64
 N_BATCHES = 5
@@ -45,12 +43,14 @@ BATCH_KEYS = 2_000
 TOUCHED_BUCKETS = 2
 
 
-def _dir_bytes(root: str) -> int:
-    total = 0
-    for dirpath, _dirs, files in os.walk(root):
-        for f in files:
-            total += os.path.getsize(os.path.join(dirpath, f))
-    return total
+def _table_bytes(gens: Generations) -> int:
+    """Bytes of the generations the table references now."""
+    return sum(
+        os.path.getsize(os.path.join(dirpath, f))
+        for gen in gens.paths()
+        for dirpath, _dirs, files in os.walk(gen)
+        for f in files
+    )
 
 
 def main() -> None:
@@ -72,15 +72,12 @@ def main() -> None:
         )
     )
 
-    whole_dir = os.path.join(work, "whole")
-    buck_dir = os.path.join(work, "bucketed")
-    whole = MarkedTableCommitter(whole_dir, os.path.join(work, "wm"))
-    buck = BucketedMarkedTableCommitter(buck_dir, os.path.join(work, "bm"))
+    whole = Generations(os.path.join(work, "whole"))
+    buck = Generations(os.path.join(work, "bucketed"))
 
-    state.drop("bucket").write.parquet(whole_dir + ".seed")
     # seed via a normal commit so both start from committed generations
-    whole.commit(spark.read.parquet(whole_dir + ".seed"), 0)
-    buck.commit(state, 0)
+    whole.commit(state.drop("bucket"), 0)
+    buck.commit(state, 0, ["bucket"], split=True)
 
     def batch_delta(i: int):
         """~BATCH_KEYS updated keys confined to TOUCHED_BUCKETS buckets."""
@@ -109,7 +106,7 @@ def main() -> None:
         delta.count()
 
         t0 = time.time()
-        cur = spark.read.parquet(whole_dir)
+        cur = whole.read(spark)
         merged = cur.join(delta.select("node"), "node", "left_anti").unionByName(
             delta.drop("bucket")
         )
@@ -117,19 +114,19 @@ def main() -> None:
         walls["whole"].append(round(time.time() - t0, 2))
 
         t0 = time.time()
-        curb = spark.read.parquet(buck_dir).filter(
+        curb = buck.read(spark).filter(
             F.col("bucket").isin(touched)
         )
         mergedb = curb.join(
             delta.select("node"), "node", "left_anti"
         ).unionByName(delta)
-        buck.commit(mergedb, i)
+        buck.commit(mergedb, i, ["bucket"], split=True)
         walls["bucketed"].append(round(time.time() - t0, 2))
         delta.unpersist()
 
     # --- verify both tables identical (order-insensitive)
-    a = spark.read.parquet(whole_dir)
-    b = spark.read.parquet(buck_dir).drop("bucket")
+    a = whole.read(spark)
+    b = buck.read(spark).drop("bucket")
     ha = (
         a.select(F.sha2(F.concat_ws("|", "node", "val", "payload"), 256).alias("h"))
         .agg(F.sum(F.conv(F.substring("h", 1, 15), 16, 10).cast("decimal(38,0)")))
@@ -151,8 +148,8 @@ def main() -> None:
                 "touched_buckets": TOUCHED_BUCKETS,
                 "whole_wall_s": walls["whole"],
                 "bucketed_wall_s": walls["bucketed"],
-                "whole_table_bytes": _dir_bytes(whole_dir),
-                "bucketed_table_bytes": _dir_bytes(buck_dir),
+                "whole_table_bytes": _table_bytes(whole),
+                "bucketed_table_bytes": _table_bytes(buck),
                 "tables_identical": bool(same),
             }
         )

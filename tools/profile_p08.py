@@ -1,10 +1,11 @@
 """Itemize p08's per-batch fixed cost (VERDICT r7 item 2).
 
 Runs the p08 flow at the given sf_dir with wall-clock timers wrapped
-around each phase of the foreachBatch sink (recover, batch pin/empty
-probe, state read+scope joins, CC recompute, staged-swap commit) plus
-the setup (source-file writes) and the framework overhead (drain
-minus sink time). Prints one table; no behavior change to the sink.
+around each phase of the foreachBatch sink (batch pin/empty probe,
+state read+scope joins, CC recompute, generation commit — its leading
+GC timed separately) plus the setup (source-file writes) and the
+framework overhead (drain minus sink time). Prints one table; no
+behavior change to the sink.
 
 Usage: python tools/profile_p08.py [sf_dir]
 """
@@ -36,20 +37,16 @@ def timed(label):
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
+    from hyppo_worker_spark.generations import Generations
     from hyppo_worker_spark.session import get_spark
-    from hyppo_worker_spark.streaming import commit as commit_mod
     from hyppo_worker_spark.streaming import incremental_cc as cc_mod
     from hyppo_worker_spark.operators import dedup as dedup_mod
 
     spark = get_spark()
 
-    # instrument the committer + CC
-    commit_mod.MarkedTableCommitter.recover = timed("sink.recover")(
-        commit_mod.MarkedTableCommitter.recover
-    )
-    commit_mod.MarkedTableCommitter.commit = timed("sink.commit")(
-        commit_mod.MarkedTableCommitter.commit
-    )
+    # instrument the generation commit (and its GC) + CC
+    Generations._gc = timed("sink.commit_gc")(Generations._gc)
+    Generations.commit = timed("sink.commit")(Generations.commit)
     # __call__ does `from ...operators.dedup import connected_components`
     # at call time, so the patch must land on the dedup module itself
     dedup_mod.connected_components = timed("sink.cc_recompute")(
@@ -86,18 +83,18 @@ def main() -> None:
     print(f"\np08 @ {sf_dir}: end-to-end {total:.2f}s, result rows {n}")
     print(f"{'phase':<22}{'calls':>6}{'total_s':>9}  per-call")
     for label in (
-        "sink.recover",
         "sink.state_read",
         "sink.cc_recompute",
         "sink.commit",
+        "sink.commit_gc",  # part of sink.commit
         "sink.total",
     ):
         ts = TIMES[label]
         per = " ".join(f"{t:.2f}" for t in ts)
         print(f"{label:<22}{len(ts):>6}{sum(ts):>9.2f}  [{per}]")
     other_sink = sink_total - sum(
-        sum(TIMES[k]) for k in ("sink.recover", "sink.state_read",
-                                "sink.cc_recompute", "sink.commit")
+        sum(TIMES[k]) for k in ("sink.state_read", "sink.cc_recompute",
+                                "sink.commit")
     )
     print(f"{'sink other (pin/scope)':<22}{'':>6}{other_sink:>9.2f}")
     print(f"{'non-sink (setup+framework)':<26}{total - sink_total:>11.2f}")
