@@ -9,8 +9,8 @@ configurable codec, default ``deflate``
 ``worker/.../exec/AvroFileCodec.scala:11-15``,
 ``worker/src/main/resources/.../reference.conf:82``). This module
 implements the container spec (public: Apache Avro 1.11 spec,
-"Object Container Files") for the flat record shapes the engine's
-records zone carries:
+"Object Container Files") for the record shapes the engine's records
+zone carries:
 
 - header: magic ``Obj\\x01``, metadata map (``avro.schema`` JSON from
   `avro_schema.struct_to_avro`, ``avro.codec``), 16-byte sync marker
@@ -57,15 +57,31 @@ defaults, primitive promotions, enum-symbol fallback — so one zone
 holding files from several schema versions reads as one DataFrame
 (``avro_schema.schema_resolver``).
 
+Two code paths write and read the same bytes; the schema picks one:
+
+- **columnar** (flat schemas: only top-level byte/short/int/long,
+  date, timestamp, timestamp_ntz, boolean, float, double, string or
+  binary fields, and no enum/fixed site): ``write_container_arrow``
+  encodes straight from Arrow buffers with numpy — zigzag varints,
+  length prefixes taken from the Arrow offsets, union branch bytes in
+  the declared order, rows laid out row-major through a cumsum of the
+  per-field byte lengths — and the reader runs one generated decoder
+  per wire shape (compiled once, cached) that appends into per-column
+  lists, which become Arrow arrays; no dict is built per row;
+- **row** (nested, decimal, enum/fixed sites): per-field closures over
+  one Python dict per record (``_field_encoder``/``_field_decoder``).
+  It is the only code for those types, and the byte-for-byte
+  reference the columnar writer is tested against.
+
 Distributed use (no driver bottleneck):
 
 - **write**: ``write_avro(df, path)`` — each Spark partition encodes
-  its rows to one ``part-*.avro`` file via ``mapInPandas`` (Arrow
-  batches in, one container per task), exactly how the per-task
-  records zone lays files out;
+  its Arrow batches (``mapInArrow``) to one ``part-*.avro`` file, the
+  per-task layout of the records zone;
 - **read**: ``read_avro(spark, path)`` — ``binaryFile`` scan +
-  ``mapInPandas`` decode, schema recovered from each file's own
-  header and validated against the expected StructType.
+  ``mapInArrow`` decode; each file's header schema is validated
+  against the expected StructType (by default the first file's,
+  read from its header alone).
 
 Interop evidence (no Avro library in the environment — probed every
 round): beyond spec-level unit tests (hand-computed zigzag/varint
@@ -93,6 +109,7 @@ import struct
 import uuid
 import zlib
 from collections.abc import Iterator
+from dataclasses import dataclass
 from decimal import Decimal as _Decimal
 
 from pyspark.sql import DataFrame, SparkSession
@@ -104,6 +121,15 @@ _EPOCH_DATE = _dtmod.date(1970, 1, 1)
 _EPOCH_NAIVE = _dtmod.datetime(1970, 1, 1)
 _EPOCH_UTC = _dtmod.datetime(1970, 1, 1, tzinfo=_dtmod.timezone.utc)
 _MICRO = _dtmod.timedelta(microseconds=1)
+
+
+# Wire value (int days / int micros) -> the Python value both decoders
+# hand out for the integer-backed logical types.
+_FROM_WIRE = {
+    T.DateType: lambda n: _EPOCH_DATE + _dtmod.timedelta(days=n),
+    T.TimestampType: lambda n: _EPOCH_UTC + _dtmod.timedelta(microseconds=n),
+    T.TimestampNTZType: lambda n: _EPOCH_NAIVE + _dtmod.timedelta(microseconds=n),
+}
 
 
 # -- primitive binary encoding (Avro spec §binary encoding) ---------------
@@ -134,18 +160,6 @@ def zigzag_decode(buf: memoryview, pos: int) -> tuple[int, int]:
             break
         shift += 7
     return (u >> 1) ^ -(u & 1), pos
-
-
-def _enc_value(dt: T.DataType, v, out: bytearray) -> None:
-    """Generic one-off encode (slow path); delegates to the specialized
-    field codec so logical-type support never drifts between paths."""
-    if v is None:
-        raise ValueError("null for non-nullable field")
-    _field_encoder(dt)(v, out)
-
-
-def _dec_value(dt: T.DataType, buf: memoryview, pos: int):
-    return _field_decoder(dt)(buf, pos)
 
 
 # Per-schema specialized row codecs: the generic per-value isinstance
@@ -271,7 +285,7 @@ def _field_encoder(
         enc_item = _field_encoder(dt.elementType, nb, path + "[]", special)
         if dt.containsNull:
             inull = _nb(path + "[]")
-            null_b, val_b = (0, 2) if inull == 0 else (2, 0)
+            null_b, val_b = _branch_bytes(inull)
         else:
             null_b = None
             val_b = 0
@@ -297,7 +311,7 @@ def _field_encoder(
         enc_val = _field_encoder(dt.valueType, nb, path + "{}", special)
         if dt.valueContainsNull:
             inull = _nb(path + "{}")
-            mnull_b, mval_b = (0, 2) if inull == 0 else (2, 0)
+            mnull_b, mval_b = _branch_bytes(inull)
         else:
             mnull_b = None
             mval_b = 0
@@ -325,7 +339,7 @@ def _field_encoder(
             sub = f"{path}.{f.name}" if path else f.name
             if f.nullable:
                 inull = _nb(sub)
-                fnull_b, fval_b = (0, 2) if inull == 0 else (2, 0)
+                fnull_b, fval_b = _branch_bytes(inull)
             else:
                 fnull_b = None
                 fval_b = 0
@@ -417,21 +431,13 @@ def _field_decoder(
             n, pos = zz(buf, pos)
             return bytes(buf[pos : pos + n]), pos + n
         return dec_b
-    if isinstance(dt, T.DateType):
-        def dec_date(buf, pos, zz=zz):
+    conv = _FROM_WIRE.get(type(dt))
+    if conv is not None:
+        # date (int days) / timestamp-micros / local-timestamp-micros
+        def dec_logical(buf, pos, zz=zz, conv=conv):
             n, pos = zz(buf, pos)
-            return _EPOCH_DATE + _dtmod.timedelta(days=n), pos
-        return dec_date
-    if isinstance(dt, T.TimestampType):
-        def dec_ts(buf, pos, zz=zz):
-            n, pos = zz(buf, pos)
-            return _EPOCH_UTC + _dtmod.timedelta(microseconds=n), pos
-        return dec_ts
-    if isinstance(dt, T.TimestampNTZType):
-        def dec_tsntz(buf, pos, zz=zz):
-            n, pos = zz(buf, pos)
-            return _EPOCH_NAIVE + _dtmod.timedelta(microseconds=n), pos
-        return dec_tsntz
+            return conv(n), pos
+        return dec_logical
     if isinstance(dt, T.DecimalType):
         scale = dt.scale
 
@@ -618,6 +624,141 @@ def _enc_meta_map(meta: dict[str, bytes]) -> bytes:
     return bytes(out)
 
 
+def _read_header(buf: memoryview) -> tuple[dict[str, bytes], int]:
+    """The metadata map of a container and the offset just past it,
+    where the 16-byte sync marker starts."""
+    if bytes(buf[:4]) != MAGIC:
+        raise ValueError("not an Avro object container file")
+    pos = 4
+    meta: dict[str, bytes] = {}
+    while True:
+        n, pos = zigzag_decode(buf, pos)
+        if n == 0:
+            return meta, pos
+        if n < 0:  # spec: negative count precedes a byte size
+            n = -n
+            _, pos = zigzag_decode(buf, pos)
+        for _ in range(n):
+            kl, pos = zigzag_decode(buf, pos)
+            k = bytes(buf[pos : pos + kl]).decode()
+            pos += kl
+            vl, pos = zigzag_decode(buf, pos)
+            meta[k] = bytes(buf[pos : pos + vl])
+            pos += vl
+
+
+def _embedded_schema_json(data: bytes) -> str:
+    """The avro.schema metadata value of a container file, verbatim."""
+    meta, _ = _read_header(memoryview(data))
+    if "avro.schema" not in meta:
+        raise ValueError("container has no avro.schema metadata")
+    return meta["avro.schema"].decode()
+
+
+def _compress(body: bytes, codec: str) -> bytes:
+    if codec == "deflate":
+        # RFC-1951 raw deflate (no zlib wrapper) per the spec
+        return zlib.compress(body, 6)[2:-4]
+    if codec == "bzip2":
+        return _bz2.compress(body)
+    if codec == "xz":
+        return _lzma.compress(body, format=_lzma.FORMAT_XZ)
+    return body
+
+
+def _decompress(body: bytes, codec: str) -> bytes:
+    if codec == "deflate":
+        return zlib.decompress(body, wbits=-15)
+    if codec == "bzip2":
+        return _bz2.decompress(body)
+    if codec == "xz":
+        return _lzma.decompress(body)
+    if codec != "null":
+        # snappy / zstandard need libraries absent from this
+        # environment (probed every round) — fail loud
+        raise ValueError(f"unsupported avro codec {codec}")
+    return body
+
+
+def _branch_bytes(null_index: int) -> tuple[int, int]:
+    """(null byte, value byte) of a 2-branch union whose "null" sits at
+    ``null_index`` of the declared order."""
+    return (0, 2) if null_index == 0 else (2, 0)
+
+
+def _field_branches(f: T.StructField, nb: dict[str, int] | None) -> tuple:
+    """(null byte, value byte) of a top-level field; the null byte is
+    None when the field is not a union. ``nb`` None → [T,"null"]."""
+    if not f.nullable:
+        return None, 0
+    return _branch_bytes(1 if nb is None else nb.get(f.name, 1))
+
+
+def _writer_schema(
+    schema: T.StructType, declared_schema: str | dict | None
+) -> tuple[str, T.StructType, dict[str, int] | None, dict[str, tuple] | None]:
+    """(schema JSON to embed, StructType to encode under, null-branch
+    map, special codecs) for a write. Without a declared schema these
+    derive from the StructType (writer convention: [T,"null"],
+    enum/fixed not expressible)."""
+    from hyppo_worker_spark.sources.avro_schema import (
+        avro_to_struct,
+        null_branch_indices,
+        special_codecs,
+        struct_to_avro,
+    )
+
+    if declared_schema is None:
+        return struct_to_avro(schema), schema, None, None
+    schema_json = (
+        declared_schema
+        if isinstance(declared_schema, str)
+        else json.dumps(declared_schema)
+    )
+    derived = avro_to_struct(schema_json)
+    # Spark marks most DataFrame columns nullable regardless of
+    # content, so compare SHAPES ignoring nullability: a declared
+    # non-null field fed an actual None still fails loud at encode
+    # time, and the union branch bytes follow the DECLARED
+    # nullability either way.
+    if _strip_nullability(derived) != _strip_nullability(schema):
+        raise ValueError(
+            "declared_schema does not map to the given StructType: "
+            f"declared -> {derived.simpleString()}, "
+            f"got {schema.simpleString()}"
+        )
+    # encode under the DECLARED nullability (branch bytes exist only
+    # where the avro schema has a union)
+    return (
+        schema_json,
+        derived,
+        null_branch_indices(schema_json),
+        special_codecs(schema_json),
+    )
+
+
+def _container(
+    schema_json: str, codec: str, blocks: Iterator[tuple[int, bytes]]
+) -> bytes:
+    """Header, then one framed block per (record count, payload)."""
+    if codec not in ("null", "deflate", "bzip2", "xz"):
+        raise ValueError(f"unsupported avro codec {codec}")
+    sync = _sync_marker(schema_json)
+    out = bytearray()
+    out += MAGIC
+    out += _enc_meta_map(
+        {"avro.schema": schema_json.encode(), "avro.codec": codec.encode()}
+    )
+    out += sync
+    for count, payload in blocks:
+        body = _compress(payload, codec)
+        out += zigzag_encode(count)
+        out += zigzag_encode(len(body))
+        out += body
+        out += sync
+    return bytes(out)
+
+
 def write_container(
     schema: T.StructType,
     rows: list[dict],
@@ -625,7 +766,7 @@ def write_container(
     block_records: int = 4096,
     declared_schema: str | dict | None = None,
 ) -> bytes:
-    """One Avro Object Container File as bytes.
+    """One Avro Object Container File as bytes, through the row codec.
 
     ``declared_schema`` (Avro record schema JSON) makes this a
     SCHEMA-PRESERVING writer: the declared JSON is embedded verbatim
@@ -636,96 +777,411 @@ def write_container(
     unscaled int, nullable unions in the declared branch order.
     Without it, the schema derives from the StructType (writer
     convention: [T,"null"], enum/fixed not expressible)."""
+    schema_json, schema, nb, special = _writer_schema(schema, declared_schema)
+    encs4 = [
+        (f.name, *_field_branches(f, nb),
+         _field_encoder(f.dataType, nb, f.name, special))
+        for f in schema.fields
+    ]
+
+    def blocks():
+        for i in range(0, len(rows), block_records):
+            chunk = rows[i : i + block_records]
+            payload = bytearray()
+            for r in chunk:
+                get = r.get
+                for name, null_b, val_b, enc in encs4:
+                    v = get(name)
+                    if null_b is not None:
+                        if v is None:
+                            payload.append(null_b)
+                            continue
+                        payload.append(val_b)
+                    enc(v, payload)
+            yield len(chunk), bytes(payload)
+
+    return _container(schema_json, codec, blocks())
+
+
+# -- columnar codec (flat schemas) -----------------------------------------
+
+# Avro wire kind of each flat Spark type. Dates (int days) and the two
+# timestamps (long micros) share the long's zigzag varint.
+_FLAT_WIRE: dict[type, str] = {
+    T.ByteType: "long",
+    T.ShortType: "long",
+    T.IntegerType: "long",
+    T.LongType: "long",
+    T.DateType: "long",
+    T.TimestampType: "long",
+    T.TimestampNTZType: "long",
+    T.BooleanType: "boolean",
+    T.FloatType: "float",
+    T.DoubleType: "double",
+    T.StringType: "string",
+    T.BinaryType: "bytes",
+}
+
+
+def _flat_plan(
+    schema: T.StructType,
+    nb: dict[str, int] | None,
+    special: dict[str, tuple] | None,
+) -> tuple[tuple[str, int | None, int], ...] | None:
+    """(wire kind, null byte, value byte) per field when the schema is
+    flat — every field a top-level primitive site, no enum/fixed — and
+    None otherwise. The null byte is None for a non-union field."""
+    if special or not schema.fields:
+        return None
+    plan = []
+    for f in schema.fields:
+        kind = _FLAT_WIRE.get(type(f.dataType))
+        if kind is None:
+            return None
+        plan.append((kind, *_field_branches(f, nb)))
+    return tuple(plan)
+
+
+# A segment is one run of bytes per row: (source bytes, per-row start in
+# the source, per-row length). A field is one to three segments (branch
+# byte, length prefix, value); rows are then laid out row-major.
+
+
+def _varint_segment(n: "np.ndarray", keep: "np.ndarray"):
+    """Zigzag varints of int64 ``n`` — 7-bit groups, low first, high bit
+    set on every group but the last; rows where ``keep`` is False get
+    no bytes."""
+    import numpy as np
+
+    n = np.where(keep, n, 0)
+    u = ((n << 1) ^ (n >> 63)).view(np.uint64)
+    nbytes = np.ones(len(u), np.int64)
+    rest = u >> np.uint64(7)
+    while rest.any():
+        nbytes += rest != 0
+        rest >>= np.uint64(7)
+    width = int(nbytes.max()) if len(u) else 1
+    shifts = np.arange(width, dtype=np.uint64) * np.uint64(7)
+    groups = ((u[:, None] >> shifts) & np.uint64(0x7F)).astype(np.uint8)
+    groups |= (np.arange(width) < (nbytes - 1)[:, None]).astype(np.uint8) << 7
+    return groups.ravel(), np.arange(len(u)) * width, np.where(keep, nbytes, 0)
+
+
+def _fixed_segment(values: "np.ndarray", keep: "np.ndarray"):
+    """Fixed-width little-endian values (IEEE floats, booleans, branch
+    bytes)."""
+    import numpy as np
+
+    w = values.dtype.itemsize
+    src = values.view(np.uint8)
+    return src, np.arange(len(values)) * w, np.where(keep, w, 0)
+
+
+def _field_segments(arr: "pa.Array", kind: str, null_b, val_b) -> list:
+    import numpy as np
+    import pyarrow as pa
+
+    n = len(arr)
+    valid = (
+        np.ones(n, bool)
+        if arr.null_count == 0
+        else arr.is_valid().to_numpy(zero_copy_only=False)
+    )
+    segs = []
+    if null_b is not None:
+        branch = np.where(valid, val_b, null_b).astype(np.uint8)
+        segs.append(_fixed_segment(branch, np.ones(n, bool)))
+    elif arr.null_count:
+        raise ValueError("null for non-nullable field")
+    bufs = arr.buffers()
+    if kind == "boolean":
+        bits = arr.fill_null(False).to_numpy(zero_copy_only=False)
+        segs.append(_fixed_segment(bits.astype(np.uint8), valid))
+    elif kind in ("string", "bytes"):
+        large = arr.type in (pa.large_string(), pa.large_binary())
+        offs = np.frombuffer(bufs[1], np.int64 if large else np.int32)
+        offs = offs[arr.offset : arr.offset + n + 1].astype(np.int64)
+        data = np.frombuffer(bufs[2], np.uint8)
+        lens = np.diff(offs)
+        segs.append(_varint_segment(lens, valid))
+        segs.append((data, offs[:-1], np.where(valid, lens, 0)))
+    else:
+        width = arr.type.bit_width // 8
+        code = "f" if kind in ("float", "double") else "i"
+        vals = np.frombuffer(bufs[1], f"<{code}{width}")[arr.offset : arr.offset + n]
+        if code == "f":
+            segs.append(_fixed_segment(vals, valid))
+        else:
+            segs.append(_varint_segment(vals.astype(np.int64), valid))
+    return segs
+
+
+def _row_major(segments: list):
+    """Lay ``segments`` out row by row: returns (bytes, row end
+    offsets)."""
+    import numpy as np
+
+    lens = np.stack([s[2] for s in segments]).astype(np.int64)
+    row_end = np.cumsum(lens.sum(axis=0))
+    # byte offset of each segment inside the whole output
+    dest = (row_end - lens.sum(axis=0)) + (np.cumsum(lens, axis=0) - lens)
+    out = np.empty(int(row_end[-1]), np.uint8)
+    for (src, start, ln), base in zip(segments, dest):
+        total = int(ln.sum())
+        if not total:
+            continue
+        skip = np.cumsum(ln) - ln  # where each row's run starts in k
+        k = np.arange(total)
+        out[k + np.repeat(base - skip, ln)] = src[k + np.repeat(start - skip, ln)]
+    return out, row_end
+
+
+def write_container_arrow(
+    schema: T.StructType,
+    table: "pa.Table",
+    codec: str = "deflate",
+    block_records: int = 4096,
+    declared_schema: str | dict | None = None,
+) -> bytes:
+    """``write_container(schema, table.to_pylist(), ...)``, byte for byte.
+
+    Flat schemas encode straight from the Arrow columns (no Python
+    object per value); any other schema goes through the row codec."""
+    schema_json, wschema, nb, special = _writer_schema(schema, declared_schema)
+    plan = _flat_plan(wschema, nb, special)
+    if plan is None:
+        return write_container(
+            schema, table.to_pylist(), codec, block_records, declared_schema
+        )
+    n = table.num_rows
+    if n == 0:
+        return _container(schema_json, codec, iter(()))
+    segments = [
+        seg
+        for col, field_plan in zip(table.columns, plan)
+        for seg in _field_segments(col.combine_chunks(), *field_plan)
+    ]
+    out, row_end = _row_major(segments)
+
+    def blocks():
+        for i in range(0, n, block_records):
+            j = min(i + block_records, n)
+            a = int(row_end[i - 1]) if i else 0
+            yield j - i, out[a : int(row_end[j - 1])].tobytes()
+
+    return _container(schema_json, codec, blocks())
+
+
+# One generated decoder per wire shape: the varint loop is inlined and
+# every value is appended straight to its column's list.
+_DECODERS: dict[tuple, object] = {}
+
+# (one- and two-byte varints take no loop)
+_VARINT = """\
+b = buf[pos]
+if b < 128:
+    pos += 1
+else:
+    c = buf[pos + 1]
+    b = (b & 127) | (c & 127) << 7
+    pos += 2
+    if c > 127:
+        s = 14
+        while True:
+            c = buf[pos]; pos += 1
+            b |= (c & 127) << s
+            if c < 128:
+                break
+            s += 7
+b = (b >> 1) ^ -(b & 1)"""
+
+# a length prefix, checked against the block before slicing
+_LENGTH = _VARINT + """
+q = pos + b
+if b < 0 or q > end:
+    raise ValueError("length prefix runs past the block")"""
+
+_VALUE = {
+    "long": _VARINT + "\nA(b)",
+    "boolean": "A(buf[pos] != 0); pos += 1",
+    "float": "A(unpack_f(buf, pos)[0]); pos += 4",
+    "double": "A(unpack_d(buf, pos)[0]); pos += 8",
+    "string": _LENGTH + "\nA(buf[pos:q].decode()); pos = q",
+    "bytes": _LENGTH + "\nA(buf[pos:q]); pos = q",
+}
+
+
+def _indent(src: str, depth: int) -> list[str]:
+    return ["    " * depth + line for line in src.splitlines()]
+
+
+def _flat_decoder(plan: tuple):
+    """decode(buf, count, columns) -> bytes consumed, for one wire
+    shape; compiled once and cached."""
+    fn = _DECODERS.get(plan)
+    if fn is not None:
+        return fn
+    lines = [
+        "def decode(buf, count, columns):",
+        "    pos, end = 0, len(buf)",
+        "    " + ", ".join(f"a{i}" for i in range(len(plan)))
+        + ", = [c.append for c in columns]",
+        "    for _ in range(count):",
+    ]
+    for i, (kind, null_b, val_b) in enumerate(plan):
+        value = _VALUE[kind].replace("A(", f"a{i}(")
+        if null_b is None:
+            lines += _indent(value, 2)
+            continue
+        lines += _indent(
+            f"b = buf[pos]; pos += 1\n"
+            f"if b == {null_b}:\n"
+            f"    a{i}(None)\n"
+            f"elif b != {val_b}:\n"
+            f"    raise ValueError('union branch byte %d' % b)\n"
+            f"else:",
+            2,
+        )
+        lines += _indent(value, 3)
+    lines.append("    return pos")
+    scope = {
+        "unpack_f": struct.Struct("<f").unpack_from,
+        "unpack_d": struct.Struct("<d").unpack_from,
+    }
+    exec(compile("\n".join(lines), f"<avro decoder {plan}>", "exec"), scope)
+    fn = _DECODERS[plan] = scope["decode"]
+    return fn
+
+
+# -- reading --------------------------------------------------------------
+
+
+def _blocks(buf: memoryview, pos: int, codec: str, sync: bytes):
+    """(record count, decompressed payload) per block; raises on a
+    truncated block or a sync marker that does not match the header's."""
+    truncated = "truncated block — corrupt container"
+    while pos < len(buf):
+        try:
+            count, pos = zigzag_decode(buf, pos)
+            size, pos = zigzag_decode(buf, pos)
+        except IndexError:
+            raise ValueError(truncated) from None
+        if count < 0 or size < 0 or pos + size + 16 > len(buf):
+            raise ValueError(truncated)
+        body = bytes(buf[pos : pos + size])
+        pos += size
+        if bytes(buf[pos : pos + 16]) != sync:
+            raise ValueError("sync marker mismatch — corrupt container")
+        pos += 16
+        yield count, _decompress(body, codec)
+
+
+def _check_consumed(end: int, body: bytes) -> None:
+    if end != len(body):
+        raise ValueError(
+            f"block decoded to {end} bytes, declared {len(body)} — "
+            "corrupt container"
+        )
+
+
+@dataclass
+class _Decoded:
+    """One decoded container: ``columns`` (one list per field, wire
+    values for dates and timestamps) for a flat schema, ``rows`` (one
+    dict per record) otherwise."""
+
+    schema_json: str
+    schema: T.StructType
+    codec: str
+    columns: list[list] | None = None
+    rows: list[dict] | None = None
+
+    def to_rows(self) -> list[dict]:
+        if self.columns is None:
+            return self.rows
+        cols = []
+        for f, col in zip(self.schema.fields, self.columns):
+            conv = _FROM_WIRE.get(type(f.dataType))
+            if conv is not None:
+                col = [None if v is None else conv(v) for v in col]
+            cols.append(col)
+        names = self.schema.names
+        return [dict(zip(names, vals)) for vals in zip(*cols)]
+
+    def to_batch(self, arrow_schema: "pa.Schema") -> "pa.RecordBatch":
+        import pyarrow as pa
+
+        if self.columns is None:
+            return pa.RecordBatch.from_pylist(self.rows, schema=arrow_schema)
+        return pa.RecordBatch.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(self.columns, arrow_schema)],
+            schema=arrow_schema,
+        )
+
+
+def _decode(data) -> _Decoded:
+    """Decode one container under its own writer schema: the columnar
+    decoder when the schema is flat, the row codec otherwise."""
     from hyppo_worker_spark.sources.avro_schema import (
         avro_to_struct,
         null_branch_indices,
         special_codecs,
-        struct_to_avro,
     )
 
-    if codec not in ("null", "deflate", "bzip2", "xz"):
-        raise ValueError(f"unsupported avro codec {codec}")
-    if declared_schema is None:
-        schema_json = struct_to_avro(schema)
-        nb: dict[str, int] | None = None
-        special: dict[str, tuple] | None = None
-    else:
-        schema_json = (
-            declared_schema
-            if isinstance(declared_schema, str)
-            else json.dumps(declared_schema)
+    buf = memoryview(data)
+    meta, pos = _read_header(buf)
+    schema_json = meta["avro.schema"].decode()
+    codec = meta.get("avro.codec", b"null").decode()
+    schema = avro_to_struct(schema_json)
+    # branch bytes follow the file's DECLARED union order — a foreign
+    # ["null",T] file decodes correctly, not just our own [T,"null"]
+    null_branch = null_branch_indices(schema_json)
+    # enum (zigzag symbol index) and fixed (raw N bytes) sites encode
+    # differently from the StringType/BinaryType they map to
+    special = special_codecs(schema_json)
+    sync = bytes(buf[pos : pos + 16])
+    blocks = _blocks(buf, pos + 16, codec, sync)
+    out = _Decoded(schema_json, schema, codec)
+    plan = _flat_plan(schema, null_branch, special)
+    if plan is not None:
+        decode = _flat_decoder(plan)
+        out.columns = [[] for _ in plan]
+        for count, body in blocks:
+            try:
+                end = decode(body, count, out.columns)
+            except (IndexError, struct.error) as e:
+                raise ValueError(f"corrupt container block: {e}") from e
+            _check_consumed(end, body)
+        return out
+    # decoders built ONCE per file with the file's own null-branch map,
+    # so nested unions (array items, map values, struct fields) also
+    # honor the declared order
+    decs_nb = [
+        (
+            f.name,
+            null_branch.get(f.name, 1) if f.nullable else None,
+            _field_decoder(f.dataType, null_branch, f.name, special),
         )
-        derived = avro_to_struct(schema_json)
-        # Spark marks most DataFrame columns nullable regardless of
-        # content, so compare SHAPES ignoring nullability: a declared
-        # non-null field fed an actual None still fails loud at encode
-        # time, and the union branch bytes follow the DECLARED
-        # nullability either way.
-        if _strip_nullability(derived) != _strip_nullability(schema):
-            raise ValueError(
-                "declared_schema does not map to the given StructType: "
-                f"declared -> {derived.simpleString()}, "
-                f"got {schema.simpleString()}"
-            )
-        # encode under the DECLARED nullability (branch bytes exist
-        # only where the avro schema has a union)
-        schema = derived
-        nb = null_branch_indices(schema_json)
-        special = special_codecs(schema_json)
-    sync = _sync_marker(schema_json)
-    out = bytearray()
-    out += MAGIC
-    out += _enc_meta_map(
-        {"avro.schema": schema_json.encode(), "avro.codec": codec.encode()}
-    )
-    out += sync
-    if declared_schema is None:
-        # writer convention: [T,"null"] (null byte zigzag(1)=\x02)
-        encs4 = [
-            (name, 2 if nullable else None, 0, enc)
-            for name, nullable, enc in _row_codecs(schema)[0]
-        ]
-    else:
-        encs4 = []
-        for f in schema.fields:
-            if f.nullable:
-                inull = nb.get(f.name, 1)
-                null_b, val_b = (0, 2) if inull == 0 else (2, 0)
-            else:
-                null_b = None
-                val_b = 0
-            encs4.append(
-                (f.name, null_b, val_b,
-                 _field_encoder(f.dataType, nb, f.name, special))
-            )
-    i = 0
-    while i < len(rows):
-        chunk = rows[i : i + block_records]
-        i += block_records
-        payload = bytearray()
-        for r in chunk:
-            get = r.get
-            for name, null_b, val_b, enc in encs4:
-                v = get(name)
-                if null_b is not None:
-                    if v is None:
-                        payload.append(null_b)
+        for f in schema.fields
+    ]
+    zz = zigzag_decode
+    rows = out.rows = []
+    append = rows.append
+    for count, body in blocks:
+        bview = memoryview(body)
+        bpos = 0
+        for _ in range(count):
+            row = {}
+            for name, nb, dec in decs_nb:
+                if nb is not None:
+                    branch, bpos = zz(bview, bpos)
+                    if branch == nb:
+                        row[name] = None
                         continue
-                    payload.append(val_b)
-                enc(v, payload)
-        body = bytes(payload)
-        if codec == "deflate":
-            # RFC-1951 raw deflate (no zlib wrapper) per the spec
-            body = zlib.compress(body, 6)[2:-4]
-        elif codec == "bzip2":
-            body = _bz2.compress(body)
-        elif codec == "xz":
-            body = _lzma.compress(body, format=_lzma.FORMAT_XZ)
-        out += zigzag_encode(len(chunk))
-        out += zigzag_encode(len(body))
-        out += body
-        out += sync
-    return bytes(out)
+                row[name], bpos = dec(bview, bpos)
+            append(row)
+        _check_consumed(bpos, body)
+    return out
 
 
 def read_container(
@@ -737,99 +1193,20 @@ def read_container(
     under the file's own WRITER schema and then resolved to the
     reader's shape per the spec's Schema Resolution rules; the
     returned StructType is the reader's."""
-    from hyppo_worker_spark.sources.avro_schema import avro_to_struct
-
-    buf = memoryview(data)
-    if bytes(buf[:4]) != MAGIC:
-        raise ValueError("not an Avro object container file")
-    pos = 4
-    meta: dict[str, bytes] = {}
-    while True:
-        n, pos = zigzag_decode(buf, pos)
-        if n == 0:
-            break
-        if n < 0:  # spec: negative count precedes a byte size
-            n = -n
-            _, pos = zigzag_decode(buf, pos)
-        for _ in range(n):
-            kl, pos = zigzag_decode(buf, pos)
-            k = bytes(buf[pos : pos + kl]).decode()
-            pos += kl
-            vl, pos = zigzag_decode(buf, pos)
-            meta[k] = bytes(buf[pos : pos + vl])
-            pos += vl
+    got = _decode(data)
+    rows = got.to_rows()
+    if reader_schema is None:
+        return got.schema, got.codec, rows
     from hyppo_worker_spark.sources.avro_schema import (
-        null_branch_indices,
-        special_codecs,
+        avro_to_struct,
+        schema_resolver,
     )
 
-    schema_json = meta["avro.schema"].decode()
-    codec = meta.get("avro.codec", b"null").decode()
-    schema = avro_to_struct(schema_json)
-    # branch bytes follow the file's DECLARED union order — a foreign
-    # ["null",T] file decodes correctly, not just our own [T,"null"]
-    null_branch = null_branch_indices(schema_json)
-    # enum (zigzag symbol index) and fixed (raw N bytes) sites encode
-    # differently from the StringType/BinaryType they map to
-    special = special_codecs(schema_json)
-    sync = bytes(buf[pos : pos + 16])
-    pos += 16
-    rows: list[dict] = []
-    # decoders built ONCE per file with the file's own null-branch
-    # map, so nested unions (array items, map values, struct fields)
-    # also honor the declared order
-    decs_nb = [
-        (
-            f.name,
-            null_branch.get(f.name, 1) if f.nullable else None,
-            _field_decoder(f.dataType, null_branch, f.name, special),
-        )
-        for f in schema.fields
-    ]
-    zz = zigzag_decode
-    while pos < len(buf):
-        count, pos = zigzag_decode(buf, pos)
-        size, pos = zigzag_decode(buf, pos)
-        body = bytes(buf[pos : pos + size])
-        pos += size
-        if codec == "deflate":
-            body = zlib.decompress(body, wbits=-15)
-        elif codec == "bzip2":
-            body = _bz2.decompress(body)
-        elif codec == "xz":
-            body = _lzma.decompress(body)
-        elif codec != "null":
-            # snappy / zstandard need libraries absent from this
-            # environment (probed every round) — fail loud
-            raise ValueError(f"unsupported avro codec {codec}")
-        bview = memoryview(body)
-        bpos = 0
-        append = rows.append
-        for _ in range(count):
-            row = {}
-            for name, nb, dec in decs_nb:
-                if nb is not None:
-                    branch, bpos = zz(bview, bpos)
-                    if branch == nb:
-                        row[name] = None
-                        continue
-                row[name], bpos = dec(bview, bpos)
-            append(row)
-        if bytes(buf[pos : pos + 16]) != sync:
-            raise ValueError("sync marker mismatch — corrupt container")
-        pos += 16
-    if reader_schema is not None:
-        from hyppo_worker_spark.sources.avro_schema import schema_resolver
-
-        reader_json = (
-            reader_schema
-            if isinstance(reader_schema, str)
-            else json.dumps(reader_schema)
-        )
-        conv = schema_resolver(schema_json, reader_json)
-        rows = [conv(r) for r in rows]
-        schema = avro_to_struct(reader_json)
-    return schema, codec, rows
+    reader_json = (
+        reader_schema if isinstance(reader_schema, str) else json.dumps(reader_schema)
+    )
+    conv = schema_resolver(got.schema_json, reader_json)
+    return avro_to_struct(reader_json), got.codec, [conv(r) for r in rows]
 
 
 # -- distributed read/write ----------------------------------------------
@@ -848,20 +1225,22 @@ def write_avro(
     like the Observation on the jar path).
 
     Arrow-native (``mapInArrow``): a pandas hop would widen nullable
-    int64 columns to float64 and silently round ids above 2^53 —
-    ``RecordBatch.to_pylist`` keeps exact ints and real ``None``."""
+    int64 columns to float64 and silently round ids above 2^53 — the
+    Arrow buffers keep exact ints and real nulls."""
     import pyarrow as pa
 
     schema = df.schema
     os.makedirs(path, exist_ok=True)
+    count_schema = pa.schema([pa.field("n", pa.int64())])
 
     def enc(it: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        rows: list[dict] = []
-        for batch in it:
-            rows.extend(batch.to_pylist())
-        if rows:
-            blob = write_container(
-                schema, rows, codec=codec,
+        batches = list(it)
+        n = sum(b.num_rows for b in batches)
+        if n:
+            blob = write_container_arrow(
+                schema,
+                pa.Table.from_batches(batches),
+                codec=codec,
                 declared_schema=declared_schema,
             )
             name = f"part-{uuid.uuid4().hex}.avro"
@@ -869,21 +1248,17 @@ def write_avro(
             with open(tmp, "wb") as fh:
                 fh.write(blob)
             os.replace(tmp, os.path.join(path, name))
-            yield pa.RecordBatch.from_pylist(
-                [{"n": len(rows)}],
-                schema=pa.schema([pa.field("n", pa.int64())]),
-            )
+            yield pa.RecordBatch.from_pylist([{"n": n}], schema=count_schema)
 
-    # one pass; the tiny (n) batch per task forces execution
-    total = (
-        df.mapInArrow(enc, "n long").agg({"n": "sum"}).collect()[0][0] or 0
-    )
+    # one pass and one Spark job: each written partition returns its
+    # count, summed here (no aggregate, so no shuffle stage)
+    total = sum(r.n for r in df.mapInArrow(enc, "n long").collect())
     if not any(f.endswith(".avro") for f in os.listdir(path)):
         # empty dataset: one header-only container so readers see the
         # schema (mirrors the jar path's empty part file)
         with open(os.path.join(path, "part-empty.avro"), "wb") as fh:
             fh.write(write_container(schema, [], codec=codec))
-    return int(total)
+    return total
 
 
 def read_avro(
@@ -894,9 +1269,9 @@ def read_avro(
 ) -> DataFrame:
     """Distributed container read: binaryFile scan + mapInArrow
     decode; each file's header schema must match ``expected`` (or the
-    first file's schema when omitted — resolved driver-side from ONE
-    header, not a full read). Arrow-native for the same exact-int64
-    reason as ``write_avro``.
+    first file's schema when omitted — taken from that file's header
+    on the driver, no record decoded). Arrow-native for the same
+    exact-int64 reason as ``write_avro``.
 
     ``reader_schema`` (Avro record schema JSON) enables SCHEMA
     RESOLUTION (spec "Schema Resolution"): every file decodes under
@@ -909,10 +1284,7 @@ def read_avro(
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from hyppo_worker_spark.sources.avro_schema import (
-        avro_to_struct,
-        schema_resolver,
-    )
+    from hyppo_worker_spark.sources.avro_schema import avro_to_struct
 
     if reader_schema is not None:
         if expected is not None:
@@ -929,16 +1301,12 @@ def read_avro(
     else:
         reader_json = None
     if expected is None:
-        first = sorted(
-            f for f in os.listdir(path) if f.endswith(".avro")
-        )
+        first = sorted(f for f in os.listdir(path) if f.endswith(".avro"))
         if not first:
             raise FileNotFoundError(f"no .avro files under {path}")
+        # the header alone: no record is decoded on the driver
         with open(os.path.join(path, first[0]), "rb") as fh:
-            expected, _, _ = read_container(fh.read())
-        # rows are discarded; only the header schema is used. Cheap for
-        # the per-task file sizes the records zone writes; a real
-        # header-only parse is a future micro-optimization.
+            expected = avro_to_struct(_embedded_schema_json(fh.read()))
     exp = expected
 
     # pathGlobFilter, not a glob-in-path: a glob path makes Spark's
@@ -954,50 +1322,25 @@ def read_avro(
     def dec(it: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         for batch in it:
             for r in batch.to_pylist():
-                blob = bytes(r["content"])
-                schema, _codec, rows = read_container(blob)
+                blob = r["content"]
                 if reader_json is not None:
-                    # per-file resolution: the writer schema comes from
-                    # the file's own header (extracted by read_container
-                    # already — re-parse the embedded JSON for the
-                    # resolver, which works on Avro JSON, not StructType)
-                    writer_json = _embedded_schema_json(blob)
-                    conv = schema_resolver(writer_json, reader_json)
-                    rows = [conv(row) for row in rows]
-                elif schema != exp:
+                    # per-file resolution from the file's own writer
+                    # schema to the reader's
+                    _, _, rows = read_container(blob, reader_schema=reader_json)
+                    if rows:
+                        yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+                    continue
+                got = _decode(blob)
+                if got.schema != exp:
                     raise ValueError(
                         f"avro schema mismatch in {r['path']}: "
-                        f"{schema} != {exp}"
+                        f"{got.schema} != {exp}"
                     )
-                if rows:
-                    yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+                out = got.to_batch(arrow_schema)
+                if out.num_rows:
+                    yield out
 
     return bin_df.mapInArrow(dec, exp)
-
-
-def _embedded_schema_json(data: bytes) -> str:
-    """The avro.schema metadata value of a container file, verbatim."""
-    buf = memoryview(data)
-    if bytes(buf[:4]) != MAGIC:
-        raise ValueError("not an Avro object container file")
-    pos = 4
-    while True:
-        n, pos = zigzag_decode(buf, pos)
-        if n == 0:
-            break
-        if n < 0:
-            n = -n
-            _, pos = zigzag_decode(buf, pos)
-        for _ in range(n):
-            kl, pos = zigzag_decode(buf, pos)
-            k = bytes(buf[pos : pos + kl]).decode()
-            pos += kl
-            vl, pos = zigzag_decode(buf, pos)
-            v = bytes(buf[pos : pos + vl])
-            pos += vl
-            if k == "avro.schema":
-                return v.decode()
-    raise ValueError("container has no avro.schema metadata")
 
 
 def _strip_nullability(dt: T.DataType) -> T.DataType:

@@ -1,6 +1,6 @@
 """Pure-Python Avro Object Container File implementation: spec-level
 byte checks (zigzag varints, header framing, sync markers), both
-codecs, null handling, and the distributed mapInPandas read/write
+codecs, null handling, and the distributed mapInArrow read/write
 round trip. This closes the reference-parity gap (its records zone IS
 Avro-with-deflate) without the absent spark-avro jar."""
 
