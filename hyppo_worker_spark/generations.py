@@ -1,31 +1,29 @@
-"""One crash-safe commit for every table this package rewrites: write
-a generation, flip a pointer, garbage-collect.
+"""One crash-safe commit for every table this package writes durably:
+write a segment, flip a pointer, garbage-collect.
 
-A table is a root directory holding its generation directories and one
-small JSON pointer, ``_CURRENT.json``. The pointer is the single answer
-to two questions — which directories make up the table now, and which
-streaming batch was applied last — and only ``publish_json``
-(``os.replace``) ever changes it::
+A table is a root directory holding its segment directories and one
+small JSON pointer, ``_CURRENT.json``: the single answer to which
+segments make up the table now and which streaming batch was applied
+last. Only ``publish_json`` (``os.replace``) ever changes it::
 
-    {"batch": 7, "seq": 12, "parts": {"": 12}}
-    {"batch": 9, "seq": 14, "parts": {"bucket=0": 14, "bucket=3": 11}}
+    {"batch": 7, "seq": 12, "segments": ["g-11", "g-12"]}
+    {"batch": 9, "seq": 14, "segments": ["bucket=0/g-14", "bucket=3/g-11"]}
 
-A whole table is the one-part case, ``<root>/g-<N>/``. A bucketed
-table keeps one generation per bucket, ``<root>/bucket=<b>/g-<N>/``,
-read with ``basePath=<root>``: Spark materializes the ``bucket`` column
-from the directory names and prunes scans that filter on it, even with
-buckets at different generations.
-
-A commit (1) deletes everything under the root the pointer does not
-reference, (2) writes generation ``seq + 1`` beside the live one and
-(3) publishes the new pointer, whose batch id makes the flip the
-batch's ack — there is no separate marker and no window between data
-and ack. A crash before (3) leaves the old pointer: readers and the
-replayed batch see the pre-batch table, and the next commit's step (1)
-removes the leftovers. A crash after (3) leaves the batch acked, so
-its replay is a no-op. Nothing is ever rolled back. The generation a
-commit supersedes stays on disk until the next commit begins, so a
-reader that resolved it before the flip can finish its scan.
+A write (1) deletes everything under the root the pointer does not
+reference, (2) writes segment ``N = seq + 1`` into ``<root>/g-<N>/`` —
+moving each partition (``bucket=3``) or named frame (``corpus``)
+directory it fills to ``<root>/<dir>/g-<N>/``, so a ``basePath`` read
+prunes partitions across any number of segments — and (3) publishes
+the new pointer: a commit's replaces the old segments (split: those of
+the partitions it wrote), an append's keeps them all. The pointer's
+batch id makes the flip the batch's ack — no separate marker, no
+window between data and ack. A crash before (3) leaves the old
+pointer: readers and the replayed batch see the pre-batch table, never
+their own half-written rows, and the next write's step (1) removes the
+leftovers. A crash after (3) leaves the batch acked, so its replay is
+a no-op. Nothing is ever rolled back; a superseded segment stays on
+disk until the next write begins, so a reader that resolved it before
+the flip can finish its scan.
 
 This is the reference's manifest commit (data files first, then the
 manifest that names them — SURVEY §2.A op 7) at directory grain; on an
@@ -37,23 +35,28 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 POINTER = "_CURRENT.json"
 
 
-def publish_json(path: str, obj: dict) -> None:
-    """Durably replace the JSON document at ``path``: write a tmp
+def publish(path: str, text: str) -> None:
+    """Durably replace the file at ``path`` with ``text``: write a tmp
     file, flush, fsync, then ``os.replace``. A reader sees the old or
-    the new document, never a torn one — and after a power loss never
-    an empty one, which an un-fsynced rename allows."""
+    the new file, never a torn one — and after a power loss never an
+    empty one, which an un-fsynced rename allows."""
     tmp = path + ".tmp"
     with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(obj, fh, indent=1, sort_keys=True)
+        fh.write(text)
         fh.flush()
         os.fsync(fh.fileno())
     os.replace(tmp, path)
+
+
+def publish_json(path: str, obj: dict) -> None:
+    publish(path, json.dumps(obj, indent=1, sort_keys=True))
 
 
 def _remove(path: str) -> None:
@@ -64,7 +67,7 @@ def _remove(path: str) -> None:
 
 
 class Generations:
-    """The pointer-resolved generations of the table at ``root``."""
+    """The pointer-resolved segments of the table at ``root``."""
 
     def __init__(self, root: str) -> None:
         self.root = root
@@ -76,7 +79,7 @@ class Generations:
             with open(os.path.join(self.root, POINTER), encoding="utf-8") as fh:
                 return json.load(fh)
         except FileNotFoundError:
-            return {"batch": None, "seq": 0, "parts": {}}
+            return {"batch": None, "seq": 0, "segments": []}
 
     def last_batch(self) -> int | None:
         """The last streaming batch this table acked (None: never)."""
@@ -88,52 +91,49 @@ class Generations:
         last = self.last_batch()
         return last is not None and batch_id <= last
 
-    def paths(self) -> list[str]:
-        """The directories that make up the table now."""
+    def paths(self, frame: str = "") -> list[str]:
+        """The segments that make up the table (or its ``frame``) now."""
+        prefix = os.path.join(frame, "") if frame else ""
         return [
-            os.path.join(self.root, part, f"g-{n}")
-            for part, n in sorted(self.pointer()["parts"].items())
+            os.path.join(self.root, s)
+            for s in self.pointer()["segments"]
+            if s.startswith(prefix)
         ]
 
     def exists(self) -> bool:
-        return bool(self.pointer()["parts"])
+        return bool(self.pointer()["segments"])
 
     def is_split(self) -> bool:
-        """True when the table is one generation per partition value
-        (the bucketed layout) rather than one whole generation."""
-        return any(self.pointer()["parts"])
+        """True when the segments sit under partition directories."""
+        return any(os.path.dirname(s) for s in self.pointer()["segments"])
 
-    def current(self) -> str:
-        """The single generation directory of a whole table."""
-        (path,) = self.paths()
-        return path
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        if self.is_split():
-            return spark.read.option("basePath", self.root).parquet(
-                *self.paths()
-            )
-        return spark.read.parquet(self.current())
+    def read(self, spark: SparkSession, frame: str = "") -> DataFrame:
+        base = os.path.join(self.root, frame) if frame else self.root
+        return spark.read.option("basePath", base).parquet(*self.paths(frame))
 
     # ---- write side ------------------------------------------------------
 
     def _gc(self) -> dict:
         """Recovery: delete every entry under the root the pointer does
-        not reference (a crashed commit's output, the generation the
-        previous commit superseded). Returns the pointer."""
+        not reference (a crashed write's output, the segments the
+        previous write superseded). Returns the pointer."""
         ptr = self.pointer()
+        live = set(ptr["segments"]) | {POINTER}
+        above = set()  # the partition and frame dirs holding segments
+        for seg in live:
+            while seg := os.path.dirname(seg):
+                above.add(seg)
+
+        def sweep(rel: str) -> None:
+            for name in os.listdir(os.path.join(self.root, rel)):
+                sub = os.path.join(rel, name)
+                if sub in above:
+                    sweep(sub)
+                elif sub not in live:
+                    _remove(os.path.join(self.root, sub))
+
         os.makedirs(self.root, exist_ok=True)
-        live = {(part, f"g-{n}") for part, n in ptr["parts"].items()}
-        for name in os.listdir(self.root):
-            if name == POINTER or ("", name) in live:
-                continue
-            path = os.path.join(self.root, name)
-            if name not in ptr["parts"]:
-                _remove(path)
-                continue
-            for gen in os.listdir(path):
-                if (name, gen) not in live:
-                    _remove(os.path.join(path, gen))
+        sweep("")
         return ptr
 
     def _publish(self, ptr: dict) -> None:
@@ -144,6 +144,44 @@ class Generations:
         """Ack a batch that changed nothing: republish the pointer."""
         self._publish(dict(self.pointer(), batch=batch_id))
 
+    def _write(
+        self, fill: Callable[[str], None], batch_id: int | None, keep: str
+    ) -> None:
+        """GC, ``fill`` ``<root>/g-<N>/``, lift the dirs it filled, flip.
+        ``keep``: which old segments stay — ``"none"``, ``"parts"`` (of
+        partitions not written) or ``"all"``."""
+        ptr = self._gc()
+        n = ptr["seq"] + 1
+        gen = f"g-{n}"
+        out = os.path.join(self.root, gen)
+        fill(out)
+        filled = sorted(  # the directories holding parquet parts
+            os.path.relpath(d, out)
+            for d, _, fs in os.walk(out)
+            if any(f.startswith("part-") for f in fs)
+        )
+        if filled == ["."]:
+            new = [gen]
+        else:
+            new = [os.path.join(d, gen) for d in filled]
+            for d, seg in zip(filled, new):
+                os.makedirs(os.path.join(self.root, d), exist_ok=True)
+                os.rename(os.path.join(out, d), os.path.join(self.root, seg))
+            shutil.rmtree(out)
+        written = {os.path.dirname(s) for s in new} | {""}
+        kept = {
+            "none": [],
+            "parts": [
+                s for s in ptr["segments"] if os.path.dirname(s) not in written
+            ],
+            "all": ptr["segments"],
+        }[keep]
+        self._publish({
+            "batch": ptr["batch"] if batch_id is None else batch_id,
+            "seq": n,
+            "segments": kept + new,
+        })
+
     def commit(
         self,
         df: DataFrame,
@@ -152,38 +190,26 @@ class Generations:
         *,
         split: bool = False,
     ) -> None:
-        """Write ``df`` as the next generation and flip the pointer to
-        it (acking ``batch_id`` when given). ``df`` may read the live
-        generation: the write lands beside it.
+        """Write ``df`` as the next segment and flip the pointer to it
+        (acking ``batch_id`` when given). ``df`` may read the live
+        segments: the write lands beside them.
 
-        Whole (``split=False``): ``df`` is the complete table, written
-        to ``g-<N>/`` (hive-partitioned inside it by ``partition_by``).
-        Split: ``df`` holds the complete new content of every
-        ``partition_by`` value it mentions; each value's directory
-        becomes that part's generation, and parts ``df`` does not
-        mention keep theirs. A split commit over a whole table replaces
-        it (the layout migration)."""
-        ptr = self._gc()
-        n = ptr["seq"] + 1
-        batch = ptr["batch"] if batch_id is None else batch_id
-        if not split:
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(os.path.join(self.root, f"g-{n}"))
-            self._publish({"batch": batch, "seq": n, "parts": {"": n}})
-            return
-        staging = os.path.join(self.root, f"_w-{n}")
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(staging)
-        parts = {} if "" in ptr["parts"] else dict(ptr["parts"])
-        for part in sorted(os.listdir(staging)):
-            if "=" not in part:
-                continue  # _SUCCESS and checksum files
-            os.makedirs(os.path.join(self.root, part), exist_ok=True)
-            os.rename(
-                os.path.join(staging, part),
-                os.path.join(self.root, part, f"g-{n}"),
-            )
-            parts[part] = n
-        shutil.rmtree(staging)
-        self._publish({"batch": batch, "seq": n, "parts": parts})
+        Whole (``split=False``): ``df`` is the complete table
+        (hive-partitioned by ``partition_by``). Split: ``df`` holds the
+        complete new content of every ``partition_by`` value it
+        mentions; those values' segments are replaced, and values
+        ``df`` does not mention keep theirs. A split commit over a
+        whole table replaces it (the layout migration)."""
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        self._write(writer.parquet, batch_id, "parts" if split else "none")
+
+    def append(
+        self, fill: Callable[[str], None], batch_id: int | None = None
+    ) -> None:
+        """Add a segment beside the live ones: ``fill(dir)`` writes the
+        new rows into ``dir`` (parquet, partitioned or in named frame
+        subdirs as the table reads them); one flip publishes them, with
+        ``batch_id`` as the ack when given."""
+        self._write(fill, batch_id, "all")

@@ -41,6 +41,12 @@ def new_execution_id() -> str:
     return str(uuid.uuid4())
 
 
+def sanitize_name(name: str) -> str:
+    """Queue/key-safe name: whitespace → '_', '.' → '-'
+    (parity with ``QueueNaming.scala:107-112``)."""
+    return name.strip().replace(".", "-").replace(" ", "_")
+
+
 # ---------------------------------------------------------------------------
 # Ingestion entities
 # ---------------------------------------------------------------------------

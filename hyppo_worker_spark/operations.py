@@ -69,6 +69,27 @@ def _validate_common(item: WorkInput, integration: DataIntegration) -> list[str]
     return errors
 
 
+def _resolve_valid(
+    registry: IntegrationRegistry,
+    item: WorkInput,
+    family: type | None = None,
+    op: str = "",
+) -> DataIntegration:
+    """Resolve ``item``'s integration and run the common pre-flight
+    checks, plus the raw/processed ``family`` check of operation
+    ``op`` when given; raises ``ValidationError``."""
+    integration = registry.resolve(
+        item.integration.source_name, item.integration.version_number
+    )
+    errors = _validate_common(item, integration)
+    if errors:
+        raise ValidationError("; ".join(errors))
+    if family is not None and not isinstance(integration, family):
+        kind = "raw" if family is RawDataIntegration else "processed"
+        raise ValidationError(f"{op} on a non-{kind} integration")
+    return integration
+
+
 def op_validate_integration(
     spark: SparkSession,
     registry: IntegrationRegistry,
@@ -124,12 +145,7 @@ def op_create_ingestion_tasks(
 ) -> CreateIngestionTasksResponse:
     """Op 2 (``CreateIngestionTasksOperation.java:36-57``): fan the job
     out into numbered tasks via the connector's partition planner."""
-    integration = registry.resolve(
-        item.integration.source_name, item.integration.version_number
-    )
-    errors = _validate_common(item, integration)
-    if errors:
-        raise ValidationError("; ".join(errors))
+    integration = _resolve_valid(registry, item)
     args_list = integration.create_tasks(item.job)
     tasks = tuple(
         DataIngestionTask(job=item.job, task_number=i + 1, task_arguments=dict(args))
@@ -147,14 +163,7 @@ def op_fetch_raw_data(
     """Op 3 (``FetchRawDataOperation.java:43-65``): connector pulls
     opaque payloads; engine lands them gzipped in the raw zone with
     checksums."""
-    integration = registry.resolve(
-        item.integration.source_name, item.integration.version_number
-    )
-    errors = _validate_common(item, integration)
-    if errors:
-        raise ValidationError("; ".join(errors))
-    if not isinstance(integration, RawDataIntegration):
-        raise ValidationError("fetch_raw on a non-raw integration")
+    integration = _resolve_valid(registry, item, RawDataIntegration, "fetch_raw")
     payloads = integration.fetch_raw(item.task)
     manifests = handler.upload_raw(item.task, payloads)
     return FetchRawDataResponse(input=item, data=tuple(manifests))
@@ -171,14 +180,9 @@ def op_process_raw_data(
 
     The reference loops files sequentially in one thread; here the
     files become a binaryFile DataFrame so the parse distributes."""
-    integration = registry.resolve(
-        item.integration.source_name, item.integration.version_number
+    integration = _resolve_valid(
+        registry, item, RawDataIntegration, "process_raw"
     )
-    errors = _validate_common(item, integration)
-    if errors:
-        raise ValidationError("; ".join(errors))
-    if not isinstance(integration, RawDataIntegration):
-        raise ValidationError("process_raw on a non-raw integration")
     for m in item.files:
         handler.download_raw(m)  # checksum verification, as on download
     raw_df = handler.read_raw_df(list(item.files))
@@ -195,14 +199,9 @@ def op_fetch_processed_data(
 ) -> FetchProcessedDataResponse:
     """Op 5 (``FetchProcessedDataOperation.java:54-78``): typed records
     directly from the connector → records zone + count."""
-    integration = registry.resolve(
-        item.integration.source_name, item.integration.version_number
+    integration = _resolve_valid(
+        registry, item, ProcessedDataIntegration, "fetch_processed"
     )
-    errors = _validate_common(item, integration)
-    if errors:
-        raise ValidationError("; ".join(errors))
-    if not isinstance(integration, ProcessedDataIntegration):
-        raise ValidationError("fetch_processed on a non-processed integration")
     records = integration.fetch_processed(spark, item.task)
     declared = integration.record_schema()
     if [f.name for f in records.schema.fields] != [f.name for f in declared.fields]:
@@ -222,12 +221,7 @@ def op_persist_processed_data(
     """Op 6 (``PersistProcessedDataOperation.java:45-60``): read the
     records dataset back (checksum-verified) and hand it to the
     connector's sink."""
-    integration = registry.resolve(
-        item.integration.source_name, item.integration.version_number
-    )
-    errors = _validate_common(item, integration)
-    if errors:
-        raise ValidationError("; ".join(errors))
+    integration = _resolve_valid(registry, item)
     records = handler.read_records(item.data)
     integration.persist(spark, item.task, records)
     return PersistProcessedDataResponse(input=item)

@@ -3,12 +3,13 @@
 driver-side admission ledger.
 
 Every persisted vector index here stores its per-vector state (an IVF
-cell, or PQ codes) in one append-only parquet directory of
+cell, or PQ codes) in one generation table (``generations.py``) of
 ``(key…, admitted)`` rows — the ADMITTED ZONE. Training writes the
-base rows once (``admitted=false``); each admitted batch appends its
-rows (``admitted=true``) and nothing existing is rewritten (object-
-store friendly, replay-friendly). The zone's key grid is the trained
-quantizer: k cells for IVF, m×k (subspace, code) pairs for PQ.
+base rows once (``admitted=false``); each admitted batch appends a
+segment of its rows (``admitted=true``) with one pointer flip, and
+nothing existing is rewritten (object-store friendly; a crash leaves
+no partial rows). The zone's key grid is the trained quantizer: k
+cells for IVF, m×k (subspace, code) pairs for PQ.
 
 Whether the quantizer is still fit for the grown corpus is decided
 by a DRIFT GATE, not a schedule: per group (the whole grid for IVF
@@ -139,10 +140,9 @@ def fold_ledger(
 
 
 class AdmittedZone:
-    """The append-only ``(key…, admitted)`` parquet table of one
-    persisted index, kept as generations at ``path``
-    (``generations.py``): a base write or a compaction publishes a new
-    generation, an admission appends to the current one. ``grid``
+    """The ``(key…, admitted)`` generation table of one persisted
+    index at ``path``: a base write or a compaction replaces it, an
+    admission appends a segment. ``grid``
     returns the trained key grid (one row per key, ``grid_size``
     rows); ``by`` names the drift group
     (``()`` for IVF cells, ``("m",)`` for PQ subspaces);
@@ -176,12 +176,12 @@ class AdmittedZone:
         )
 
     def append(self, rows: DataFrame) -> DataFrame:
-        """Append an admitted batch's rows to the current generation;
-        returns ``rows``."""
-        w = rows.withColumn("admitted", F.lit(True)).write.mode("append")
+        """Append an admitted batch's rows as one segment; returns
+        ``rows``."""
+        w = rows.withColumn("admitted", F.lit(True)).write
         if self.partition_by:
             w = w.partitionBy(*self.partition_by)
-        w.parquet(self.gens.current())
+        self.gens.append(w.parquet)
         return rows
 
     def read(self, spark: SparkSession) -> DataFrame:
@@ -234,7 +234,7 @@ class AdmittedZone:
         target_file_bytes: int = 128 * 1024 * 1024,
     ) -> dict | None:
         """Rewrite the zone into ~target-sized files (p28's small-files
-        discipline): admission writes one parquet dir per batch by
+        discipline): admission writes one segment per batch by
         design, so the file count — and every gate read's per-file
         open cost — grows with batch count. With ``max_files`` set
         this is a one-listing no-op at or below the threshold, safe to
@@ -249,7 +249,7 @@ class AdmittedZone:
 
         if (
             max_files is not None
-            and dataset_file_stats(self.gens.current())["n_files"]
+            and dataset_file_stats(*self.gens.paths())["n_files"]
             <= max_files
         ):
             return None
@@ -263,16 +263,14 @@ class AdmissionLedger:
     """Streaming admission into an index's key grid, one
     ``foreachBatch`` trigger at a time (:meth:`admit` is the sink).
 
-    Each trigger encodes its batch against the persisted artifacts
-    and writes the rows to its own ``admitted/batch=<id>`` directory
-    with mode=overwrite, then folds the previous ledger slice with the
-    batch's per-key counts on the driver (:func:`fold_ledger`; every
-    frame past the batch count is ≤ grid rows of integers) and writes
-    ``ledger/batch=<id>``. Per-batch overwrite directories make a
-    replayed trigger rewrite identical bytes instead of
-    double-appending, and a replay of batch b re-reads ledger b−1,
-    written by a completed earlier trigger. Per trigger: O(batch +
-    grid) I/O, whatever the number of batches admitted before."""
+    Each trigger encodes its batch against the persisted artifacts,
+    folds the last ledger slice with the batch's per-key counts on the
+    driver (:func:`fold_ledger`; every frame past the batch count is ≤
+    grid rows of integers) and appends the admitted rows and the new
+    slice as ONE generation segment under ``<work>/admission``, acked
+    with the batch id: a replayed trigger is a no-op, a crashed one
+    leaves nothing visible. Per trigger: O(batch + grid) I/O, whatever
+    the number of batches admitted before."""
 
     def __init__(
         self,
@@ -286,8 +284,7 @@ class AdmissionLedger:
         self.zone = zone
         self.encode = encode
         self.threshold_bp = threshold_bp
-        self.adm_dir = os.path.join(work, "admitted")
-        self.ledger_dir = os.path.join(work, "ledger")
+        self.gens = Generations(os.path.join(work, "admission"))
         # base populations are FIXED after train: one bounded pull
         # instead of a zone scan per trigger
         self.base = self._key_counts(
@@ -304,37 +301,40 @@ class AdmissionLedger:
     def admit(self, batch: DataFrame, batch_id: int) -> None:
         spark, keys = self.spark, self.zone.keys
         batch_id = int(batch_id)
-        batch_dir = os.path.join(self.adm_dir, f"batch={batch_id}")
-        self.encode(batch).write.mode("overwrite").parquet(batch_dir)
-        cur = self._key_counts(
-            spark.read.parquet(batch_dir)
-            .groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("n")),
-            "n",
-        )
+        if self.gens.done(batch_id):
+            return
+        slices = self.gens.paths("ledger")  # in admission order
         prev = (
             self._key_counts(
-                spark.read.parquet(
-                    os.path.join(self.ledger_dir, f"batch={batch_id - 1}")
-                ).select(*keys, "n_admitted_cum"),
+                spark.read.parquet(slices[-1]).select(*keys, "n_admitted_cum"),
                 "n_admitted_cum",
             )
-            if batch_id > 0
+            if slices
             else {}
         )
-        rows = fold_ledger(
-            self.base, prev, cur,
-            n_by=len(self.zone.by), grid_size=self.zone.grid_size,
-        )
-        key_schema = ", ".join(f"{k} long" for k in keys)
-        local_frame(
-            spark,
-            [(*r, r[-1] > self.threshold_bp, batch_id) for r in rows],
-            f"{key_schema}, n_base long, n_admitted_cum long, "
-            "drift_bp long, retrain_needed boolean, batch_seq long",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(self.ledger_dir, f"batch={batch_id}")
-        )
+
+        def fill(out: str) -> None:
+            admitted = os.path.join(out, "admitted")
+            self.encode(batch).write.parquet(admitted)
+            cur = self._key_counts(
+                spark.read.parquet(admitted)
+                .groupBy(*keys)
+                .agg(F.count(F.lit(1)).alias("n")),
+                "n",
+            )
+            rows = fold_ledger(
+                self.base, prev, cur,
+                n_by=len(self.zone.by), grid_size=self.zone.grid_size,
+            )
+            key_schema = ", ".join(f"{k} long" for k in keys)
+            local_frame(
+                spark,
+                [(*r, r[-1] > self.threshold_bp, batch_id) for r in rows],
+                f"{key_schema}, n_base long, n_admitted_cum long, "
+                "drift_bp long, retrain_needed boolean, batch_seq long",
+            ).coalesce(1).write.parquet(os.path.join(out, "ledger"))
+
+        self.gens.append(fill, batch_id)
 
     def read(self) -> list:
         """Every ledger row, ordered by (batch_seq, key…) — a bounded
@@ -342,8 +342,7 @@ class AdmissionLedger:
         cols = ("batch_seq", *self.zone.keys, "n_base", "n_admitted_cum",
                 "drift_bp")
         return (
-            self.spark.read.option("basePath", self.ledger_dir)
-            .parquet(self.ledger_dir)
+            self.gens.read(self.spark, "ledger")
             .select(*[F.col(c).cast("long") for c in cols], "retrain_needed")
             .orderBy("batch_seq", *self.zone.keys)
         ).collect()

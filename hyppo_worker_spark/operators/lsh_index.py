@@ -5,17 +5,17 @@ every run; an ingestion pipeline cannot — at 100 TB the corpus text
 must be hashed ONCE, when each document is admitted. This index stores
 the two frames the candidate+verify join actually needs:
 
-- ``banded/``  : (did, band_id, band_key) — narrow banding rows;
-- ``shingles/``: (did, sh array<string>)  — shingle sets for exact
+- ``banded``  : (did, band_id, band_key) — narrow banding rows;
+- ``shingles``: (did, sh array<string>)  — shingle sets for exact
   Jaccard verification of candidates.
 
-Both are parquet directories written in append mode: admitting a batch
-appends its rows; nothing existing is rewritten (object-store
-friendly — no read-modify-write). Checking a new batch then joins the
-batch's (broadcast) banding rows against ``banded/`` and pulls shingle
-arrays only for candidate ids — the corpus text is never re-read.
+Admitting a batch appends one generation segment of both frames
+(``generations.py``): nothing existing is rewritten, and a crash
+leaves no partial rows. Checking a new batch then joins the batch's
+(broadcast) banding rows against ``banded`` and pulls shingle arrays
+only for candidate ids — the corpus text is never re-read.
 
-``banded/`` is directory-partitioned by ``band_pt`` (an md5 bucket of
+``banded`` is directory-partitioned by ``band_pt`` (an md5 bucket of
 the band key) and sorted by ``band_key`` within each file:
 
 - a probe batch only ever joins rows whose band_pt values it itself
@@ -27,9 +27,6 @@ the band key) and sorted by ``band_key`` within each file:
 - the in-file sort gives parquet row-group min/max stats on
   band_key, so even inside a surviving partition, row groups whose
   key range misses the probe keys are skipped by pushdown.
-
-The append contract is unchanged: each admission writes only its own
-rows into the partition dirs it touches.
 """
 
 from __future__ import annotations
@@ -40,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hyppo_worker_spark.functions import text as TX
+from hyppo_worker_spark.generations import Generations
 from hyppo_worker_spark.operators.dedup import (
     _minhash_banded,
     minhash_pairs_against_banded,
@@ -47,7 +45,9 @@ from hyppo_worker_spark.operators.dedup import (
 
 
 class MinHashLshIndex:
-    """Filesystem-backed LSH index with append-only admission."""
+    """LSH index admitted by generation appends: ``banded`` and
+    ``shingles`` are frames of the generation table at ``path``, which
+    may hold other frames too (the dedup sink's corpus)."""
 
     def __init__(
         self,
@@ -58,19 +58,14 @@ class MinHashLshIndex:
         shingle_n: int = 3,
         n_pt: int = 16,
     ) -> None:
-        self.path = path
+        self.gens = Generations(path)
         self.num_hashes = num_hashes
         self.bands = bands
         self.shingle_n = shingle_n
         self.n_pt = n_pt
-        self._banded_dir = os.path.join(path, "banded")
-        self._shingles_dir = os.path.join(path, "shingles")
 
     def _band_pt(self, col):
         return TX.md5_bucket(col, self.n_pt)
-
-    def exists(self) -> bool:
-        return os.path.isdir(self._banded_dir)
 
     def compute_frames(
         self, docs: DataFrame, id_col: str, text_col: str
@@ -86,27 +81,27 @@ class MinHashLshIndex:
             shingle_n=self.shingle_n,
         )
 
-    def append(self, shingles: DataFrame, banded: DataFrame) -> None:
-        """Admit documents: append their frames (no rewrite). Banding
-        rows land in their band_pt partition dir, sorted by band_key
-        within each file (row-group min/max stats for probe pushdown);
-        repartition first so each touched partition gets ONE file per
-        admission, not one per upstream task."""
+    def write(self, out: str, shingles: DataFrame, banded: DataFrame) -> None:
+        """Write admitted documents' frames into segment dir ``out``.
+        Banding rows land in their band_pt partition dir, sorted by
+        band_key within each file (row-group min/max stats for probe
+        pushdown); repartition first so each touched partition gets ONE
+        file per admission, not one per upstream task."""
         (
             banded.withColumn("band_pt", self._band_pt(F.col("band_key")))
             .repartition("band_pt")
             .sortWithinPartitions("band_key")
-            .write.mode("append")
-            .partitionBy("band_pt")
-            .parquet(self._banded_dir)
+            .write.partitionBy("band_pt")
+            .parquet(os.path.join(out, "banded"))
         )
-        shingles.write.mode("append").parquet(self._shingles_dir)
+        shingles.write.parquet(os.path.join(out, "shingles"))
+
+    def append(self, shingles: DataFrame, banded: DataFrame) -> None:
+        """Admit documents: one segment, one pointer flip."""
+        self.gens.append(lambda out: self.write(out, shingles, banded))
 
     def load(self, spark: SparkSession) -> tuple[DataFrame, DataFrame]:
-        return (
-            spark.read.parquet(self._shingles_dir),
-            spark.read.parquet(self._banded_dir),
-        )
+        return self.gens.read(spark, "shingles"), self.gens.read(spark, "banded")
 
     def pairs_against(
         self,

@@ -28,10 +28,12 @@ from pyspark.sql import functions as F
 from hyppo_worker_spark.generations import Generations
 
 
-def dataset_file_stats(path: str) -> dict:
-    """(file count, total bytes, mean bytes) for a written dataset."""
+def dataset_file_stats(*paths: str) -> dict:
+    """(file count, total bytes, mean bytes) for a written dataset
+    (the union of its directories)."""
     files = [
         f
+        for path in paths
         for f in glob.glob(os.path.join(path, "**"), recursive=True)
         if os.path.isfile(f) and not f.endswith((".crc", "_SUCCESS"))
     ]
@@ -63,7 +65,7 @@ def compact(
     on the compacted zone. Returns before/after file stats.
     """
     gens = Generations(path)
-    before = dataset_file_stats(gens.current())
+    before = dataset_file_stats(*gens.paths())
     n_parts = max(1, -(-before["total_bytes"] // target_file_bytes))
     df = gens.read(spark)
     if partition_by:
@@ -71,7 +73,7 @@ def compact(
     else:
         df = df.repartition(n_parts)
     gens.commit(df, partition_by=partition_by)
-    after = dataset_file_stats(gens.current())
+    after = dataset_file_stats(*gens.paths())
     return {"before": before, "after": after, "target_partitions": n_parts}
 
 

@@ -36,12 +36,9 @@ from collections import deque
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-from hyppo_worker_spark.model import WorkInput, WorkResource
+from hyppo_worker_spark.generations import publish
+from hyppo_worker_spark.model import WorkInput, WorkResource, sanitize_name
 from hyppo_worker_spark.scheduler.priority import QueueDetails
-
-
-def sanitize_name(name: str) -> str:
-    return name.strip().replace(".", "-").replace(" ", "_")
 
 
 def merge_queue_details(name: str, ds: list[QueueDetails]) -> QueueDetails:
@@ -103,10 +100,13 @@ class QueueNaming:
     def expired(self) -> str:
         return f"{self.prefix}.expired"
 
+    def _integration_base(self, source_name: str, version: int) -> str:
+        return f"{self.prefix}.integration.{sanitize_name(source_name)}-v{version}"
+
     def integration(
         self, source_name: str, version: int, resources: tuple[WorkResource, ...] = ()
     ) -> str:
-        base = f"{self.prefix}.integration.{sanitize_name(source_name)}-v{version}"
+        base = self._integration_base(source_name, version)
         if resources:
             digest = hashlib.md5(
                 ",".join(sorted(f"{r.kind.value}:{r.name}" for r in resources)).encode()
@@ -115,7 +115,7 @@ class QueueNaming:
         return base
 
     def belongs_to_integration(self, source_name: str, version: int, queue_name: str) -> bool:
-        base = f"{self.prefix}.integration.{sanitize_name(source_name)}-v{version}"
+        base = self._integration_base(source_name, version)
         return queue_name == base or queue_name.startswith(base + ".")
 
     def is_integration_queue(self, queue_name: str) -> bool:
@@ -169,9 +169,9 @@ class QueueJournal:
     Events (one JSON object per line, correlated by journal id ``i``):
     ``enq`` (payload + queue + wall-clock ttl anchor + delivery count),
     ``get`` (delivered), ``ack``/``dl`` (terminal), ``rq`` (back to
-    pending). Replay folds the log into the set of live items; a
-    compaction rewrite happens on recovery so the file stays bounded
-    by live-item count, not event count.
+    pending). Replay folds the log into the set of live items; recovery
+    compacts the file to them (one fsynced replace), so it stays
+    bounded by live-item count, not event count.
 
     Writes are group-committed: ``append`` buffers a line (and flushes
     it to the OS) under a short mutex and returns a sequence number;
@@ -195,7 +195,7 @@ class QueueJournal:
     def append(self, ev: dict) -> int:
         """Buffer one event line; returns its commit sequence number."""
         with self._append_mutex:
-            self._fh.write(json.dumps(ev, separators=(",", ":")) + "\n")
+            self._fh.write(_line(ev))
             self._fh.flush()
             self._appended += 1
             return self._appended
@@ -246,49 +246,52 @@ class QueueJournal:
 
     @staticmethod
     def replay(path: str) -> tuple[list[dict], int]:
-        """Fold the journal into (live item records, max journal id).
+        """Fold the journal into (live items, max journal id): each
+        live item's ``enq`` event, ``n`` set to its delivery count.
 
         A record is live when its last event is ``enq``/``rq``
         (pending) or ``get`` (unacked at crash time — the engine never
         acked it, so at-least-once semantics demand redelivery;
         unsafe-persist work acks BEFORE running and therefore can
         never be live here, preserving at-most-once).
+
+        Only the last line may fail to decode (a torn tail write);
+        an earlier one raises rather than drop an ``enq`` or ``ack``.
         """
         state: dict[int, dict] = {}
         max_id = 0
+        torn = None
         if not os.path.exists(path):
             return [], 0
         with open(path, encoding="utf-8") as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
+            for lineno, line in enumerate(fh, 1):
+                if not line.strip():
                     continue
+                if torn is not None:
+                    raise ValueError(f"{path}:{torn}: corrupt journal line")
                 try:
                     ev = json.loads(line)
                 except json.JSONDecodeError:
-                    continue  # torn tail write from the crash
+                    torn = lineno
+                    continue
                 i = ev.get("i", 0)
                 max_id = max(max_id, i)
                 kind = ev.get("ev")
                 if kind == "enq":
-                    state[i] = {
-                        "queue": ev["q"],
-                        "work": ev["w"],
-                        "ttl_s": ev["ttl"],
-                        "wall": ev["wall"],
-                        "delivery_count": ev.get("n", 0),
-                    }
+                    state[i] = ev
                 elif kind == "get" and i in state:
-                    state[i]["delivery_count"] += 1
+                    state[i]["n"] += 1
                 elif kind == "ret" and i in state:
-                    state[i]["delivery_count"] = max(
-                        0, state[i]["delivery_count"] - 1
-                    )
+                    state[i]["n"] = max(0, state[i]["n"] - 1)
                 elif kind in ("ack", "dl") and i in state:
                     del state[i]
                 # "rq" leaves the record as-is: the item returns to
                 # pending with its delivery count intact.
-        return [state[i] | {"jid": i} for i in sorted(state)], max_id
+        return [state[i] for i in sorted(state)], max_id
+
+
+def _line(ev: dict) -> str:
+    return json.dumps(ev, separators=(",", ":")) + "\n"
 
 
 def _committed(fn):
@@ -346,43 +349,26 @@ class WorkQueueTable:
     # -- durability ----------------------------------------------------
 
     def _recover(self, journal_path: str) -> None:
+        """Replay the journal and compact it to the live items' ``enq``
+        lines (original ids, ttl anchors, current delivery counts) in
+        one ``publish``: a crash at any step leaves the old journal or
+        the compacted one, which replay to the same items."""
         from hyppo_worker_spark.model import deserialize_work
 
-        tmp = journal_path + ".tmp"
-        # Crash-during-compaction recovery: the .tmp is the authoritative
-        # pre-compaction state. It exists only if a previous _recover
-        # died between its rename and its final unlink — at that point
-        # the "new" journal holds at most a PARTIAL re-enqueue of the
-        # same live set (no engine ran against it, _recover happens
-        # during construction), so the partial file is discarded and the
-        # .tmp replayed instead. Without this, work not yet re-enqueued
-        # at the crash would be silently lost.
-        if os.path.exists(tmp):
-            if os.path.exists(journal_path):
-                os.remove(journal_path)
-            os.replace(tmp, journal_path)
-        live, _max_id = QueueJournal.replay(journal_path)
-        # Compact: rewrite the journal with only live items (re-logged
-        # as fresh enq events by the enqueue below), then log as
-        # normal.
-        if os.path.exists(journal_path):
-            os.replace(journal_path, tmp)
+        live, max_id = QueueJournal.replay(journal_path)
+        publish(journal_path, "".join(map(_line, live)))
         self._journal = QueueJournal(journal_path)
+        self._jids = itertools.count(max_id + 1)
         now_wall = time.time()
-        for rec in live:
-            item = deserialize_work(rec["work"])
-            remaining = rec["ttl_s"] - (now_wall - rec["wall"])
-            # An already-expired item re-enqueues with ttl 0 so the
-            # next sweep dead-letters it to the expired handlers
-            # (rather than silently vanishing).
-            self.enqueue(
-                item,
-                ttl_s=max(remaining, 0.0),
-                queue=rec["queue"],
-                _delivery_count=rec["delivery_count"],
+        for ev in live:
+            item = deserialize_work(ev["w"])
+            self.ensure(ev["q"], item.resources)
+            # an already-expired item gets ttl 0: the next sweep
+            # dead-letters it rather than it silently vanishing
+            ttl_s = max(ev["ttl"] - (now_wall - ev["wall"]), 0.0)
+            self._queues[ev["q"]].items.append(
+                QueueItem(item, self._clock(), ttl_s, ev["n"], ev["i"])
             )
-        if os.path.exists(tmp):
-            os.remove(tmp)
 
     def _log(self, ev: dict) -> None:
         """Append an event to the journal (no fsync yet) and stage its
@@ -440,11 +426,7 @@ class WorkQueueTable:
 
     @_committed
     def enqueue(
-        self,
-        item: WorkInput,
-        ttl_s: float = 3600.0,
-        queue: str | None = None,
-        _delivery_count: int = 0,
+        self, item: WorkInput, ttl_s: float = 3600.0, queue: str | None = None
     ) -> str:
         name = queue or self.queue_for(item)
         with self._lock:
@@ -453,7 +435,6 @@ class WorkQueueTable:
                 input=item,
                 enqueued_at=self._clock(),
                 ttl_s=ttl_s,
-                delivery_count=_delivery_count,
                 jid=next(self._jids),
             )
             self._queues[name].items.append(qitem)
@@ -467,7 +448,7 @@ class WorkQueueTable:
                         "q": name,
                         "ttl": ttl_s,
                         "wall": time.time(),
-                        "n": _delivery_count,
+                        "n": 0,
                         "w": serialize_work(item),
                     }
                 )

@@ -84,6 +84,16 @@ def flush_python_worker_pools(spark) -> None:
                 continue
 
 
+def _job_group(delivery) -> str:
+    """The Spark job-group id of one delivery ATTEMPT. Per attempt, not
+    per execution: future-jobs cancellation marks the group id
+    cancelled permanently, and a redelivered item keeps its
+    execution_id — reusing the group would kill every retry at
+    submission."""
+    item = delivery.item.input
+    return f"hyppo-exec-{item.execution_id}-a{delivery.item.delivery_count}"
+
+
 def _cancel_job_group(sc, group_id: str) -> None:
     """Cancel a job group, including jobs not yet submitted when the
     JVM supports it (``SparkContext.cancelJobGroupAndFutureJobs``,
@@ -336,11 +346,7 @@ class HyppoEngine:
         # FailureResponse). The slot is then freed, the idempotent item
         # requeued (at-least-once) or the unsafe item failed-not-rerun
         # (at-most-once) — ``TaskFSM.scala:75-84`` semantics.
-        # Group id is per-ATTEMPT, not per-execution: future-jobs
-        # cancellation marks the group id cancelled permanently, and a
-        # redelivered item keeps its execution_id — reusing the group
-        # would kill every retry at submission.
-        group_id = f"hyppo-exec-{item.execution_id}-a{delivery.item.delivery_count}"
+        group_id = _job_group(delivery)
         sc = self.spark.sparkContext
         timed_out = threading.Event()
         op_done = threading.Event()
@@ -534,23 +540,17 @@ class HyppoEngine:
             time.sleep(0.01)
         sc = self.spark.sparkContext
         # Snapshot (slot, delivery) pairs and DERIVE each straggler's
-        # job-group id from its delivery (the same formula _execute
-        # uses). Never re-read slot.current_group in a cancel loop: the
+        # job-group id from its delivery (``_job_group``, as _execute
+        # does). Never re-read slot.current_group in a cancel loop: the
         # slot can unwind and start a redelivered attempt between a
         # liveness check and the group read, and the stale loop would
         # then kill the NEW attempt (observed as a restart-phase
         # failure in the shutdown test).
-        def _group_of(delivery) -> str:
-            item = delivery.item.input
-            return (
-                f"hyppo-exec-{item.execution_id}-a{delivery.item.delivery_count}"
-            )
-
         # Group ids are computed ONCE here: a racing requeue increments
         # the delivery count in place, and a later recompute would name
         # the NEXT attempt's group.
         stragglers = [
-            (s, s.current_delivery, _group_of(s.current_delivery))
+            (s, s.current_delivery, _job_group(s.current_delivery))
             for s in self._slots
             if s.current_delivery is not None
         ]

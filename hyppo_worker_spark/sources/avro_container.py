@@ -23,7 +23,8 @@ zone carries:
   per the FILE's own schema via path-keyed special codecs
   (``avro_schema.special_codecs``), since the Spark types they map to
   encode differently — logical
-  types date (int days) / timestamp-micros (long) / decimal (bytes,
+  types date (int days) / timestamp-micros and timestamp-millis (long,
+  the unit read per site from the file's schema) / decimal (bytes,
   big-endian two's complement), complex types (block-encoded arrays
   and string-keyed maps with zero-count terminators, nested
   records), and nullable sites as the 2-branch union ``[T, "null"]``
@@ -121,6 +122,7 @@ _EPOCH_DATE = _dtmod.date(1970, 1, 1)
 _EPOCH_NAIVE = _dtmod.datetime(1970, 1, 1)
 _EPOCH_UTC = _dtmod.datetime(1970, 1, 1, tzinfo=_dtmod.timezone.utc)
 _MICRO = _dtmod.timedelta(microseconds=1)
+_MILLI = _dtmod.timedelta(milliseconds=1)
 
 
 # Wire value (int days / int micros) -> the Python value both decoders
@@ -189,6 +191,8 @@ def _field_encoder(
         return 1 if nb is None else nb.get(sub, 1)
 
     sp = None if special is None else special.get(path)
+    # timestamp-millis sites count milliseconds, micros sites micros
+    unit = _MILLI if sp is not None and sp[0] == "millis" else _MICRO
     if sp is not None:
         kind, arg = sp
         if kind == "enum":
@@ -250,20 +254,21 @@ def _field_encoder(
             out.extend(zz((v - epoch).days))
         return enc_date
     if isinstance(dt, T.TimestampType):
-        # Avro logical type "timestamp-micros": long = micros since
-        # epoch UTC. Integer arithmetic throughout (datetime.timestamp()
-        # would round-trip through a float).
-        def enc_ts(v, out, zz=zz):
+        # Avro logical type "timestamp-micros" (-millis): long = micros
+        # (millis) since epoch UTC, floored like Java's toEpochMilli.
+        # Integer arithmetic throughout (datetime.timestamp() would
+        # round-trip through a float).
+        def enc_ts(v, out, zz=zz, unit=unit):
             if v.tzinfo is None:
                 delta = v - _EPOCH_NAIVE
             else:
                 delta = v - _EPOCH_UTC
-            out.extend(zz(delta // _MICRO))
+            out.extend(zz(delta // unit))
         return enc_ts
     if isinstance(dt, T.TimestampNTZType):
-        # Avro "local-timestamp-micros": micros since epoch, no zone
-        def enc_tsntz(v, out, zz=zz):
-            out.extend(zz((v - _EPOCH_NAIVE) // _MICRO))
+        # Avro "local-timestamp-micros" (-millis): no zone
+        def enc_tsntz(v, out, zz=zz, unit=unit):
+            out.extend(zz((v - _EPOCH_NAIVE) // unit))
         return enc_tsntz
     if isinstance(dt, T.DecimalType):
         # Avro logical type "decimal" over bytes: big-endian
@@ -433,10 +438,12 @@ def _field_decoder(
         return dec_b
     conv = _FROM_WIRE.get(type(dt))
     if conv is not None:
-        # date (int days) / timestamp-micros / local-timestamp-micros
-        def dec_logical(buf, pos, zz=zz, conv=conv):
+        # date (int days) / [local-]timestamp-micros / -millis (x1000)
+        scale = 1000 if sp is not None and sp[0] == "millis" else 1
+
+        def dec_logical(buf, pos, zz=zz, conv=conv, scale=scale):
             n, pos = zz(buf, pos)
-            return conv(n), pos
+            return conv(n * scale), pos
         return dec_logical
     if isinstance(dt, T.DecimalType):
         scale = dt.scale
@@ -806,7 +813,8 @@ def write_container(
 # -- columnar codec (flat schemas) -----------------------------------------
 
 # Avro wire kind of each flat Spark type. Dates (int days) and the two
-# timestamps (long micros) share the long's zigzag varint.
+# timestamps (long micros) share the long's zigzag varint; a
+# timestamp-millis site is the kind "millis" (a long of milliseconds).
 _FLAT_WIRE: dict[type, str] = {
     T.ByteType: "long",
     T.ShortType: "long",
@@ -831,11 +839,14 @@ def _flat_plan(
     """(wire kind, null byte, value byte) per field when the schema is
     flat — every field a top-level primitive site, no enum/fixed — and
     None otherwise. The null byte is None for a non-union field."""
-    if special or not schema.fields:
+    if not schema.fields:
         return None
     plan = []
     for f in schema.fields:
         kind = _FLAT_WIRE.get(type(f.dataType))
+        sp = (special or {}).get(f.name)
+        if sp is not None:
+            kind = "millis" if sp[0] == "millis" else None
         if kind is None:
             return None
         plan.append((kind, *_field_branches(f, nb)))
@@ -912,7 +923,10 @@ def _field_segments(arr: "pa.Array", kind: str, null_b, val_b) -> list:
         if code == "f":
             segs.append(_fixed_segment(vals, valid))
         else:
-            segs.append(_varint_segment(vals.astype(np.int64), valid))
+            vals = vals.astype(np.int64)
+            if kind == "millis":  # Arrow micros, floored to millis
+                vals = vals // 1000
+            segs.append(_varint_segment(vals, valid))
     return segs
 
 
@@ -1003,6 +1017,7 @@ if b < 0 or q > end:
 
 _VALUE = {
     "long": _VARINT + "\nA(b)",
+    "millis": _VARINT + "\nA(b)",
     "boolean": "A(buf[pos] != 0); pos += 1",
     "float": "A(unpack_f(buf, pos)[0]); pos += 4",
     "double": "A(unpack_d(buf, pos)[0]); pos += 8",
@@ -1087,23 +1102,25 @@ def _check_consumed(end: int, body: bytes) -> None:
 @dataclass
 class _Decoded:
     """One decoded container: ``columns`` (one list per field, wire
-    values for dates and timestamps) for a flat schema, ``rows`` (one
-    dict per record) otherwise."""
+    values for dates and timestamps, wire kinds in ``plan``) for a flat
+    schema, ``rows`` (one dict per record) otherwise."""
 
     schema_json: str
     schema: T.StructType
     codec: str
     columns: list[list] | None = None
     rows: list[dict] | None = None
+    plan: tuple | None = None
 
     def to_rows(self) -> list[dict]:
         if self.columns is None:
             return self.rows
         cols = []
-        for f, col in zip(self.schema.fields, self.columns):
+        for f, col, (kind, *_) in zip(self.schema.fields, self.columns, self.plan):
             conv = _FROM_WIRE.get(type(f.dataType))
+            scale = 1000 if kind == "millis" else 1
             if conv is not None:
-                col = [None if v is None else conv(v) for v in col]
+                col = [None if v is None else conv(v * scale) for v in col]
             cols.append(col)
         names = self.schema.names
         return [dict(zip(names, vals)) for vals in zip(*cols)]
@@ -1113,10 +1130,13 @@ class _Decoded:
 
         if self.columns is None:
             return pa.RecordBatch.from_pylist(self.rows, schema=arrow_schema)
-        return pa.RecordBatch.from_arrays(
-            [pa.array(c, type=f.type) for c, f in zip(self.columns, arrow_schema)],
-            schema=arrow_schema,
-        )
+        arrays = []
+        for c, f, (kind, *_) in zip(self.columns, arrow_schema, self.plan):
+            if kind == "millis":  # exact ms -> us widening
+                arrays.append(pa.array(c, pa.timestamp("ms", f.type.tz)).cast(f.type))
+            else:
+                arrays.append(pa.array(c, type=f.type))
+        return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
 
 def _decode(data) -> _Decoded:
@@ -1141,8 +1161,8 @@ def _decode(data) -> _Decoded:
     special = special_codecs(schema_json)
     sync = bytes(buf[pos : pos + 16])
     blocks = _blocks(buf, pos + 16, codec, sync)
-    out = _Decoded(schema_json, schema, codec)
     plan = _flat_plan(schema, null_branch, special)
+    out = _Decoded(schema_json, schema, codec, plan=plan)
     if plan is not None:
         decode = _flat_decoder(plan)
         out.columns = [[] for _ in plan]

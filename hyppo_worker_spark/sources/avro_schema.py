@@ -230,9 +230,12 @@ def special_codecs(schema_json: str | dict) -> dict[str, tuple]:
     raw bytes with NO length prefix. A decoder built purely from the
     Spark schema misreads both; the container reader consults this
     map (same path convention as ``null_branch_indices``) to build
-    the spec-correct decoder per site.
+    the spec-correct decoder per site. Likewise a ``timestamp-millis``
+    or ``local-timestamp-millis`` long maps to the same timestamp type
+    as its micros twin but counts milliseconds.
 
-    Values: ``("enum", [symbols...])`` or ``("fixed", size)``."""
+    Values: ``("enum", [symbols...])``, ``("fixed", size)``,
+    ``("fixed-decimal", (size, scale))`` or ``("millis", None)``."""
     avro = inline_named_types(schema_json)
     out: dict[str, tuple] = {}
 
@@ -259,6 +262,10 @@ def special_codecs(schema_json: str | dict) -> dict[str, tuple]:
                     )
                 else:
                     out[path] = ("fixed", int(node["size"]))
+            elif node.get("logicalType") in (
+                "timestamp-millis", "local-timestamp-millis"
+            ):
+                out[path] = ("millis", None)
             elif kind == "record":
                 for f in node.get("fields", []):
                     sub = f"{path}.{f['name']}" if path else f["name"]

@@ -30,6 +30,7 @@ from hyppo_worker_spark.model import (
     RemoteProcessedDataFile,
     RemoteRawDataFile,
     RemoteStorageLocation,
+    sanitize_name,
 )
 
 
@@ -61,31 +62,25 @@ class StorageLayout:
     def raw_key(self, task: DataIngestionTask, index: int) -> str:
         job = task.job
         return (
-            f"{self.prefix}/{_sanitize(job.source.name)}/{self._date(task)}/"
+            f"{self.prefix}/{sanitize_name(job.source.name)}/{self._date(task)}/"
             f"job-{job.id}/raw/task-{task.task_number}/data-{index}.raw.gz"
         )
 
     def records_key(self, task: DataIngestionTask, ext: str = "parquet") -> str:
         job = task.job
         return (
-            f"{self.prefix}/{_sanitize(job.source.name)}/{self._date(task)}/"
+            f"{self.prefix}/{sanitize_name(job.source.name)}/{self._date(task)}/"
             f"job-{job.id}/records/task-{task.task_number}/data.{ext}"
         )
 
     def log_key(self, job, execution_id: str) -> str:
         return (
-            f"{self.prefix}/{_sanitize(job.source.name)}/{self._date(job)}/"
+            f"{self.prefix}/{sanitize_name(job.source.name)}/{self._date(job)}/"
             f"ingestion-job-{job.id}/log/{execution_id}.out"
         )
 
     def loc(self, key: str) -> RemoteStorageLocation:
         return RemoteStorageLocation(self.bucket, key)
-
-
-def _sanitize(name: str) -> str:
-    """Queue/key-safe name: whitespace → '_', '.' → '-'
-    (parity with ``QueueNaming.scala:107-112``)."""
-    return name.strip().replace(".", "-").replace(" ", "_")
 
 
 class DataFileHandler:

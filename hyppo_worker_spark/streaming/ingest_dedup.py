@@ -14,19 +14,17 @@ Per micro-batch (foreachBatch; each step is a DataFrame program):
    against the index — the admitted corpus text is never re-read or
    re-hashed; any batch doc matching an admitted doc is rejected;
 5. exact dup AGAINST the corpus: content digests join the admitted
-   digest log (same append-only layout);
-6. append the survivors' rows to the corpus sink and their frames to
-   the index.
-
-Batch replays (at-least-once delivery after a crash) are absorbed by
-a started-marker guard, ack-early like ``IdempotentBatchSink`` —
-admission is never re-run, so a replayed batch cannot reject ITSELF
-against the index entries it already wrote.
+   digest log;
+6. append ONE generation segment (``generations.py``) of the
+   survivors' corpus rows, digests and index frames; its flip carries
+   the batch id, so delivery is exactly once: a replay before the
+   flip re-runs admission against the pre-batch store (never its own
+   half-written rows), a replay after it is a no-op.
 
 Scale: each batch's work is proportional to the batch (broadcast
-banding rows, candidate-only shingle pulls); the per-batch index
-append is a pure parquet append (no read-modify-write). The index
-grows with admitted docs only — rejected near-dups never enter it.
+banding rows, candidate-only shingle pulls); the append writes only
+the batch's rows. The index grows with admitted docs only — rejected
+near-dups never enter it.
 """
 
 from __future__ import annotations
@@ -36,6 +34,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hyppo_worker_spark.generations import Generations
 from hyppo_worker_spark.operators.dedup import (
     connected_components_adaptive,
     minhash_lsh_pairs,
@@ -62,17 +61,15 @@ class DedupIngestSink:
         self.id_col = id_col
         self.text_col = text_col
         self.threshold = threshold
+        # corpus, digest log and index frames share one generation table
+        self.gens = Generations(base_dir)
         self.index = MinHashLshIndex(
-            os.path.join(base_dir, "index"),
-            num_hashes=num_hashes,
-            bands=bands,
-            shingle_n=shingle_n,
+            base_dir, num_hashes=num_hashes, bands=bands, shingle_n=shingle_n
         )
-        self.corpus_dir = os.path.join(base_dir, "corpus")
-        self.digest_dir = os.path.join(base_dir, "digests")
-        self.marker_dir = os.path.join(base_dir, "markers")
-        os.makedirs(self.marker_dir, exist_ok=True)
         self.admitted_counts: list[tuple[int, int, int]] = []  # (batch, in, kept)
+
+    def corpus(self) -> DataFrame:
+        return self.gens.read(self.spark, "corpus")
 
     # -- admission ----------------------------------------------------------
 
@@ -104,10 +101,10 @@ class DedupIngestSink:
     def _reject_against_corpus(self, survivors: DataFrame) -> DataFrame:
         """Drop batch docs that duplicate anything already admitted."""
         idc, txt = self.id_col, self.text_col
-        if not self.index.exists():
+        if not self.gens.exists():
             return survivors
         # exact: digest membership in the admitted digest log
-        digests = self.spark.read.parquet(self.digest_dir)
+        digests = self.gens.read(self.spark, "digests")
         survivors = survivors.join(
             digests.withColumnRenamed("h", "_h"),
             F.md5(F.col(txt)) == F.col("_h"),
@@ -125,31 +122,32 @@ class DedupIngestSink:
         return survivors.join(matched, idc, "left_anti")
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(self.marker_dir, f"batch-{batch_id}.started")
-        if os.path.exists(marker):
+        if self.gens.done(batch_id):
             return
-        with open(marker, "w") as f:
-            f.write("started")
-
         idc, txt = self.id_col, self.text_col
         n_in = batch_df.count()
         if n_in == 0:
+            self.gens.ack(batch_id)
             return
         survivors = self._reject_against_corpus(
             self._survivors_within_batch(batch_df)
         )
-        # Pin the admitted set before the three writes below so all of
-        # them see the SAME rows (plans re-executing against a growing
-        # index would not).
+        # Pin the admitted set so the segment's writes see the SAME rows
         survivors = survivors.localCheckpoint(eager=True)
         n_kept = survivors.count()
-        if n_kept > 0:
-            survivors.write.mode("append").parquet(self.corpus_dir)
-            survivors.select(F.md5(F.col(txt)).alias("h")).write.mode(
-                "append"
-            ).parquet(self.digest_dir)
+        if n_kept == 0:
+            self.gens.ack(batch_id)
+        else:
             sh, band = self.index.compute_frames(survivors, idc, txt)
-            self.index.append(sh, band)
+
+            def fill(out: str) -> None:
+                survivors.write.parquet(os.path.join(out, "corpus"))
+                survivors.select(F.md5(F.col(txt)).alias("h")).write.parquet(
+                    os.path.join(out, "digests")
+                )
+                self.index.write(out, sh, band)
+
+            self.gens.append(fill, batch_id)
         self.admitted_counts.append((batch_id, n_in, n_kept))
 
 

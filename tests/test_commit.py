@@ -102,7 +102,7 @@ def test_recover_keeps_table_when_newest_old_is_marked(
 
 def test_recover_mid_swap_restores_table(spark, tmp_path, monkeypatch):
     # crash mid-swap of a bucketed commit: bucket 0's new generation is
-    # renamed in, bucket 1's is still in the staging dir
+    # renamed in, bucket 1's is still in the write's output dir
     root = str(tmp_path / "t")
     rows = "tag string, bucket int"
     Generations(root).commit(
@@ -127,9 +127,9 @@ def test_recover_mid_swap_restores_table(spark, tmp_path, monkeypatch):
                 batch, 5, partition_by=["bucket"], split=True
             )
     assert os.path.isdir(os.path.join(root, "bucket=0", "g-2"))
-    assert os.path.isdir(os.path.join(root, "_w-2"))
+    assert os.path.isdir(os.path.join(root, "g-2"))
     crashed = _parts(os.path.join(root, "bucket=0", "g-2")) | _parts(
-        os.path.join(root, "_w-2")
+        os.path.join(root, "g-2")
     )
 
     gens = Generations(root)
@@ -138,10 +138,10 @@ def test_recover_mid_swap_restores_table(spark, tmp_path, monkeypatch):
     gens.commit(batch, 5, partition_by=["bucket"], split=True)
     assert _tags(spark, gens) == ["post-0", "post-1", "pre-2"]
     assert not crashed & _parts(root)
-    assert not os.path.exists(os.path.join(root, "_w-2"))
-    assert gens.pointer()["parts"] == {
-        "bucket=0": 2, "bucket=1": 2, "bucket=2": 1,
-    }
+    assert not os.path.exists(os.path.join(root, "g-2"))
+    assert sorted(gens.pointer()["segments"]) == [
+        "bucket=0/g-2", "bucket=1/g-2", "bucket=2/g-1",
+    ]
 
 
 def test_recover_generation_order_is_numeric(spark, tmp_path, monkeypatch):
@@ -162,7 +162,7 @@ def test_recover_generation_order_is_numeric(spark, tmp_path, monkeypatch):
 
     gens = Generations(root)
     assert gens.done(9) and not gens.done(10)
-    assert gens.current() == os.path.join(root, "g-10")
+    assert gens.paths() == [os.path.join(root, "g-10")]
     assert _tags(spark, gens) == ["batch-9"]  # not g-9's, not g-11's
     gens.commit(_tagged(spark, "batch-10"), 10)  # the replay
     assert _tags(spark, gens) == ["batch-10"]

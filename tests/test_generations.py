@@ -1,12 +1,13 @@
 """Crash drill for the generation commit (``generations.py``).
 
-Every maintained table — the HLL/CMS/KMV sketch sinks, the SCD2
-dimension, the incremental-CC state in both layouts and the index
-zones — commits by writing a generation and flipping one pointer. The
-drill fails the k-th filesystem step of one commit, for every k (the
-Spark write, each makedirs/rename/remove/rmtree, the pointer fsync and
-the pointer replace), lets the failure propagate out of the sink or
-zone, and then replays on a FRESH sink or zone built from disk:
+Every durable table — the HLL/CMS/KMV sketch sinks, the SCD2
+dimension, the incremental-CC state in both layouts, the index zones,
+the LSH index and the dedup sink's store — commits by writing a
+segment and flipping one pointer. The drill fails the k-th filesystem
+step of one commit, for every k (each Spark write, each
+makedirs/rename/remove/rmtree, the pointer fsync and the pointer
+replace), lets the failure propagate out of the sink or zone, and
+then replays on a FRESH sink or zone built from disk:
 
 - until the flip, every reader sees the pre-batch table; from the flip
   on, the batch is applied and acked;
@@ -88,16 +89,18 @@ def _data_files(root: str) -> set[str]:
     }
 
 
-def _entries(root: str) -> set[str]:
-    """Top-level names under ``root``, with each partition directory
-    expanded to its generations (``bucket=3/g-7``)."""
+def _entries(root: str, rel: str = "") -> set[str]:
+    """The names under ``root``, with each non-empty partition or frame
+    directory expanded down to its segments (``bucket=3/g-7``,
+    ``banded/band_pt=1/g-2``)."""
     out = set()
-    for name in os.listdir(root):
-        path = os.path.join(root, name)
-        if "=" in name and os.path.isdir(path):
-            out |= {f"{name}/{g}" for g in os.listdir(path)}
+    for name in os.listdir(os.path.join(root, rel)):
+        sub = os.path.join(rel, name)
+        path = os.path.join(root, sub)
+        if os.path.isdir(path) and not name.startswith("g-") and os.listdir(path):
+            out |= _entries(root, sub)
         else:
-            out.add(name)
+            out.add(sub)
     return out
 
 
@@ -154,7 +157,7 @@ def test_superseded_generation_readable_until_next_commit(spark, tmp_path):
     gens = Generations(str(tmp_path / "t"))
     gens.commit(spark.range(3))
     old = gens.read(spark)
-    old_dir = gens.current()
+    (old_dir,) = gens.paths()
     gens.commit(spark.range(5))
     assert sorted(r.id for r in old.collect()) == [0, 1, 2]
     assert gens.read(spark).count() == 5
@@ -177,9 +180,9 @@ def test_split_read_mixes_generations_and_prunes(spark, tmp_path):
         rows.filter("bucket = 2").withColumn("id", F.col("id") + 100),
         partition_by=["bucket"], split=True,
     )
-    assert gens.pointer()["parts"] == {
-        "bucket=0": 1, "bucket=1": 1, "bucket=2": 2, "bucket=3": 1,
-    }
+    assert sorted(gens.pointer()["segments"]) == [
+        "bucket=0/g-1", "bucket=1/g-1", "bucket=2/g-2", "bucket=3/g-1",
+    ]
     got = {(r.id, r.bucket) for r in gens.read(spark).collect()}
     assert got == {
         (i + 100 * (i % 4 == 2), i % 4) for i in range(40)
@@ -238,7 +241,8 @@ def test_sketch_sink_drill_exactly_once(spark, tmp_path, monkeypatch):
     def applied():
         assert total_events() == 33
         gens = Generations(root)
-        assert gens.current().endswith("g-11") and gens.last_batch() == 10
+        assert gens.paths() == [os.path.join(root, "g-11")]
+        assert gens.last_batch() == 10
 
     n_steps = _drill(
         monkeypatch, base, root,
@@ -390,7 +394,9 @@ def test_cc_bucketed_drill_new_bucket(spark, tmp_path, monkeypatch):
     want = _cc_full(seen + edge)
 
     def crashed(flipped):
-        parts = Generations(root).pointer()["parts"]
+        parts = {
+            os.path.dirname(s) for s in Generations(root).pointer()["segments"]
+        }
         assert (new_part in parts) == flipped
         assert _cc_state(sink()) == (want if flipped else pre)
 
@@ -465,7 +471,7 @@ def test_cc_empty_flat_table_survives_failed_batch(spark, tmp_path, monkeypatch)
             spark.createDataFrame([], "node long, comp long")
         )
     assert not any(
-        n == "_SUCCESS" for n in os.listdir(Generations(root).current())
+        n == "_SUCCESS" for n in os.listdir(*Generations(root).paths())
     )
     want = _cc_full([(1, 2)])
 
@@ -514,14 +520,14 @@ def test_zone_compaction_drill(spark, tmp_path, monkeypatch):
         index().admit(spark, _corpus(spark, n=5, tag=tag))
     root = index().zone.path
     drift = {tuple(r) for r in index().drift_report(spark).collect()}
-    n_before = dataset_file_stats(Generations(root).current())["n_files"]
+    n_before = dataset_file_stats(*Generations(root).paths())["n_files"]
 
     def crashed(flipped):
         assert {tuple(r) for r in index().drift_report(spark).collect()} == drift
 
     def applied():
         assert {tuple(r) for r in index().drift_report(spark).collect()} == drift
-        assert dataset_file_stats(Generations(root).current())["n_files"] < n_before
+        assert dataset_file_stats(*Generations(root).paths())["n_files"] < n_before
 
     n_steps = _drill(
         monkeypatch, base, root,
@@ -529,3 +535,213 @@ def test_zone_compaction_drill(spark, tmp_path, monkeypatch):
         crashed, applied,
     )
     assert n_steps == 3  # the write, the pointer fsync + replace
+
+
+# ---- appends: index zone, LSH index, dedup sink -------------------------
+
+
+def _append_drill(monkeypatch, base: str, root: str, run, rows) -> int:
+    """Crash one append ``run()`` (no batch id, so not idempotent) at
+    every step k, each time from a copy of the pre-append ``base``:
+    ``rows()`` reads the pre-append rows until the flip and the
+    post-append rows from it on — never a partial append — and after a
+    crash before the flip, a retry appends exactly once and leaves none
+    of the crashed attempt's files. Returns the number of steps."""
+    template = base + ".pre"
+    shutil.copytree(base, template)
+    pre_seq = Generations(root).pointer()["seq"]
+    pre = rows()
+    run()
+    post = rows()
+    assert post != pre
+    k = 0
+    while True:
+        k += 1
+        shutil.rmtree(base)
+        shutil.copytree(template, base)
+        if _run_crashing_at(monkeypatch, root, k, run):
+            assert rows() == post
+            return k - 1
+        if Generations(root).pointer()["seq"] != pre_seq:
+            assert rows() == post, f"k={k}"
+            continue
+        assert rows() == pre, f"k={k}: partial append visible"
+        left = {
+            f for f in _data_files(root)
+            if not any(f.startswith(p + os.sep) for p in Generations(root).paths())
+        }
+        run()  # the retry
+        assert rows() == post, f"k={k}"
+        assert not left & _data_files(root), f"k={k}: crash leftovers survived"
+
+
+def test_zone_append_drill(spark, tmp_path, monkeypatch):
+    """An IVF-PQ admission appends one cell-partitioned segment: a
+    crash at any step shows the pre-admission zone, never part of the
+    batch, and the retry admits it once."""
+    from hyppo_worker_spark.operators.ivfpq import IvfPqIndex
+
+    def corpus(n, tag):
+        return spark.createDataFrame(
+            [
+                (tag * 1000 + i, [float((i * 7 + j) % 5 + (i % 3) * 4) for j in range(8)])
+                for i in range(n)
+            ],
+            "vec_id long, embedding array<double>",
+        )
+
+    base = str(tmp_path / "pq")
+
+    def index():
+        return IvfPqIndex(base, n_cells=3, m=2, k=4, dim=8, n_iter=2)
+
+    index().train(corpus(40, 0))
+    root = index().zone.path
+
+    def rows():
+        return sorted(map(tuple, index().zone.read(spark).collect()))
+
+    n_steps = _append_drill(
+        monkeypatch, base, root,
+        lambda: index().admit(spark, corpus(6, 1)), rows,
+    )
+    assert Generations(root).is_split()  # cells sit above the segments
+    assert n_steps >= 4  # the write, a rename per cell, fsync, replace
+
+
+def _text(prefix: str, n: int = 60, changed: int = 0) -> str:
+    words = [f"{prefix}{i:03d}" for i in range(n)]
+    for j in range(changed):
+        words[10 + 7 * j] = f"chg{prefix}{j}"
+    return " ".join(words)
+
+
+def test_lsh_append_drill(spark, tmp_path, monkeypatch):
+    """An LSH admission writes both frames into one segment (banding
+    rows lifted into their band_pt dirs): a crash at any step shows
+    neither frame's new rows, and the retry admits them once."""
+    from hyppo_worker_spark.operators.lsh_index import MinHashLshIndex
+
+    base = str(tmp_path / "lsh")
+    docs = spark.createDataFrame(
+        [(f"d{i}", _text(f"w{i}")) for i in range(4)],
+        "doc_id string, text string",
+    )
+    idx = MinHashLshIndex(base)
+    idx.append(*idx.compute_frames(docs.filter("doc_id < 'd2'"), "doc_id", "text"))
+    new = idx.compute_frames(docs.filter("doc_id >= 'd2'"), "doc_id", "text")
+
+    def rows():
+        sh, band = MinHashLshIndex(base).load(spark)
+        return (
+            sorted((r.did, tuple(r.sh)) for r in sh.collect()),
+            sorted(map(tuple, band.collect())),
+        )
+
+    n_steps = _append_drill(
+        monkeypatch, base, base, lambda: MinHashLshIndex(base).append(*new), rows
+    )
+    assert n_steps >= 7  # 2 writes, renames, rmtree, fsync, replace
+
+
+def test_dedup_sink_drill_exactly_once(spark, tmp_path, monkeypatch):
+    """One dedup admission batch writes its corpus rows, digests and
+    both index frames as one segment acked by one flip. A crash at any
+    step leaves the pre-batch store; the replay admits the batch
+    exactly once (its survivor is not rejected against its own
+    half-written index rows) and a second replay commits nothing."""
+    from collections import Counter
+
+    from hyppo_worker_spark.streaming.ingest_dedup import DedupIngestSink
+
+    base = str(tmp_path / "dd")
+
+    def sink():
+        return DedupIngestSink(spark, base)
+
+    def batch(rows):
+        return spark.createDataFrame(rows, "doc_id string, text string")
+
+    sink()(batch([("a1", _text("alpha")), ("b1", _text("beta"))]), 0)
+    b1 = batch([
+        ("a2", _text("alpha", changed=2)),  # near-dup of admitted a1
+        ("c1", _text("gamma")),  # the survivor
+        ("c9", _text("gamma")),  # exact dup of c1 inside the batch
+    ])
+
+    def store():
+        s = sink()
+        sh, band = s.index.load(spark)
+        return (
+            sorted(r.doc_id for r in s.corpus().collect()),
+            len(s.gens.read(spark, "digests").collect()),
+            sorted(r.did for r in sh.collect()),
+            sorted(Counter(r.did for r in band.collect()).items()),
+        )
+
+    def admitted(ids):
+        return (
+            ids, len(ids), ids, [(i, 6) for i in ids],  # 6 bands a doc
+        )
+
+    pre, post = admitted(["a1", "b1"]), admitted(["a1", "b1", "c1"])
+    assert store() == pre
+
+    def crashed(flipped):
+        assert store() == (post if flipped else pre)
+
+    def applied():
+        assert store() == post
+        assert Generations(base).last_batch() == 1
+
+    n_steps = _drill(
+        monkeypatch, base, base, lambda: sink()(b1, 1), crashed, applied
+    )
+    # 4 writes, a rename per frame dir, rmtree, fsync, replace
+    assert n_steps >= 10
+
+
+def test_admission_ledger_drill(spark, tmp_path, monkeypatch):
+    """A streaming IVF admission trigger appends its admitted rows and
+    its ledger slice as one segment acked with the batch id: a crash at
+    any step shows the pre-trigger ledger, the replay folds the batch in
+    exactly once, and a replay of an acked trigger is a no-op."""
+    from hyppo_worker_spark.operators.index_zone import AdmissionLedger
+    from hyppo_worker_spark.operators.ivf_index import IvfIndex
+
+    def corpus(n, tag):
+        return spark.createDataFrame(
+            [(tag * 1000 + i, [float(1 + (i % 2) * 10 + j) for j in range(4)])
+             for i in range(n)],
+            "vec_id long, embedding array<double>",
+        )
+
+    base = str(tmp_path / "adm")
+    idx = IvfIndex(os.path.join(base, "ivf"), n_centroids=4, n_iter=2)
+    idx.train(corpus(40, 0))
+
+    def ledger():
+        return AdmissionLedger(
+            spark, base, idx.zone, lambda b: idx.assign(spark, b), 500
+        )
+
+    ledger().admit(corpus(6, 1), 0)
+    root = ledger().gens.root
+
+    def cumulative():  # (batch_seq, total admitted so far) per trigger
+        got = {}
+        for r in ledger().read():
+            got[r.batch_seq] = got.get(r.batch_seq, 0) + r.n_admitted_cum
+        return sorted(got.items())
+
+    def crashed(flipped):
+        assert cumulative() == ([(0, 6), (1, 10)] if flipped else [(0, 6)])
+
+    def applied():
+        assert cumulative() == [(0, 6), (1, 10)]
+
+    n_steps = _drill(
+        monkeypatch, base, root,
+        lambda: ledger().admit(corpus(4, 2), 1), crashed, applied,
+    )
+    assert n_steps >= 7  # 2 writes, 2 renames, rmtree, fsync, replace

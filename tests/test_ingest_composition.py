@@ -73,7 +73,7 @@ def test_connector_stream_feeds_admission(registered, tmp_path):
     )
     _drain(registered, task_log, sink, ckpt)
 
-    corpus = registered.read.parquet(os.path.join(sink.corpus_dir))
+    corpus = sink.corpus()
     kept = sorted(r.doc_id for r in corpus.select("doc_id").collect())
     assert kept == ["a1", "b1", "c1"]
 

@@ -73,7 +73,7 @@ def test_streaming_ingest_admits_first_arrivals_only(
     q = dedup_ingest(stream, sink, str(tmp_path / "ckpt"))
     q.awaitTermination(240)
 
-    corpus = spark.read.parquet(os.path.join(base, "corpus"))
+    corpus = sink.corpus()
     kept = sorted(r.doc_id for r in corpus.select("doc_id").collect())
     assert kept == ["a1", "b1", "c1", "d1"]
 
@@ -97,14 +97,14 @@ def test_replayed_batch_is_noop(spark, tmp_path, staged_source):
         "doc_id string, text string",
     )
     sink(b0, 0)
-    n1 = spark.read.parquet(os.path.join(base, "corpus")).count()
+    n1 = sink.corpus().count()
     assert n1 == 1  # in-batch near-dup collapsed
     sink(b0, 0)  # at-least-once replay of the SAME batch id
-    n2 = spark.read.parquet(os.path.join(base, "corpus")).count()
+    n2 = sink.corpus().count()
     assert n2 == n1
 
     # a NEW batch id with previously-admitted content is rejected by
-    # the corpus checks (not the marker): same text, different ids
+    # the corpus checks (not the batch ack): same text, different ids
     b1 = spark.createDataFrame(
         [("y1", _text("xi")), ("y2", _text("xi", changed=3))],
         "doc_id string, text string",
@@ -112,15 +112,16 @@ def test_replayed_batch_is_noop(spark, tmp_path, staged_source):
     sink(b1, 1)
     kept = sorted(
         r.doc_id
-        for r in spark.read.parquet(os.path.join(base, "corpus")).collect()
+        for r in sink.corpus().collect()
     )
     assert kept == ["x1"]
 
 
 def test_banded_index_is_partition_pruned(spark, tmp_path):
-    """The banded/ frame is directory-partitioned by band_pt and a
-    probe's scan is statically pruned to the probe's own partitions;
-    pruned and unpruned probes return identical pairs."""
+    """The banded frame is directory-partitioned by band_pt and a
+    probe's scan is statically pruned to the probe's own partitions,
+    also when the index spans several segments; pruned and unpruned
+    probes return identical pairs."""
     from hyppo_worker_spark.operators.lsh_index import MinHashLshIndex
     from hyppo_worker_spark.plans.explain import formatted_plan
 
@@ -129,7 +130,9 @@ def test_banded_index_is_partition_pruned(spark, tmp_path):
         [(f"doc{i}", _text(f"w{i}")) for i in range(30)],
         "doc_id string, text string",
     )
-    idx.append(*idx.compute_frames(corpus, "doc_id", "text"))
+    for half in ("doc_id < 'doc2'", "doc_id >= 'doc2'"):  # two segments
+        idx.append(*idx.compute_frames(corpus.filter(half), "doc_id", "text"))
+    assert len(idx.gens.paths("shingles")) == 2
 
     # layout: band_pt=N directories, each file sorted by band_key
     banded_dir = os.path.join(str(tmp_path / "idx"), "banded")

@@ -56,13 +56,15 @@ def test_train_persists_and_reload_assigns_like_retrain(spark, tmp_path):
 def test_admit_appends_without_rewriting(spark, tmp_path):
     idx = IvfIndex(str(tmp_path / "ivf"), n_centroids=4, n_iter=2)
     idx.train(_corpus(spark))
-    asg_dir = idx.zone.gens.current()  # appends land in this generation
-    before = {
-        p: os.path.getmtime(p)
-        for p in glob.glob(os.path.join(asg_dir, "*.parquet"))
-    }
+    def files():  # the zone's live segments (an admission adds one)
+        return {
+            p for seg in idx.zone.gens.paths()
+            for p in glob.glob(os.path.join(seg, "*.parquet"))
+        }
+
+    before = {p: os.path.getmtime(p) for p in files()}
     idx.admit(spark, _corpus(spark, n=10, tag=5))
-    after = set(glob.glob(os.path.join(asg_dir, "*.parquet")))
+    after = files()
     # append-only: every pre-admission file survives untouched
     for p, mt in before.items():
         assert p in after and os.path.getmtime(p) == mt
@@ -281,8 +283,8 @@ def test_compact_assignments_preserves_counts_and_drift(spark, tmp_path):
     idx.train(_corpus(spark))
     for tag in range(2, 10):
         idx.admit(spark, _corpus(spark, n=5, tag=tag))
-    def n_files():  # the zone's current generation
-        return dataset_file_stats(idx.zone.gens.current())["n_files"]
+    def n_files():  # the zone's live segments
+        return dataset_file_stats(*idx.zone.gens.paths())["n_files"]
 
     before_files = n_files()
     before = {

@@ -31,7 +31,8 @@ def test_train_persists_cell_partitioned_codes(spark, tmp_path):
     )
     idx.train(_corpus(spark))
     assert idx.exists()
-    cell_dirs = glob.glob(os.path.join(idx.zone.gens.current(), "cell=*"))
+    cell_dirs = {os.path.dirname(p) for p in idx.zone.gens.paths()}
+    assert all(os.path.basename(d).startswith("cell=") for d in cell_dirs)
     assert len(cell_dirs) >= 2  # two separable clusters -> >= 2 lists
     # every vector carries exactly m codes
     rid = IvfPqIndex(
@@ -129,10 +130,13 @@ def test_compact_codes_keeps_partitioning_and_search(spark, tmp_path):
     q = corpus.filter(F.col("vec_id") < 4)
     before = {tuple(r) for r in idx.search(spark, q, topk=3).collect()}
     idx.zone.compact(spark)
-    codes_dir = idx.zone.gens.current()
-    cell_dirs = glob.glob(os.path.join(codes_dir, "cell=*"))
+    segments = idx.zone.gens.paths()  # cell=<c>/g-<n>, one per cell
+    cell_dirs = [
+        p for p in segments
+        if os.path.basename(os.path.dirname(p)).startswith("cell=")
+    ]
     assert cell_dirs, "hive partitioning lost by compaction"
-    assert dataset_file_stats(codes_dir)["n_files"] >= len(cell_dirs)
+    assert dataset_file_stats(*segments)["n_files"] >= len(cell_dirs)
     after_df = idx.search(spark, q, topk=3)
     after = {tuple(r) for r in after_df.collect()}
     assert after == before

@@ -11,6 +11,10 @@ from hyppo_worker_spark.scheduler.scheduler import EngineConfig, HyppoEngine
 from tests.fixtures import ProcessedDataStub
 
 
+class Crash(Exception):
+    """The injected failure."""
+
+
 def _item(source="S"):
     stub = ProcessedDataStub()
     details = stub.details()
@@ -171,30 +175,85 @@ def test_poison_crash_loop_dead_letters_after_max(spark, storage, tmp_path):
     assert eng2.run_until_idle() == 0
 
 
-def test_recovery_crash_mid_compaction_loses_nothing(tmp_path):
-    """A crash between _recover's rename and its final unlink leaves
-    journal.tmp holding the authoritative state and a partial rewrite
-    in the journal; the next recovery must replay the .tmp, not the
-    partial file."""
+def test_recovery_crash_mid_compaction_loses_nothing(tmp_path, monkeypatch):
+    """A crash right after any filesystem step of a real _recover (the
+    fsync of the compacted copy, its replace over the journal) leaves
+    the old journal or the compacted one; the next recovery redelivers
+    every live item exactly once, under its original journal id and
+    delivery count, and leaves no temp file behind."""
     import os
+    import shutil
 
     path = str(tmp_path / "queue.journal")
     q1 = WorkQueueTable(journal_path=path)
     name = q1.enqueue(_item())
-    q1.enqueue(_item(), queue=name)
+    for _ in range(2):
+        q1.enqueue(_item(), queue=name)
+    q1.ack(q1.basic_get(name))  # acked: never redelivered
+    in_flight = q1.basic_get(name).item  # unacked at the crash
+    pending = q1._queues[name].items[0]
+    want = [(in_flight.jid, 2), (pending.jid, 1)]
     q1.close_journal()
+    shutil.copy(path, path + ".pre")
 
-    # simulate the crashed compaction: rename to .tmp, write a partial
-    # rewrite containing only the first live item's line
-    os.replace(path, path + ".tmp")
-    with open(path + ".tmp") as fh:
-        first_line = fh.readline()
+    k = 0
+    while True:
+        k += 1
+        shutil.copy(path + ".pre", path)
+        steps = 0
+
+        def counted(real):
+            def wrapped(*a, **kw):
+                nonlocal steps
+                out = real(*a, **kw)
+                steps += 1
+                if steps == k:
+                    raise Crash(k)
+                return out
+
+            return wrapped
+
+        with monkeypatch.context() as m:
+            for fn in ("fsync", "replace"):
+                m.setattr(os, fn, counted(getattr(os, fn)))
+            try:
+                WorkQueueTable(journal_path=path).close_journal()
+                break  # k is past the last step
+            except Crash:
+                pass
+        q2 = WorkQueueTable(journal_path=path)
+        assert q2.details(name).ready == 2  # nothing lost
+        assert not os.path.exists(path + ".tmp")  # compaction completed
+        got = sorted(
+            (d.item.jid, d.item.delivery_count)
+            for d in (q2.basic_get(name), q2.basic_get(name))
+        )
+        assert got == want, f"k={k}"
+        assert q2.basic_get(name) is None, f"k={k}: redelivered twice"
+        q2.close_journal()
+    assert k - 1 == 2  # the compacted copy's fsync, its replace
+
+
+def test_journal_corrupt_middle_line_raises(tmp_path):
+    """A line that does not decode is tolerated only as the torn tail
+    of a crashed append: anywhere earlier it would silently drop an
+    ``enq`` or an ``ack``, so recovery refuses the journal."""
+    import pytest
+
+    path = str(tmp_path / "queue.journal")
+    q1 = WorkQueueTable(journal_path=path)
+    name = q1.enqueue(_item())
+    q1.ack(q1.basic_get(name))
+    q1.close_journal()
+    with open(path) as fh:
+        enq, get, ack = fh.readlines()
     with open(path, "w") as fh:
-        fh.write(first_line)
-
-    q2 = WorkQueueTable(journal_path=path)
-    assert q2.details(name).ready == 2  # nothing lost
-    assert not os.path.exists(path + ".tmp")  # compaction completed
+        fh.write(enq + get + ack[: len(ack) // 2] + "\n" + ack)
+    with pytest.raises(ValueError, match="corrupt journal line"):
+        WorkQueueTable(journal_path=path)
+    with open(path, "w") as fh:  # the same bytes as a torn tail are fine
+        fh.write(enq + get + ack[: len(ack) // 2])
+    assert WorkQueueTable(journal_path=path).details(name).ready == 1
 
 
 def test_contention_bounce_does_not_consume_poison_budget(tmp_path):

@@ -13,14 +13,14 @@ def test_compact_small_files(spark, tmp_path):
     gens.commit(spark.range(10000).select(
         "id", (F.col("id") % 7).alias("k"), F.rand(1).alias("v")
     ).repartition(64))
-    before = dataset_file_stats(gens.current())
+    before = dataset_file_stats(*gens.paths())
     assert before["n_files"] >= 64
 
     total_before = gens.read(spark).count()
     sum_before = gens.read(spark).agg(F.sum("id")).first()[0]
 
     report = compact(spark, p, target_file_bytes=before["total_bytes"])  # → 1 file
-    after = dataset_file_stats(gens.current())
+    after = dataset_file_stats(*gens.paths())
     assert after["n_files"] < before["n_files"]
     assert report["target_partitions"] == 1
 

@@ -46,13 +46,15 @@ def test_train_persists_and_encode_matches_retrain_pass(spark, tmp_path):
 def test_admit_appends_without_rewriting(spark, tmp_path):
     idx = PqIndex(str(tmp_path / "pq"), m=4, k=4, dim=16, n_iter=2)
     idx.train(_corpus(spark))
-    codes_dir = idx.zone.gens.current()  # appends land in this generation
-    before = {
-        p: os.path.getmtime(p)
-        for p in glob.glob(os.path.join(codes_dir, "*.parquet"))
-    }
+    def files():  # the zone's live segments (an admission adds one)
+        return {
+            p for seg in idx.zone.gens.paths()
+            for p in glob.glob(os.path.join(seg, "*.parquet"))
+        }
+
+    before = {p: os.path.getmtime(p) for p in files()}
     idx.admit(spark, _corpus(spark, n=10, tag=5))
-    after = set(glob.glob(os.path.join(codes_dir, "*.parquet")))
+    after = files()
     for p, mt in before.items():
         assert p in after and os.path.getmtime(p) == mt
     assert idx.codes(spark).filter(F.col("admitted")).count() == 10 * 4
@@ -128,8 +130,8 @@ def test_compact_codes_preserves_subspace_drift(spark, tmp_path):
     idx.train(_corpus(spark))
     for tag in range(2, 8):
         idx.admit(spark, _corpus(spark, n=5, tag=tag))
-    def n_files():  # the zone's current generation
-        return dataset_file_stats(idx.zone.gens.current())["n_files"]
+    def n_files():  # the zone's live segments
+        return dataset_file_stats(*idx.zone.gens.paths())["n_files"]
 
     before_files = n_files()
     before = {tuple(r) for r in idx.drift_report(spark).collect()}

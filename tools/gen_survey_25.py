@@ -494,8 +494,9 @@ FAMILIES: list[tuple[str, list[str], str]] = [
     ("streaming ingestion dedup",
      ["p13_streaming_dropdup", "p16_dropdup_within_watermark",
       "p23_stream_checkpoint_resume"],
-     "per-micro-batch admission against a persisted append-only LSH "
-     "index (`streaming/ingest_dedup.py`, `operators/lsh_index.py`); "
+     "per-micro-batch admission against a persisted LSH index grown "
+     "by generation appends (`streaming/ingest_dedup.py`, "
+     "`operators/lsh_index.py`); "
      "NATIVE stateful dropDuplicates with cross-batch planted dupes; "
      "dropDuplicatesWithinWatermark with state eviction asserted "
      "in-plan; stop/resume over one checkpoint — recovery replays "
