@@ -184,7 +184,7 @@ def op_process_raw_data(
         registry, item, RawDataIntegration, "process_raw"
     )
     for m in item.files:
-        handler.download_raw(m)  # checksum verification, as on download
+        handler.verify_raw(m)  # checksum verification, as on download
     raw_df = handler.read_raw_df(list(item.files))
     records = integration.process_raw(spark, item.task, raw_df)
     manifest = handler.write_records(item.task, records)

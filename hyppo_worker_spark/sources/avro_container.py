@@ -78,11 +78,17 @@ Distributed use (no driver bottleneck):
 
 - **write**: ``write_avro(df, path)`` — each Spark partition encodes
   its Arrow batches (``mapInArrow``) to one ``part-*.avro`` file, the
-  per-task layout of the records zone;
+  per-task layout of the records zone, and returns the file's size
+  and md5 with its record count, so a manifest needs no re-read;
 - **read**: ``read_avro(spark, path)`` — ``binaryFile`` scan +
   ``mapInArrow`` decode; each file's header schema is validated
   against the expected StructType (by default the first file's,
-  read from its header alone).
+  read from its header alone);
+- **small read**: ``local_avro_frame(spark, blobs)`` decodes files
+  the driver already holds into an Arrow local relation; the records
+  zone uses it below ``storage.LOCAL_READ_MAX_BYTES``, where one driver
+  read beats a Python-worker scan. Both reads run the same per-file
+  step, ``decode_checked``.
 
 Interop evidence (no Avro library in the environment — probed every
 round): beyond spec-level unit tests (hand-computed zigzag/varint
@@ -1237,12 +1243,15 @@ def write_avro(
     path: str,
     codec: str = "deflate",
     declared_schema: str | dict | None = None,
+    digests: list | None = None,
 ) -> int:
     """Distributed container write: each partition encodes its rows to
     one ``part-*.avro`` file (the per-task file layout of the records
     zone). Executor-side file IO — no driver collect of row data.
     Returns the total record count (observed from the write itself,
-    like the Observation on the jar path).
+    like the Observation on the jar path). A ``digests`` list receives
+    one ``(size, md5 hex)`` pair per file written, computed from the
+    bytes as they were written, so a manifest needs no re-read.
 
     Arrow-native (``mapInArrow``): a pandas hop would widen nullable
     int64 columns to float64 and silently round ids above 2^53 — the
@@ -1251,7 +1260,9 @@ def write_avro(
 
     schema = df.schema
     os.makedirs(path, exist_ok=True)
-    count_schema = pa.schema([pa.field("n", pa.int64())])
+    out_schema = pa.schema(
+        [("n", pa.int64()), ("size", pa.int64()), ("md5", pa.string())]
+    )
 
     def enc(it: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         batches = list(it)
@@ -1268,17 +1279,23 @@ def write_avro(
             with open(tmp, "wb") as fh:
                 fh.write(blob)
             os.replace(tmp, os.path.join(path, name))
-            yield pa.RecordBatch.from_pylist([{"n": n}], schema=count_schema)
+            row = {"n": n, "size": len(blob), "md5": hashlib.md5(blob).hexdigest()}
+            yield pa.RecordBatch.from_pylist([row], schema=out_schema)
 
     # one pass and one Spark job: each written partition returns its
-    # count, summed here (no aggregate, so no shuffle stage)
-    total = sum(r.n for r in df.mapInArrow(enc, "n long").collect())
+    # count and file digest, summed here (no aggregate, no shuffle)
+    written = df.mapInArrow(enc, "n long, size long, md5 string").collect()
+    files = [(r.size, r.md5) for r in written]
     if not any(f.endswith(".avro") for f in os.listdir(path)):
         # empty dataset: one header-only container so readers see the
         # schema (mirrors the jar path's empty part file)
+        blob = write_container(schema, [], codec=codec)
         with open(os.path.join(path, "part-empty.avro"), "wb") as fh:
-            fh.write(write_container(schema, [], codec=codec))
-    return total
+            fh.write(blob)
+        files.append((len(blob), hashlib.md5(blob).hexdigest()))
+    if digests is not None:
+        digests.extend(files)
+    return sum(r.n for r in written)
 
 
 def read_avro(
@@ -1350,17 +1367,51 @@ def read_avro(
                     if rows:
                         yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
                     continue
-                got = _decode(blob)
-                if got.schema != exp:
-                    raise ValueError(
-                        f"avro schema mismatch in {r['path']}: "
-                        f"{got.schema} != {exp}"
-                    )
-                out = got.to_batch(arrow_schema)
+                out = decode_checked(blob, exp, arrow_schema, r["path"])
                 if out.num_rows:
                     yield out
 
     return bin_df.mapInArrow(dec, exp)
+
+
+def decode_checked(
+    blob: bytes, expected: T.StructType, arrow_schema: "pa.Schema", where: str
+) -> "pa.RecordBatch":
+    """One container file → one Arrow batch of ``arrow_schema``; its
+    header schema must equal ``expected``. The per-file step of both
+    ``read_avro`` (on executors) and ``local_avro_frame`` (on the
+    driver)."""
+    got = _decode(blob)
+    if got.schema != expected:
+        raise ValueError(
+            f"avro schema mismatch in {where}: {got.schema} != {expected}"
+        )
+    return got.to_batch(arrow_schema)
+
+
+def local_avro_frame(
+    spark: SparkSession, blobs: list[tuple[str, bytes]]
+) -> DataFrame:
+    """Driver-side container read of bytes already in memory, as
+    ``(path, content)`` pairs: decode each file (its schema must equal
+    the first file's, as in ``read_avro``) and return an Arrow local
+    relation (``LocalTableScan``) — the batches ship to the JVM once and
+    no plan node runs Python. For small datasets only: every record is
+    held on the driver."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from hyppo_worker_spark.sources.avro_schema import avro_to_struct
+
+    if not blobs:
+        raise FileNotFoundError("no .avro files to read")
+    exp = avro_to_struct(_embedded_schema_json(blobs[0][1]))
+    arrow_schema = to_arrow_schema(exp)
+    table = pa.Table.from_batches(
+        [decode_checked(b, exp, arrow_schema, p) for p, b in blobs],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, exp)
 
 
 def _strip_nullability(dt: T.DataType) -> T.DataType:

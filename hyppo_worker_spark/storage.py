@@ -8,10 +8,23 @@ Key scheme preserved from ``worker/src/main/scala/com/harrys/hyppo/worker/data/S
 - logs:    ``{prefix}/{source}/{date}/ingestion-job-{jobId}/log/{executionId}.out``     (:127-136)
 
 Uploads record size + MD5 (:62-69, :146-148); downloads verify the
-checksum against the manifest (:138-144). Record files are written
-with Spark (parquet by default; avro when the spark-avro jar is
-present — probed once per session). Raw files are opaque gzipped
-blobs, read back via Spark's ``binaryFile`` source.
+size and checksum against the manifest (:138-144). Record files are
+written with Spark (parquet by default; avro when the spark-avro jar is
+present — probed once per session; the jar-free ``avro-py`` container
+on request). Raw files are opaque gzipped blobs, read back via Spark's
+``binaryFile`` source; ``verify_raw`` checks one without holding it.
+
+Where record bytes meet the driver:
+
+- an ``avro-py`` write takes each part file's size and md5 from the
+  executor that wrote it, so the driver reads nothing back; parquet and
+  jar-avro writes hash the written files on the driver;
+- a jar-free ``.avro`` read at most ``LOCAL_READ_MAX_BYTES`` on disk
+  reads each file once on the driver, checks the manifest over those
+  bytes and decodes the same bytes into an Arrow local relation (no
+  Python worker in the plan);
+- any other read hashes the files on the driver in ``_HASH_CHUNK``
+  pieces, then Spark scans them.
 """
 
 from __future__ import annotations
@@ -32,6 +45,17 @@ from hyppo_worker_spark.model import (
     RemoteStorageLocation,
     sanitize_name,
 )
+
+
+# Above this many on-disk bytes a jar-free .avro records dataset is
+# read by Spark (binaryFile + Python-worker decode) instead of once on
+# the driver. tools/crossover_records_read.py (local[3], 4-core host,
+# read + parquet write, best of 5): the driver path wins by ~30% up to
+# 1 MiB, ties at 2 MiB and loses from 4 MiB on, where one driver
+# thread decodes what three Python workers decode in parallel.
+LOCAL_READ_MAX_BYTES = 1 << 20
+# Read size for the driver-side hashing that streams.
+_HASH_CHUNK = 1 << 20
 
 
 class ChecksumMismatch(IOError):
@@ -106,7 +130,11 @@ class DataFileHandler:
         # records_fmt="avro-py" (jar-free pure-Python container,
         # sources/avro_container.py) or "avro" (jar) to persist the
         # reference's actual wire format — p02's driver row runs the
-        # avro-py plane end-to-end every round.
+        # avro-py plane end-to-end every round. An avro-py zone is
+        # digested on the executors at write time, and one at most
+        # LOCAL_READ_MAX_BYTES reads back as a driver-built local
+        # relation: a per-task records dataset (~0.1 MB in bulk_raw)
+        # never pays a Python-worker scan just to be persisted.
         self.records_fmt = records_fmt
 
     # -- raw files (opaque bytes, gzipped at rest) ---------------------
@@ -133,11 +161,14 @@ class DataFileHandler:
         path = manifest.location.uri()
         with open(path, "rb") as f:
             blob = f.read()
-        if md5_hex(blob) != manifest.checksum:
-            raise ChecksumMismatch(
-                f"raw file {path}: checksum {md5_hex(blob)} != manifest {manifest.checksum}"
-            )
+        _check(f"raw file {path}", manifest, len(blob), md5_hex(blob))
         return gzip.decompress(blob)
+
+    def verify_raw(self, manifest: RemoteRawDataFile) -> None:
+        """``download_raw``'s checksum check alone: the file is hashed
+        in chunks and never held or gunzipped whole."""
+        path = manifest.location.uri()
+        _check(f"raw file {path}", manifest, *_file_digest(path))
 
     def read_raw_df(self, manifests: list[RemoteRawDataFile]) -> DataFrame:
         """Raw files as a Spark binaryFile DataFrame (path, content
@@ -164,7 +195,10 @@ class DataFileHandler:
             from hyppo_worker_spark.sources.avro_container import write_avro
 
             shutil.rmtree(path, ignore_errors=True)
-            record_count = write_avro(df, path, codec="deflate")
+            files: list[tuple[int, str]] = []
+            record_count = write_avro(df, path, codec="deflate", digests=files)
+            size = sum(n for n, _ in files)
+            checksum = _combine([d for _, d in files])
         else:
             from pyspark.sql import Observation
             from pyspark.sql import functions as F
@@ -174,24 +208,52 @@ class DataFileHandler:
                 "overwrite"
             ).format(fmt).save(path)
             record_count = int(obs.get["n"])
-        size, checksum = _dir_manifest(path)
+            size, checksum = _dir_manifest(path)
         return RemoteProcessedDataFile(
             location=loc, file_size=size, checksum=checksum, record_count=record_count
         )
 
     def read_records(self, manifest: RemoteProcessedDataFile) -> DataFrame:
+        """The records dataset as a DataFrame, after its size and
+        checksum match the manifest. A jar-free ``.avro`` dataset of at
+        most ``LOCAL_READ_MAX_BYTES`` on disk is read once on the
+        driver: the bytes it hashes are the bytes it decodes, into an
+        Arrow local relation. Anything larger is hashed on the driver
+        in chunks and scanned by Spark."""
         path = manifest.location.uri()
-        size, checksum = _dir_manifest(path)
-        if checksum != manifest.checksum:
-            raise ChecksumMismatch(
-                f"records {path}: checksum {checksum} != manifest {manifest.checksum}"
-            )
         fmt = path.rsplit(".", 1)[-1]
-        if fmt == "avro" and not _avro_available(self.spark):
+        avro_py = fmt == "avro" and not _avro_available(self.spark)
+        if avro_py:
+            files = _data_files(path)
+            if sum(os.path.getsize(f) for f in files) <= LOCAL_READ_MAX_BYTES:
+                return self._read_avro_once(manifest, files)
+        _check(f"records {path}", manifest, *_dir_manifest(path))
+        if avro_py:
             from hyppo_worker_spark.sources.avro_container import read_avro
 
             return read_avro(self.spark, path)
         return self.spark.read.format(fmt).load(path)
+
+    def _read_avro_once(
+        self, manifest: RemoteProcessedDataFile, files: list[str]
+    ) -> DataFrame:
+        """Read each file once, check the manifest over those bytes and
+        decode the same bytes into an Arrow local relation."""
+        from hyppo_worker_spark.sources.avro_container import local_avro_frame
+
+        blobs = []
+        for f in files:
+            with open(f, "rb") as fh:
+                blobs.append((f, fh.read()))
+        _check(
+            f"records {manifest.location.uri()}",
+            manifest,
+            sum(len(b) for _, b in blobs),
+            _combine([md5_hex(b) for _, b in blobs]),
+        )
+        return local_avro_frame(
+            self.spark, [(f, b) for f, b in blobs if f.endswith(".avro")]
+        )
 
     # -- logs ----------------------------------------------------------
 
@@ -205,20 +267,45 @@ class DataFileHandler:
         return RemoteLogFile(location=loc, file_size=len(data))
 
 
-def _dir_manifest(path: str) -> tuple[int, str]:
-    """(total size, md5 of sorted per-file md5s) over a written
-    dataset directory — a deterministic dataset digest independent of
-    partition enumeration order."""
-    files = sorted(
+def _check(what: str, manifest, size: int, checksum: str) -> None:
+    """Raise unless ``(size, checksum)`` is what ``manifest`` records."""
+    if (size, checksum) != (manifest.file_size, manifest.checksum):
+        raise ChecksumMismatch(
+            f"{what}: size {size}, checksum {checksum} != manifest "
+            f"size {manifest.file_size}, checksum {manifest.checksum}"
+        )
+
+
+def _data_files(path: str) -> list[str]:
+    """The files a records manifest covers, sorted: every file under
+    ``path`` but Hadoop's ``.crc`` sidecars and ``_SUCCESS`` markers."""
+    return sorted(
         f
         for f in glob.glob(os.path.join(path, "**"), recursive=True)
         if os.path.isfile(f) and not f.endswith((".crc", "_SUCCESS"))
     )
-    total = 0
-    digests = []
-    for f in files:
-        with open(f, "rb") as fh:
-            data = fh.read()
-        total += len(data)
-        digests.append(md5_hex(data))
-    return total, md5_hex("".join(sorted(digests)).encode())
+
+
+def _file_digest(path: str) -> tuple[int, str]:
+    """(size, md5 hex) of one file, read in ``_HASH_CHUNK`` pieces."""
+    h = hashlib.md5()
+    size = 0
+    with open(path, "rb") as fh:
+        while chunk := fh.read(_HASH_CHUNK):
+            size += len(chunk)
+            h.update(chunk)
+    return size, h.hexdigest()
+
+
+def _combine(digests: list[str]) -> str:
+    """The dataset checksum: md5 of the sorted per-file md5s, so it is
+    independent of the order files are listed or written in."""
+    return md5_hex("".join(sorted(digests)).encode())
+
+
+def _dir_manifest(path: str) -> tuple[int, str]:
+    """(total size, md5 of sorted per-file md5s) over a written
+    dataset directory — a deterministic dataset digest independent of
+    partition enumeration order."""
+    sized = [_file_digest(f) for f in _data_files(path)]
+    return sum(n for n, _ in sized), _combine([d for _, d in sized])

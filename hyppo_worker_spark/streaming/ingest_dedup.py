@@ -6,20 +6,22 @@ contract, run continuously.
 Per micro-batch (foreachBatch; each step is a DataFrame program):
 
 1. exact dedup WITHIN the batch (min-id per content digest);
-2. hash the survivors once into (shingles, banding) frames;
-3. near-dup WITHIN the batch: LSH candidates + exact-Jaccard verify +
+2. near-dup WITHIN the batch: LSH candidates + exact-Jaccard verify +
    connected components → keep each cluster's minimum id;
-4. near-dup AGAINST the persisted LSH index
-   (``operators/lsh_index.py``): the batch's banding rows broadcast
+3. exact dup AGAINST the corpus: content digests join the admitted
+   digest log;
+4. pin the survivors and hash them once into (shingles, banding)
+   frames (``compute_frames``);
+5. near-dup AGAINST the persisted LSH index
+   (``operators/lsh_index.py``): the step-4 banding rows broadcast
    against the index — the admitted corpus text is never re-read or
    re-hashed; any batch doc matching an admitted doc is rejected;
-5. exact dup AGAINST the corpus: content digests join the admitted
-   digest log;
 6. append ONE generation segment (``generations.py``) of the
-   survivors' corpus rows, digests and index frames; its flip carries
-   the batch id, so delivery is exactly once: a replay before the
-   flip re-runs admission against the pre-batch store (never its own
-   half-written rows), a replay after it is a no-op.
+   survivors' corpus rows, digests and the step-4 frames filtered to
+   the kept ids; its flip carries the batch id, so delivery is exactly
+   once: a replay before the flip re-runs admission against the
+   pre-batch store (never its own half-written rows), a replay after
+   it is a no-op.
 
 Scale: each batch's work is proportional to the batch (broadcast
 banding rows, candidate-only shingle pulls); the append writes only
@@ -98,24 +100,23 @@ class DedupIngestSink:
         )
         return uniq.join(drop, idc, "left_anti")
 
-    def _reject_against_corpus(self, survivors: DataFrame) -> DataFrame:
-        """Drop batch docs that duplicate anything already admitted."""
-        idc, txt = self.id_col, self.text_col
-        if not self.gens.exists():
-            return survivors
-        # exact: digest membership in the admitted digest log
+    def _drop_exact_against_corpus(self, survivors: DataFrame) -> DataFrame:
+        """Drop batch docs whose text is already in the digest log."""
         digests = self.gens.read(self.spark, "digests")
-        survivors = survivors.join(
+        return survivors.join(
             digests.withColumnRenamed("h", "_h"),
-            F.md5(F.col(txt)) == F.col("_h"),
+            F.md5(F.col(self.text_col)) == F.col("_h"),
             "left_anti",
         )
-        # near: LSH index candidates verified by exact Jaccard
-        sh_n, band_n = self.index.compute_frames(survivors, idc, txt)
+
+    def _drop_near_against_corpus(
+        self, survivors: DataFrame, sh: DataFrame, band: DataFrame
+    ) -> DataFrame:
+        """Drop batch docs the LSH index matches (candidates verified
+        by exact Jaccard), given the survivors' own frames."""
+        idc = self.id_col
         matched = (
-            self.index.pairs_against(
-                self.spark, sh_n, band_n, threshold=self.threshold
-            )
+            self.index.pairs_against(self.spark, sh, band, threshold=self.threshold)
             .select(F.col("b_id").alias(idc))
             .distinct()
         )
@@ -129,23 +130,35 @@ class DedupIngestSink:
         if n_in == 0:
             self.gens.ack(batch_id)
             return
-        survivors = self._reject_against_corpus(
-            self._survivors_within_batch(batch_df)
-        )
-        # Pin the admitted set so the segment's writes see the SAME rows
+        survivors = self._survivors_within_batch(batch_df)
+        against = self.gens.exists()
+        if against:
+            survivors = self._drop_exact_against_corpus(survivors)
+        # Pin the candidates, then hash them ONCE: the frames serve the
+        # index check and, filtered to the kept ids, the index write
         survivors = survivors.localCheckpoint(eager=True)
+        sh, band = self.index.compute_frames(survivors, idc, txt)
+        if against:
+            # pinned again so the segment's writes see the SAME rows
+            survivors = self._drop_near_against_corpus(
+                survivors, sh, band
+            ).localCheckpoint(eager=True)
         n_kept = survivors.count()
         if n_kept == 0:
             self.gens.ack(batch_id)
         else:
-            sh, band = self.index.compute_frames(survivors, idc, txt)
+            kept = survivors.select(F.col(idc).alias("did"))
 
             def fill(out: str) -> None:
                 survivors.write.parquet(os.path.join(out, "corpus"))
                 survivors.select(F.md5(F.col(txt)).alias("h")).write.parquet(
                     os.path.join(out, "digests")
                 )
-                self.index.write(out, sh, band)
+                self.index.write(
+                    out,
+                    sh.join(kept, "did", "left_semi"),
+                    band.join(kept, "did", "left_semi"),
+                )
 
             self.gens.append(fill, batch_id)
         self.admitted_counts.append((batch_id, n_in, n_kept))

@@ -160,3 +160,44 @@ def test_banded_index_is_partition_pruned(spark, tmp_path):
 
     pf = re.findall(r"PartitionFilters: \[([^\]]+)\]", plan)
     assert any("band_pt" in f and f.strip() for f in pf)
+
+
+def test_admission_hashes_survivors_once(spark, tmp_path, monkeypatch):
+    """Each admitted batch hashes its survivors into index frames at
+    most once: the frames the index check used are the frames written,
+    filtered to the kept ids."""
+    from collections import Counter
+
+    from hyppo_worker_spark.operators.lsh_index import MinHashLshIndex
+
+    calls = []
+    real = MinHashLshIndex.compute_frames
+
+    def counted(self, *args, **kwargs):
+        calls.append(1)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(MinHashLshIndex, "compute_frames", counted)
+    sink = DedupIngestSink(spark, str(tmp_path / "store"))
+
+    def admit(rows, batch_id):
+        calls.clear()
+        sink(spark.createDataFrame(rows, "doc_id string, text string"), batch_id)
+        return len(calls)
+
+    assert admit([("a1", _text("alpha")), ("b1", _text("beta"))], 0) <= 1
+    batch1 = [
+        ("a2", _text("alpha", changed=2)),  # near-dup of a1: rejected
+        ("c1", _text("gamma")),
+        ("c9", _text("gamma")),  # exact dup of c1 in the batch
+    ]
+    assert admit(batch1, 1) <= 1
+    assert admit(batch1, 1) == 0  # a replay is a no-op
+
+    kept = sorted(r.doc_id for r in sink.corpus().collect())
+    assert kept == ["a1", "b1", "c1"]
+    sh, band = sink.index.load(spark)
+    assert sorted(r.did for r in sh.collect()) == kept
+    assert sorted(Counter(r.did for r in band.collect()).items()) == [
+        (i, sink.index.bands) for i in kept
+    ]
