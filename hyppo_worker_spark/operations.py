@@ -47,6 +47,7 @@ from hyppo_worker_spark.registry import (
     ProcessedDataIntegration,
     RawDataIntegration,
 )
+from hyppo_worker_spark import storage
 from hyppo_worker_spark.storage import DataFileHandler
 
 
@@ -178,16 +179,28 @@ def op_process_raw_data(
     """Op 4 (``ProcessRawDataOperation.java:59-85``): raw files →
     connector parse stage → ONE records dataset + record count.
 
-    The reference loops files sequentially in one thread; here the
-    files become a binaryFile DataFrame so the parse distributes."""
+    The reference loops a task's files sequentially in one executor.
+    Here the task is sized once, by its manifests' raw bytes:
+
+    - at most ``storage.LOCAL_READ_MAX_BYTES``: the engine's side runs
+      on the driver, the reference's model. Each raw file is read and
+      checked once into an Arrow local relation, and the records are
+      collected as Arrow and encoded where they land, so the
+      connector's parse is the only Python-worker stage;
+    - above it: each file is checksummed, then becomes a ``binaryFile``
+      DataFrame so the parse distributes, and the records are written
+      by the executors."""
     integration = _resolve_valid(
         registry, item, RawDataIntegration, "process_raw"
     )
-    for m in item.files:
-        handler.verify_raw(m)  # checksum verification, as on download
-    raw_df = handler.read_raw_df(list(item.files))
+    files = list(item.files)
+    local = sum(m.file_size for m in files) <= storage.LOCAL_READ_MAX_BYTES
+    if not local:
+        for m in files:
+            handler.verify_raw(m)  # checksum verification, as on download
+    raw_df = handler.read_raw_df(files, local=local)
     records = integration.process_raw(spark, item.task, raw_df)
-    manifest = handler.write_records(item.task, records)
+    manifest = handler.write_records(item.task, records, local=local)
     return ProcessRawDataResponse(input=item, data=manifest)
 
 

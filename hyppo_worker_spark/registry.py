@@ -88,7 +88,11 @@ class RawDataIntegration(DataIntegration):
     def process_raw(
         self, spark: SparkSession, task: DataIngestionTask, raw_df: DataFrame
     ) -> DataFrame:
-        """binaryFile rows (path, content…) → typed records DataFrame."""
+        """Raw rows → typed records DataFrame. ``raw_df`` has Spark's
+        ``binaryFile`` schema and values (``path``, ``modificationTime``,
+        ``length``, ``content``: the gzipped bytes as stored) whichever
+        path built it: a ``binaryFile`` scan, or for a small task an
+        Arrow local relation of the bytes op 4 checked."""
 
 
 class ProcessedDataIntegration(DataIntegration):

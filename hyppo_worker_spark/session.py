@@ -8,10 +8,16 @@ cluster you'd raise it (or let AQE coalesce from a high initial value).
 
 from __future__ import annotations
 
+import logging
 import os
 import threading
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
+
+# local_frame calls that fell back to a pickled-rows PythonRDD scan
+LOCAL_FRAME_FALLBACKS = 0
 
 
 def get_spark(
@@ -250,7 +256,10 @@ def local_frame(spark: SparkSession, rows, schema):
     None maps to null. Types outside the mapped set (timestamps,
     decimals, structs) fall back to the plain path, as does any
     conversion error — the fallback is byte-for-byte today's
-    behavior, just slower."""
+    behavior, just slower. Each fallback logs one WARNING naming the
+    unmapped field types (or the error) and adds one to
+    ``LOCAL_FRAME_FALLBACKS``."""
+    global LOCAL_FRAME_FALLBACKS
     from pyspark.sql import types as T
 
     rows = list(rows)
@@ -263,7 +272,12 @@ def local_frame(spark: SparkSession, rows, schema):
             else schema
         )
         pa_types = [_pa_type(f.dataType) for f in st.fields]
-        if all(t is not None for t in pa_types):
+        unmapped = [
+            f"{f.name}: {f.dataType.simpleString()}"
+            for f, t in zip(st.fields, pa_types)
+            if t is None
+        ]
+        if not unmapped:
             cols = (
                 list(zip(*rows)) if rows else [[] for _ in st.fields]
             )
@@ -275,8 +289,11 @@ def local_frame(spark: SparkSession, rows, schema):
                 [f.name for f in st.fields],
             )
             return spark.createDataFrame(tbl, st)
-    except Exception:  # unsupported values/session — use the slow path
-        pass
+        why = "unmapped field types " + ", ".join(unmapped)
+    except Exception as e:  # unsupported values/session — use the slow path
+        why = f"{type(e).__name__}: {e}"
+    LOCAL_FRAME_FALLBACKS += 1
+    _log.warning("local_frame: pickled-rows fallback (%s)", why)
     return spark.createDataFrame(rows, schema)
 
 

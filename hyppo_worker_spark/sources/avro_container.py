@@ -88,7 +88,12 @@ Distributed use (no driver bottleneck):
   the driver already holds into an Arrow local relation; the records
   zone uses it below ``storage.LOCAL_READ_MAX_BYTES``, where one driver
   read beats a Python-worker scan. Both reads run the same per-file
-  step, ``decode_checked``.
+  step, ``decode_checked``;
+- **small write**: ``write_avro_local(df, path)`` collects the frame
+  as Arrow (a JVM-side collect, no Python worker) and encodes on the
+  driver the same part files ``write_avro`` would write; op 4 uses it
+  below the same gate. Both writes end in ``_put_part`` and
+  ``_seal``.
 
 Interop evidence (no Avro library in the environment — probed every
 round): beyond spec-level unit tests (hand-computed zigzag/varint
@@ -1274,28 +1279,89 @@ def write_avro(
                 codec=codec,
                 declared_schema=declared_schema,
             )
-            name = f"part-{uuid.uuid4().hex}.avro"
-            tmp = os.path.join(path, "." + name + ".tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(blob)
-            os.replace(tmp, os.path.join(path, name))
-            row = {"n": n, "size": len(blob), "md5": hashlib.md5(blob).hexdigest()}
+            size, md5 = _put_part(path, blob)
+            row = {"n": n, "size": size, "md5": md5}
             yield pa.RecordBatch.from_pylist([row], schema=out_schema)
 
     # one pass and one Spark job: each written partition returns its
     # count and file digest, summed here (no aggregate, no shuffle)
     written = df.mapInArrow(enc, "n long, size long, md5 string").collect()
-    files = [(r.size, r.md5) for r in written]
+    _seal(schema, path, codec, [(r.size, r.md5) for r in written], digests)
+    return sum(r.n for r in written)
+
+
+def write_avro_local(
+    df: DataFrame,
+    path: str,
+    codec: str = "deflate",
+    digests: list | None = None,
+) -> int:
+    """``write_avro`` with the encode on the driver, for a small frame:
+    the same part files (one per non-empty partition, the same bytes),
+    the same ``part-empty.avro`` for an empty frame, the same digests
+    and count.
+
+    ``toArrow()`` collects the rows as Arrow batches built in the JVM:
+    one Spark job and no Python worker beyond those the frame's own
+    plan runs. Each row carries its partition id, so the rows split
+    into the part files ``write_avro``'s encoder would write (a
+    projection the optimizer folds into a local relation runs as one
+    partition, so there it writes one file).
+
+    Memory: ``write_avro``'s encoder already holds a whole partition in
+    one Python worker (``batches = list(it)``), and a frame built from
+    one small file is one partition. This path moves that same table
+    into the driver; it does not make it bigger. Callers gate it on
+    the input's size (``storage.LOCAL_READ_MAX_BYTES``)."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    schema = df.schema
+    os.makedirs(path, exist_ok=True)
+    part = "_part"
+    while part in schema.names:
+        part = "_" + part
+    table = df.withColumn(part, F.spark_partition_id()).toArrow()
+    # rows arrive in partition order: a part file per run of one id
+    ids = table.column(part).to_numpy()
+    table = table.drop_columns([part])
+    bounds = [0, *(np.flatnonzero(np.diff(ids)) + 1), table.num_rows]
+    files = [
+        _put_part(path, write_container_arrow(schema, table.slice(a, b - a), codec))
+        for a, b in zip(bounds, bounds[1:])
+        if b > a
+    ]
+    _seal(schema, path, codec, files, digests)
+    return table.num_rows
+
+
+def _put_part(path: str, blob: bytes, name: str | None = None) -> tuple[int, str]:
+    """Write one part file under ``path`` through a tmp file and
+    ``os.replace``; returns its (size, md5 hex), taken from ``blob``."""
+    name = name or f"part-{uuid.uuid4().hex}.avro"
+    tmp = os.path.join(path, "." + name + ".tmp")
+    with open(tmp, "wb") as fh:
+        fh.write(blob)
+    os.replace(tmp, os.path.join(path, name))
+    return len(blob), hashlib.md5(blob).hexdigest()
+
+
+def _seal(
+    schema: T.StructType,
+    path: str,
+    codec: str,
+    files: list[tuple[int, str]],
+    digests: list | None,
+) -> None:
+    """Finish a write of ``files``: an empty dataset gets one
+    header-only container so readers see the schema (mirrors the jar
+    path's empty part file); ``digests`` receives every file's
+    (size, md5)."""
     if not any(f.endswith(".avro") for f in os.listdir(path)):
-        # empty dataset: one header-only container so readers see the
-        # schema (mirrors the jar path's empty part file)
         blob = write_container(schema, [], codec=codec)
-        with open(os.path.join(path, "part-empty.avro"), "wb") as fh:
-            fh.write(blob)
-        files.append((len(blob), hashlib.md5(blob).hexdigest()))
+        files = [*files, _put_part(path, blob, "part-empty.avro")]
     if digests is not None:
         digests.extend(files)
-    return sum(r.n for r in written)
 
 
 def read_avro(

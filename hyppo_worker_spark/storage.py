@@ -11,12 +11,21 @@ Uploads record size + MD5 (:62-69, :146-148); downloads verify the
 size and checksum against the manifest (:138-144). Record files are
 written with Spark (parquet by default; avro when the spark-avro jar is
 present — probed once per session; the jar-free ``avro-py`` container
-on request). Raw files are opaque gzipped blobs, read back via Spark's
-``binaryFile`` source; ``verify_raw`` checks one without holding it.
+on request). Raw files are opaque gzipped blobs, read back as a frame
+with Spark's ``binaryFile`` schema; ``verify_raw`` checks one without
+holding it.
 
 Where record bytes meet the driver:
 
-- an ``avro-py`` write takes each part file's size and md5 from the
+- op 4 over raw files of at most ``LOCAL_READ_MAX_BYTES`` in all (their
+  manifests' sizes) reads each raw file once on the driver, checks it
+  over those bytes and hands the connector an Arrow local relation with
+  ``binaryFile``'s schema and values; its ``avro-py`` write collects the
+  records as Arrow and encodes them on the driver, taking each part
+  file's size and md5 from the bytes it writes;
+- above that, op 4 hashes each raw file on the driver in
+  ``_HASH_CHUNK`` pieces, then Spark scans it (``binaryFile``), and an
+  ``avro-py`` write takes each part file's size and md5 from the
   executor that wrote it, so the driver reads nothing back; parquet and
   jar-avro writes hash the written files on the driver;
 - a jar-free ``.avro`` read at most ``LOCAL_READ_MAX_BYTES`` on disk
@@ -36,6 +45,7 @@ import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from hyppo_worker_spark.model import (
     DataIngestionTask,
@@ -47,15 +57,31 @@ from hyppo_worker_spark.model import (
 )
 
 
-# Above this many on-disk bytes a jar-free .avro records dataset is
-# read by Spark (binaryFile + Python-worker decode) instead of once on
-# the driver. tools/crossover_records_read.py (local[3], 4-core host,
-# read + parquet write, best of 5): the driver path wins by ~30% up to
-# 1 MiB, ties at 2 MiB and loses from 4 MiB on, where one driver
-# thread decodes what three Python workers decode in parallel.
-LOCAL_READ_MAX_BYTES = 1 << 20
+# The one driver-or-Spark gate of the records zone. Above this many
+# on-disk bytes a jar-free .avro records dataset is read by Spark
+# (binaryFile + Python-worker decode) instead of once on the driver,
+# and an op-4 task with more raw bytes (its manifests' sizes) is
+# scanned and encoded on the executors instead of on the driver.
+# tools/crossover_records_read.py, local[3], 4-core host, best of the
+# rounds: the records read wins by ~30% up to 1 MiB, ties at 2 MiB and
+# loses from 4 MiB; op 4 (--op4, 1 or 4 raw files) wins by 20-27% up to
+# 0.5 MiB of gzipped raw and ties or loses from 1 MiB, where one driver
+# thread encodes what three Python workers encode in parallel. The
+# lower crossover sets the gate.
+LOCAL_READ_MAX_BYTES = 1 << 19
 # Read size for the driver-side hashing that streams.
 _HASH_CHUNK = 1 << 20
+
+
+# Spark's binaryFile schema: a raw frame has it whichever path built it.
+RAW_SCHEMA = T.StructType(
+    [
+        T.StructField("path", T.StringType()),
+        T.StructField("modificationTime", T.TimestampType()),
+        T.StructField("length", T.LongType()),
+        T.StructField("content", T.BinaryType()),
+    ]
+)
 
 
 class ChecksumMismatch(IOError):
@@ -170,21 +196,57 @@ class DataFileHandler:
         path = manifest.location.uri()
         _check(f"raw file {path}", manifest, *_file_digest(path))
 
-    def read_raw_df(self, manifests: list[RemoteRawDataFile]) -> DataFrame:
-        """Raw files as a Spark binaryFile DataFrame (path, content
-        decompressed is up to the processor — content column carries
-        the gzipped bytes as stored)."""
+    def read_raw_df(
+        self, manifests: list[RemoteRawDataFile], local: bool = False
+    ) -> DataFrame:
+        """Raw files as a DataFrame with Spark's ``binaryFile`` schema
+        and values: ``path`` (a ``file:`` URI), ``modificationTime``,
+        ``length`` and ``content``, the gzipped bytes as stored
+        (decompressing is up to the processor).
+
+        By default Spark scans the files; check them first with
+        ``verify_raw``. ``local`` (op 4 sets it below
+        ``LOCAL_READ_MAX_BYTES``) reads each file once on the driver,
+        checks its size and md5 on those bytes and returns the same
+        bytes as an Arrow local relation: what was checked is what the
+        connector parses."""
         paths = [m.location.uri() for m in manifests]
-        return self.spark.read.format("binaryFile").load(paths)
+        if not local:
+            return self.spark.read.format("binaryFile").load(paths)
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        cols: dict[str, list] = {f.name: [] for f in RAW_SCHEMA.fields}
+        for m, path in zip(manifests, paths):
+            with open(path, "rb") as fh:
+                blob = fh.read()
+                mtime_ns = os.fstat(fh.fileno()).st_mtime_ns
+            _check(f"raw file {path}", m, len(blob), md5_hex(blob))
+            cols["path"].append("file:" + os.path.abspath(path))
+            # whole milliseconds, as the Hadoop file status reports it
+            cols["modificationTime"].append(mtime_ns // 1_000_000 * 1000)
+            cols["length"].append(len(blob))
+            cols["content"].append(blob)
+        table = pa.Table.from_pydict(cols, schema=to_arrow_schema(RAW_SCHEMA))
+        return self.spark.createDataFrame(table, RAW_SCHEMA)
 
     # -- processed record files ---------------------------------------
 
     def write_records(
-        self, task: DataIngestionTask, df: DataFrame, fmt: str | None = None
+        self,
+        task: DataIngestionTask,
+        df: DataFrame,
+        fmt: str | None = None,
+        local: bool = False,
     ) -> RemoteProcessedDataFile:
         """Write a typed DataFrame to the records zone; manifest
         carries total size + md5-of-sorted-part-md5s + record count
-        (count observed from the write, not a second scan)."""
+        (count observed from the write, not a second scan).
+
+        ``local`` (op 4 sets it below ``LOCAL_READ_MAX_BYTES``) encodes
+        an ``avro-py`` write on the driver (``write_avro_local``: the
+        same part files, one Spark job, no Python worker added);
+        parquet and jar writes ignore it."""
         fmt = fmt or self.records_fmt or "parquet"
         ext = "avro" if fmt == "avro-py" else fmt
         loc = self.layout.loc(self.layout.records_key(task, ext=ext))
@@ -192,11 +254,15 @@ class DataFileHandler:
         if fmt == "avro-py":
             import shutil
 
-            from hyppo_worker_spark.sources.avro_container import write_avro
+            from hyppo_worker_spark.sources.avro_container import (
+                write_avro,
+                write_avro_local,
+            )
 
+            write = write_avro_local if local else write_avro
             shutil.rmtree(path, ignore_errors=True)
             files: list[tuple[int, str]] = []
-            record_count = write_avro(df, path, codec="deflate", digests=files)
+            record_count = write(df, path, codec="deflate", digests=files)
             size = sum(n for n, _ in files)
             checksum = _combine([d for _, d in files])
         else:

@@ -120,3 +120,37 @@ def test_persist_scope_owns_its_frames_only(spark):
     # the default registry still holds outer + the thread's frame
     assert release_persists() == 2
     assert not outer.storageLevel.useMemory
+
+
+def _executed(df) -> str:
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_local_frame_supported_schema_is_a_local_scan(spark):
+    from hyppo_worker_spark import session
+
+    before = session.LOCAL_FRAME_FALLBACKS
+    df = session.local_frame(
+        spark, [(1, "a", 2.5), (2, None, None)], "k long, s string, x double"
+    )
+    assert "LocalTableScan" in _executed(df)
+    assert session.LOCAL_FRAME_FALLBACKS == before
+
+
+def test_local_frame_timestamp_falls_back_visibly(spark, caplog):
+    import datetime as dt
+    import logging
+
+    from hyppo_worker_spark import session
+
+    before = session.LOCAL_FRAME_FALLBACKS
+    with caplog.at_level(logging.WARNING, logger=session.__name__):
+        df = session.local_frame(
+            spark, [(1, dt.datetime(2024, 1, 1))], "k long, at timestamp"
+        )
+    assert df.count() == 1
+    assert session.LOCAL_FRAME_FALLBACKS == before + 1
+    [warning] = [r for r in caplog.records if r.name == session.__name__]
+    assert warning.levelno == logging.WARNING
+    assert "at: timestamp" in warning.getMessage()

@@ -114,3 +114,15 @@ def test_raw_binaryfile_df(spark, storage):
     rows = df.select("path", "length").collect()
     assert len(rows) == 2
     assert all(r.length > 0 for r in rows)
+
+
+def test_raw_local_df(spark, storage):
+    """``test_raw_binaryfile_df`` on the driver-read path op 4 takes
+    below ``LOCAL_READ_MAX_BYTES``: each file checked and held once."""
+    t = _task()
+    manifests = storage.upload_raw(t, [b"payload-a", b"payload-b"])
+    df = storage.read_raw_df(manifests, local=True)
+    rows = df.select("path", "length").collect()
+    assert len(rows) == 2
+    assert all(r.length > 0 for r in rows)
+    assert all(r.path.startswith("file:/") for r in rows)
