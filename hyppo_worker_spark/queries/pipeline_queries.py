@@ -14,6 +14,7 @@ aggregate would not match the direct SQL on the source table.
 from __future__ import annotations
 
 import gzip
+import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -253,6 +254,17 @@ def _run_job(
         )
 
 
+def _read_final(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Every task's persisted output under ``out_dir/final``. The task
+    directories are listed, not globbed in the path: a glob path makes
+    Spark's FileStreamSink metadata probe log a WARN and a
+    FileNotFoundException stack trace on every read."""
+    final = os.path.join(out_dir, "final")
+    return spark.read.parquet(
+        *sorted(os.path.join(final, d) for d in os.listdir(final) if d.startswith("task-"))
+    )
+
+
 @register(
     "p01_ingestion_pipeline",
     oracle="""
@@ -272,7 +284,7 @@ def p01_ingestion_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     persist) → aggregate of the persisted output."""
     out_dir = tempfile.mkdtemp(prefix="hyppo-out-")
     _run_job(spark, LineitemIntegration(sf_dir, out_dir), None)
-    final = spark.read.parquet(f"{out_dir}/final/task-*")
+    final = _read_final(spark, out_dir)
     return (
         final.groupBy("l_returnflag")
         .agg(
@@ -309,7 +321,7 @@ def p02_raw_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, DocumentsRawIntegration(sf_dir, out_dir), None,
         records_fmt="avro-py",
     )
-    final = spark.read.parquet(f"{out_dir}/final/task-*")
+    final = _read_final(spark, out_dir)
     return (
         final.groupBy("lang")
         .agg(

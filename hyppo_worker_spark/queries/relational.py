@@ -4392,15 +4392,11 @@ WITH RECURSIVE walk(okey, cust, depth, run_cents, reset) AS (
            CASE WHEN w.run_cents + e.cents >= 30000000 THEN 1 ELSE 0 END
     FROM walk w JOIN q67_edges e ON e.parent = w.okey
 )
-SELECT okey, cust, depth, run_cents, reset FROM walk
-"""
-
-_Q67_AGG_SQL = """
 SELECT depth, CAST(count(*) AS BIGINT) AS n_orders,
        CAST(count(DISTINCT cust) AS BIGINT) AS n_customers,
        CAST(sum(run_cents) AS BIGINT) AS sum_run_cents,
        CAST(sum(reset) AS BIGINT) AS n_resets
-FROM q67_walk GROUP BY depth ORDER BY depth
+FROM walk GROUP BY depth ORDER BY depth
 """
 
 _Q67_SQL = """
@@ -4468,33 +4464,42 @@ def q67_recursive_chain_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark's UnionLoop re-evaluates a CTE referenced from the
     recursive term on EVERY iteration — inlining ``edges`` pays the
-    orders scan + window ~25 times (measured 7.2s at sf0.1).
-    Materializing it once behind a persisted temp view cuts that to
-    5.2s; the remaining cost is the per-iteration loop floor
-    (~0.2s x max-chain-length), which partition sizing does not move
-    (32/8/4 all within 0.2s).
+    orders scan + window ~25 times (measured 7.2s at sf0.1). The
+    edges are therefore a persisted temp view, filled by the anchor's
+    scan rather than by an eager count.
+
+    What is left is the per-iteration floor. ``UnionLoopExec`` plans
+    each iteration afresh over the previous iteration's rows, which
+    it hands on through ``LogicalRDD.fromDataset`` together with
+    their exact row count. Under AQE every iteration was three Spark
+    jobs (the edges broadcast, a round-robin map stage, the count)
+    plus two AQE re-optimization passes: 53 jobs for a 13-iteration
+    walk on perfbench's ``query_mix`` tables, of which only ~40% of
+    the row's time was inside jobs and the rest driver planning. AQE
+    re-plans a stage from runtime statistics, and the loop already
+    plans every iteration from an exact count, so the walk runs with
+    ``spark.sql.adaptive.enabled=false``: about two jobs an iteration
+    (the broadcast and the count), 30 for the same walk.
 
     The loop accumulates one row per order, and Spark caps a
     recursive CTE's TOTAL rows at spark.sql.cteRecursionRowLimit
     (default 1,000,000) — the 10x stress corpus (1.5M orders) hits
     the cap (RECURSION_ROW_LIMIT_EXCEEDED), so the walk runs with
-    the limit disabled. scoped_conf restores on exit, which means
-    the loop must MATERIALIZE inside the block (the returned frame
-    is lazy; executing it after restore would re-apply the cap):
-    the walk persists and counts under the scoped conf, and the
-    returned aggregate reads the cache. Depth stays capped at the
-    level limit (100) as the runaway guard."""
-    from hyppo_worker_spark.session import scoped_conf
-
+    the limit disabled. Depth stays capped at the level limit (100)
+    as the runaway guard. Both confs are scoped, and scoped_conf
+    restores them on exit, so nothing may run the walk after the
+    block: the walk and its per-depth aggregate (at most level-limit
+    rows) run as one ``toArrow()`` inside it, and the row returns
+    that table as a local relation, which no later action re-plans
+    under the ambient confs."""
     load_tables(spark, sf_dir, ("orders",))
     edges = spark.sql(_Q67_EDGES_SQL).transform(tracked_persist)
-    edges.count()  # materialize once, before the loop derives from it
     edges.createOrReplaceTempView("q67_edges")
-    with scoped_conf(spark, "spark.sql.cteRecursionRowLimit", "-1"):
-        walk = spark.sql(_Q67_WALK_SQL).transform(tracked_persist)
-        walk.count()  # run the loop while the row cap is lifted
-    walk.createOrReplaceTempView("q67_walk")
-    return spark.sql(_Q67_AGG_SQL)
+    with (
+        scoped_conf(spark, "spark.sql.cteRecursionRowLimit", "-1"),
+        scoped_conf(spark, "spark.sql.adaptive.enabled", "false"),
+    ):
+        return spark.createDataFrame(spark.sql(_Q67_WALK_SQL).toArrow())
 
 
 # --------------------------------------------------------------------------

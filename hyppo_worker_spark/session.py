@@ -311,11 +311,70 @@ TABLES = (
 )
 
 
+# Parquet schema inference is a Spark job per read (~76 ms a table
+# on local[3]); load_tables runs on every query call, so it infers a
+# table once and hands the schema back on later reads. Keyed by table
+# path; an entry holds only while the table's files and the confs that
+# change inference are what they were when it was inferred. Every hit
+# re-checks that key, so concurrent readers need no lock: the worst a
+# race can store is an outdated entry, which the next read re-infers.
+_SCHEMAS: dict[str, tuple] = {}  # path -> (key, StructType)
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+
+def _listing(path: str) -> tuple:
+    """(name, size, mtime_ns) of every file under ``path`` (or of
+    ``path`` itself when it is a file), sorted."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+    out = []
+    for root, _, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema from ``_SCHEMAS``
+    when the table and the inference confs are unchanged."""
+    try:
+        files = _listing(path)
+    except OSError:
+        files = ()
+    if not files:  # not a local table: nothing to key on, infer every time
+        return spark.read.parquet(path)
+    key = (files, tuple(spark.conf.get(k, None) for k in _INFER_CONFS))
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (key, df.schema)
+    return df
+
+
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES):
     """Read the synthetic star-schema tables and register temp views.
 
     Returns a dict of DataFrames. Reads are lazy; Catalyst prunes
     columns and pushes filters into the parquet scans per query.
+
+    The first read of a table infers its parquet schema (one Spark
+    job); later reads pass that schema to ``spark.read.schema`` and
+    launch none. The cached schema is dropped, and the table inferred
+    again, when the (name, size, mtime_ns) listing of its files or one
+    of the session confs that change inference (``nanosAsLong``,
+    ``inferTimestampNTZ``, ``binaryAsString``, ``int96AsTimestamp``)
+    differs from the first read's, so a table rewritten in place is
+    read with its new schema. Paths that cannot be listed locally are
+    inferred on every read.
     """
     from pyspark.sql import functions as F
 
@@ -334,13 +393,13 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE
             # microsecond timestamps (matches DuckDB's second-level
             # formatting in oracles).
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = spark.read.parquet(path)
+            df = _read_parquet(spark, path)
             if dict(df.dtypes).get("ts") == "bigint":
                 df = df.withColumn(
                     "ts", F.timestamp_micros((F.col("ts") / 1000).cast("long"))
                 )
         else:
-            df = spark.read.parquet(path)
+            df = _read_parquet(spark, path)
         # Newer driver-generated parquet marks timestamps as
         # isAdjustedToUTC=false, which Spark 4 infers as TIMESTAMP_NTZ.
         # Keep NTZ as-is: casting it to LTZ here would put a CAST above
