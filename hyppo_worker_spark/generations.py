@@ -14,8 +14,9 @@ reference, (2) writes segment ``N = seq + 1`` into ``<root>/g-<N>/`` —
 moving each partition (``bucket=3``) or named frame (``corpus``)
 directory it fills to ``<root>/<dir>/g-<N>/``, so a ``basePath`` read
 prunes partitions across any number of segments — and (3) publishes
-the new pointer: a commit's replaces the old segments (split: those of
-the partitions it wrote), an append's keeps them all. The pointer's
+the new pointer: a commit's replaces the old segments (of its named
+frame only, when it names one; split: those of the partitions it
+wrote), an append's keeps them all, a replace's keeps none. The pointer's
 batch id makes the flip the batch's ack — no separate marker, no
 window between data and ack. A crash before (3) leaves the old
 pointer: readers and the replayed batch see the pre-batch table, never
@@ -66,6 +67,16 @@ def _remove(path: str) -> None:
         os.remove(path)
 
 
+def stage(df: DataFrame, out: str, frame: str) -> DataFrame:
+    """Write ``df`` as the ``frame`` of the segment being filled at
+    ``out`` and return it read back from those bytes, so what the fill
+    computes next is computed against what the flip publishes. The
+    read takes ``df``'s schema and starts no inference job."""
+    path = os.path.join(out, frame)
+    df.write.parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
 class Generations:
     """The pointer-resolved segments of the table at ``root``."""
 
@@ -108,8 +119,11 @@ class Generations:
         return any(os.path.dirname(s) for s in self.pointer()["segments"])
 
     def read(self, spark: SparkSession, frame: str = "") -> DataFrame:
+        paths = self.paths(frame)
         base = os.path.join(self.root, frame) if frame else self.root
-        return spark.read.option("basePath", base).parquet(*self.paths(frame))
+        if not paths:
+            raise FileNotFoundError(f"{base}: nothing committed")
+        return spark.read.option("basePath", base).parquet(*paths)
 
     # ---- write side ------------------------------------------------------
 
@@ -145,11 +159,13 @@ class Generations:
         self._publish(dict(self.pointer(), batch=batch_id))
 
     def _write(
-        self, fill: Callable[[str], None], batch_id: int | None, keep: str
+        self, fill: Callable[[str], None], batch_id: int | None, keep: str,
+        frame: str = "",
     ) -> None:
         """GC, ``fill`` ``<root>/g-<N>/``, lift the dirs it filled, flip.
-        ``keep``: which old segments stay — ``"none"``, ``"parts"`` (of
-        partitions not written) or ``"all"``."""
+        ``keep``: which old segments of ``frame`` (default: the whole
+        table) stay — ``"none"``, ``"parts"`` (of partitions not
+        written) or ``"all"``; other frames' segments always stay."""
         ptr = self._gc()
         n = ptr["seq"] + 1
         gen = f"g-{n}"
@@ -169,12 +185,12 @@ class Generations:
                 os.rename(os.path.join(out, d), os.path.join(self.root, seg))
             shutil.rmtree(out)
         written = {os.path.dirname(s) for s in new} | {""}
-        kept = {
+        scope = os.path.join(frame, "") if frame else ""
+        mine = [s for s in ptr["segments"] if s.startswith(scope)]
+        kept = [s for s in ptr["segments"] if not s.startswith(scope)] + {
             "none": [],
-            "parts": [
-                s for s in ptr["segments"] if os.path.dirname(s) not in written
-            ],
-            "all": ptr["segments"],
+            "parts": [s for s in mine if os.path.dirname(s) not in written],
+            "all": mine,
         }[keep]
         self._publish({
             "batch": ptr["batch"] if batch_id is None else batch_id,
@@ -189,21 +205,34 @@ class Generations:
         partition_by: list[str] | None = None,
         *,
         split: bool = False,
+        frame: str = "",
     ) -> None:
         """Write ``df`` as the next segment and flip the pointer to it
         (acking ``batch_id`` when given). ``df`` may read the live
         segments: the write lands beside them.
 
-        Whole (``split=False``): ``df`` is the complete table
-        (hive-partitioned by ``partition_by``). Split: ``df`` holds the
-        complete new content of every ``partition_by`` value it
-        mentions; those values' segments are replaced, and values
-        ``df`` does not mention keep theirs. A split commit over a
-        whole table replaces it (the layout migration)."""
+        Whole (``split=False``): ``df`` is the complete table, or with
+        ``frame`` the complete named frame while the other frames keep
+        their segments (hive-partitioned by ``partition_by``). Split:
+        ``df`` holds the complete new content of every ``partition_by``
+        value it mentions; those values' segments are replaced, and
+        values ``df`` does not mention keep theirs. A split commit over
+        a whole table replaces it (the layout migration)."""
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        self._write(writer.parquet, batch_id, "parts" if split else "none")
+        self._write(
+            lambda out: writer.parquet(os.path.join(out, frame)),
+            batch_id, "parts" if split else "none", frame,
+        )
+
+    def replace(self, fill: Callable[[str], None]) -> None:
+        """Replace the whole table with one segment: ``fill(dir)``
+        writes every frame the table will hold into ``dir`` (each a
+        named subdir, as :meth:`append`'s ``fill``), and it may read
+        what it staged there; frames it does not write are dropped.
+        One flip publishes all of them together."""
+        self._write(fill, None, "none")
 
     def append(
         self, fill: Callable[[str], None], batch_id: int | None = None

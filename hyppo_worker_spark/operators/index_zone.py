@@ -2,14 +2,14 @@
 ``IvfPqIndex``: the admitted zone, the basis-point drift gate and the
 driver-side admission ledger.
 
-Every persisted vector index here stores its per-vector state (an IVF
-cell, or PQ codes) in one generation table (``generations.py``) of
-``(key…, admitted)`` rows — the ADMITTED ZONE. Training writes the
-base rows once (``admitted=false``); each admitted batch appends a
-segment of its rows (``admitted=true``) with one pointer flip, and
-nothing existing is rewritten (object-store friendly; a crash leaves
-no partial rows). The zone's key grid is the trained quantizer: k
-cells for IVF, m×k (subspace, code) pairs for PQ.
+Every persisted vector index here is one generation table
+(``generations.py``) whose frames are its model and its per-vector
+state (an IVF cell, or PQ codes) as ``(key…, admitted)`` rows — the
+ADMITTED ZONE. A train stages model and base rows (``admitted=false``)
+in one segment, one flip; each admitted batch appends a segment
+(``admitted=true``), nothing existing rewritten. The key grid is the
+trained quantizer: k cells for IVF (IVF-PQ counts each vector's m = 0
+code row), m×k (subspace, code) pairs for PQ.
 
 Whether the quantizer is still fit for the grown corpus is decided
 by a DRIFT GATE, not a schedule: per group (the whole grid for IVF
@@ -140,9 +140,9 @@ def fold_ledger(
 
 
 class AdmittedZone:
-    """The ``(key…, admitted)`` generation table of one persisted
-    index at ``path``: a base write or a compaction replaces it, an
-    admission appends a segment. ``grid``
+    """The ``(key…, admitted)`` rows of one persisted index, the named
+    ``frame`` of its generation table ``gens``: staged beside the model
+    by a train, appended by an admission. ``grid``
     returns the trained key grid (one row per key, ``grid_size``
     rows); ``by`` names the drift group
     (``()`` for IVF cells, ``("m",)`` for PQ subspaces);
@@ -151,7 +151,8 @@ class AdmittedZone:
 
     def __init__(
         self,
-        path: str,
+        gens: Generations,
+        frame: str,
         keys: tuple[str, ...],
         grid: Callable[[SparkSession], DataFrame],
         grid_size: int,
@@ -159,33 +160,32 @@ class AdmittedZone:
         by: tuple[str, ...] = (),
         partition_by: list[str] | None = None,
     ) -> None:
-        self.path = path
+        self.gens = gens
+        self.frame = frame
         self.keys = keys
         self.grid = grid
         self.grid_size = grid_size
         self.by = by
         self.partition_by = partition_by
-        self.gens = Generations(path)
 
-    def write_base(self, rows: DataFrame) -> None:
-        """(Re)write the zone as the trained corpus' rows: a new
-        generation, published by the pointer flip."""
-        self.gens.commit(
-            rows.withColumn("admitted", F.lit(False)),
-            partition_by=self.partition_by,
-        )
+    def stage(self, rows: DataFrame, out: str, *, admitted: bool) -> None:
+        """Write ``rows`` as this frame of the segment filling ``out``."""
+        w = rows.withColumn("admitted", F.lit(admitted)).write
+        if self.partition_by:
+            w = w.partitionBy(*self.partition_by)
+        w.parquet(os.path.join(out, self.frame))
 
     def append(self, rows: DataFrame) -> DataFrame:
         """Append an admitted batch's rows as one segment; returns
         ``rows``."""
-        w = rows.withColumn("admitted", F.lit(True)).write
-        if self.partition_by:
-            w = w.partitionBy(*self.partition_by)
-        self.gens.append(w.parquet)
+        self.gens.append(lambda out: self.stage(rows, out, admitted=True))
         return rows
 
+    def paths(self) -> list[str]:
+        return self.gens.paths(self.frame)
+
     def read(self, spark: SparkSession) -> DataFrame:
-        return self.gens.read(spark)
+        return self.gens.read(spark, self.frame)
 
     def counts(
         self, spark: SparkSession, probe: DataFrame | None = None
@@ -240,8 +240,8 @@ class AdmittedZone:
         this is a one-listing no-op at or below the threshold, safe to
         call after every admission. Rows and columns are preserved, so
         counts, drift and search are value-identical after the
-        rewrite, and the swap is a pointer flip (see
-        ``maintenance.compact``)."""
+        rewrite, and the swap is a pointer flip of this frame alone
+        (see ``maintenance.compact``)."""
         from hyppo_worker_spark.operators.maintenance import (
             compact,
             dataset_file_stats,
@@ -249,13 +249,12 @@ class AdmittedZone:
 
         if (
             max_files is not None
-            and dataset_file_stats(*self.gens.paths())["n_files"]
-            <= max_files
+            and dataset_file_stats(*self.paths())["n_files"] <= max_files
         ):
             return None
         return compact(
-            spark, self.path, target_file_bytes,
-            partition_by=self.partition_by,
+            spark, self.gens.root, target_file_bytes,
+            partition_by=self.partition_by, frame=self.frame,
         )
 
 

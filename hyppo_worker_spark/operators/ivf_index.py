@@ -4,21 +4,22 @@ admission — the embedding-side twin of ``MinHashLshIndex``.
 The batch operators (``operators/similarity.py``) retrain the coarse
 quantizer on every query; a production embedding corpus cannot — at
 100 TB the k-means training pass is a multi-hour job, while new
-embedding batches arrive continuously. This index stores the two
-frames an IVF probe actually needs:
+embedding batches arrive continuously. This index is ONE generation
+table (``generations.py``) of three named frames:
 
-- ``centroids/``   : (cent_id, cent array<double>) — the trained
-  coarse quantizer, written once per (re)train;
-- ``assignments/`` : (vec_id, cell, admitted) — each vector's cell,
-  appended per admission (object-store friendly: nothing existing is
-  rewritten).
+- ``centroids/``   : (cent_id, cent array<double>) — the quantizer;
+- ``assignments/`` : (vec_id, cell, admitted) — the admitted zone;
+- ``cells/``       : (vec_id, v, vnorm) PARTITIONED BY cell — the
+  inverted lists ``export_cells`` writes for ``search``.
 
-Admitting a batch assigns it against the PERSISTED centroids (one
-broadcast of the tiny centroid frame; the corpus never reshuffles)
-and appends the batch's rows to the admitted zone. Retraining is
-decided by the per-cell population DRIFT GATE over that zone; the
-zone, the gate and the streaming-admission ledger are the persisted-
-index core shared with the PQ indexes (``operators/index_zone.py``).
+A (re)train commits the first two with one pointer flip and drops
+``cells/`` (``search`` raises until the next ``export_cells``, never
+probing new centroids against old lists). An admission assigns a
+batch against the PERSISTED centroids (one broadcast of k rows) and
+appends one segment; ``export_cells`` and compaction replace only
+their own frame. The per-cell DRIFT GATE over the zone decides
+retraining; zone, gate and streaming ledger are the persisted-index
+core shared with the PQ indexes (``operators/index_zone.py``).
 
 Scale: admission cost is O(batch × k) with a broadcast join —
 independent of corpus size; the drift gate reads only the per-cell
@@ -30,14 +31,37 @@ operators at all — SURVEY §2.4).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from hyppo_worker_spark.functions import vectors as V
+from hyppo_worker_spark.generations import Generations, stage
 from hyppo_worker_spark.operators.index_zone import AdmittedZone
 from hyppo_worker_spark.operators.similarity import kmeans_centroids
+
+
+def probe(cents, queries, id_col: str, vec_col: str, *, nprobe=1) -> DataFrame:
+    """(q_id, qv, qnorm, cell) — each query's ``nprobe`` nearest
+    centroids of ``cents`` (cosine desc, cent_id tie-break: the Lloyd
+    assignment rule, so nprobe=1 equals the cell a retrain's final
+    pass would choose). Cost: one broadcast of k rows against the
+    query batch — no training job anywhere in the lineage."""
+    cn = cents.withColumn("cent_norm", V.norm(F.col("cent")))
+    v = queries.select(
+        F.col(id_col).alias("q_id"),
+        V.as_double(F.col(vec_col)).alias("qv"),
+    ).withColumn("qnorm", V.norm(F.col("qv")))
+    scored = v.join(F.broadcast(cn)).withColumn(
+        "__sim",
+        V.dot(F.col("qv"), F.col("cent"))
+        / (F.col("qnorm") * F.col("cent_norm")),
+    )
+    w = W.partitionBy("q_id").orderBy(F.col("__sim").desc(), "cent_id")
+    return (
+        scored.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= nprobe)
+        .select("q_id", "qv", "qnorm", F.col("cent_id").alias("cell"))
+    )
 
 
 class IvfIndex:
@@ -56,10 +80,9 @@ class IvfIndex:
         self.n_centroids = n_centroids
         self.n_iter = n_iter
         self.drift_threshold_bp = drift_threshold_bp
-        self._cents_dir = os.path.join(path, "centroids")
+        self.gens = Generations(path)
         self.zone = AdmittedZone(
-            os.path.join(path, "assignments"),
-            ("cell",),
+            self.gens, "assignments", ("cell",),
             lambda spark: self.centroids(spark).select(
                 F.col("cent_id").alias("cell")
             ),
@@ -67,7 +90,7 @@ class IvfIndex:
         )
 
     def exists(self) -> bool:
-        return os.path.isdir(self._cents_dir)
+        return bool(self.gens.paths("centroids"))
 
     # -- training ------------------------------------------------------
 
@@ -75,23 +98,29 @@ class IvfIndex:
         self, corpus: DataFrame, id_col: str = "vec_id",
         vec_col: str = "embedding",
     ) -> None:
-        """Train the coarse quantizer on ``corpus`` and persist both
-        the centroids and the corpus assignments. Assignments are
-        computed against the RELOADED centroids so the persisted
-        state — not the in-memory lineage — is authoritative (the
-        parquet double roundtrip is bit-exact, but making the read
-        path the source of truth is what lets a later session admit
-        batches without retraining)."""
-        spark = corpus.sparkSession
+        """Train the coarse quantizer on ``corpus`` and commit the
+        centroids and the corpus assignments with one flip.
+        Assignments are computed against the STAGED centroids read
+        back, so the persisted state — not the in-memory lineage — is
+        authoritative (the parquet double roundtrip is bit-exact, but
+        making the read path the source of truth is what lets a later
+        session admit batches without retraining)."""
         cents = kmeans_centroids(
             corpus, id_col=id_col, vec_col=vec_col,
             n_centroids=self.n_centroids, n_iter=self.n_iter,
         )
-        cents.write.mode("overwrite").parquet(self._cents_dir)
-        self.zone.write_base(self.assign(spark, corpus, id_col, vec_col))
+
+        def fill(out: str) -> None:
+            back = stage(cents, out, "centroids")
+            asg = probe(back, corpus, id_col, vec_col).select(
+                F.col("q_id").alias("vec_id"), "cell"
+            )
+            self.zone.stage(asg, out, admitted=False)
+
+        self.gens.replace(fill)
 
     def centroids(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self._cents_dir)
+        return self.gens.read(spark, "centroids")
 
     def assignments(self, spark: SparkSession) -> DataFrame:
         return self.zone.read(spark)
@@ -131,8 +160,8 @@ class IvfIndex:
         self, spark: SparkSession, corpus: DataFrame,
         id_col: str = "vec_id", vec_col: str = "embedding",
     ) -> None:
-        """Write the inverted lists: ``cells/`` parquet PARTITIONED BY
-        cell, each row (vec_id, v, vnorm). This is the production ANN
+        """Commit the inverted lists: the ``cells/`` frame PARTITIONED
+        BY cell, each row (vec_id, v, vnorm). This is the production ANN
         layout (FAISS inverted lists; one directory per cell): a
         nprobe=p query then reads p/k of the corpus via PARTITION
         PRUNING instead of scanning everything — the property that
@@ -144,40 +173,21 @@ class IvfIndex:
             F.col(id_col).alias("vec_id"),
             V.as_double(F.col(vec_col)).alias("v"),
         ).withColumn("vnorm", V.norm(F.col("v")))
-        asg.join(vecs, "vec_id").write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(os.path.join(self.path, "cells"))
+        self.gens.commit(
+            asg.join(vecs, "vec_id"), partition_by=["cell"], frame="cells"
+        )
 
     def cells(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.path, "cells"))
+        return self.gens.read(spark, "cells")  # raises until export_cells
 
     def probe_cells(
         self, spark: SparkSession, queries: DataFrame,
         id_col: str = "vec_id", vec_col: str = "embedding",
         *, nprobe: int = 1,
     ) -> DataFrame:
-        """(q_id, qv, qnorm, cell) — each query's ``nprobe`` nearest
-        PERSISTED centroids (cosine desc, cent_id tie-break: the Lloyd
-        assignment rule, so nprobe=1 equals the cell a retrain's final
-        pass would choose). Cost: one broadcast of k rows against the
-        query batch — no training job anywhere in the lineage."""
-        cn = self.centroids(spark).withColumn(
-            "cent_norm", V.norm(F.col("cent"))
-        )
-        v = queries.select(
-            F.col(id_col).alias("q_id"),
-            V.as_double(F.col(vec_col)).alias("qv"),
-        ).withColumn("qnorm", V.norm(F.col("qv")))
-        scored = v.join(F.broadcast(cn)).withColumn(
-            "__sim",
-            V.dot(F.col("qv"), F.col("cent"))
-            / (F.col("qnorm") * F.col("cent_norm")),
-        )
-        w = W.partitionBy("q_id").orderBy(F.col("__sim").desc(), "cent_id")
-        return (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= nprobe)
-            .select("q_id", "qv", "qnorm", F.col("cent_id").alias("cell"))
+        """:func:`probe` against the PERSISTED centroids."""
+        return probe(
+            self.centroids(spark), queries, id_col, vec_col, nprobe=nprobe
         )
 
     def search(

@@ -11,14 +11,19 @@ shared codebooks spend their k codes per subspace on a far tighter
 cloud than the raw vectors, cutting quantization error at the same
 bit budget.
 
-Spark-first layout, reusing the persisted-index machinery as-is:
+Spark-first layout: ONE generation table (``generations.py``) whose
+named frames are
 
-- ``coarse/``    : an ``IvfIndex`` (centroids + assignments);
+- ``centroids/`` : the coarse quantizer (k rows);
 - ``codebooks/`` : shared per-subspace residual codebooks (m×k rows);
 - ``codes/``     : (vec_id, m, code, admitted) PARTITIONED BY cell —
   an append-only admitted zone; the inverted lists hold CODES, not
   vectors (the point of PQ), and a nprobe=p query reads p/k of the
   codes via partition pruning.
+
+A (re)train commits all three with one pointer flip, each model frame
+read back from the staged segment before what depends on it. No coarse
+assignments are kept: every code row carries its vector's ``cell``.
 
 Search is coarse probe → per-(query, cell) residual ADC lookup table
 (m×k rows per query, broadcast) → table-lookup sum over the probed
@@ -31,8 +36,9 @@ against the persisted codebooks.
 At 100 TB: the codes table is ~m bytes/vector (the only thing
 scanned at query time), training remains the only corpus-sized job,
 and both halves carry a drift gate for retrain scheduling
-(``coarse.drift_report`` per cell, ``drift_report`` per residual
-subspace — the admitted-zone core in ``operators/index_zone.py``).
+(``coarse.drift_report`` per cell, counted from the codes' ``cell``
+column one row per vector; ``drift_report`` per residual subspace —
+the admitted-zone core in ``operators/index_zone.py``).
 Reference analog: the reference maintains no vector index (no
 relational operators at all — SURVEY §2.4); the persisted-artifact
 reuse mirrors its warm-executor affinity (WorkerFSM.scala:161-199).
@@ -40,19 +46,46 @@ reuse mirrors its warm-executor affinity (WorkerFSM.scala:161-199).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from hyppo_worker_spark.functions import vectors as V
-from hyppo_worker_spark.operators.ivf_index import IvfIndex
+from hyppo_worker_spark.generations import stage
+from hyppo_worker_spark.operators.index_zone import AdmittedZone
+from hyppo_worker_spark.operators.ivf_index import IvfIndex, probe
 from hyppo_worker_spark.operators.pq import (
     ADC_SCALE,
     code_zone,
     pq_codebooks,
     pq_encode,
+    pq_subvectors,
 )
+from hyppo_worker_spark.operators.similarity import kmeans_centroids
+
+
+class _CellGate(AdmittedZone):
+    """The coarse cell zone: the codes' m = 0 rows, one per vector."""
+
+    def read(self, spark: SparkSession) -> DataFrame:
+        return super().read(spark).filter(F.col("m") == 0)
+
+
+def _residuals(
+    cents: DataFrame, batch: DataFrame, id_col: str, vec_col: str,
+    *, nprobe: int = 1,
+) -> DataFrame:
+    """(vec_id, cell, rv = v − centroid[cell]) for each of ``batch``'s
+    ``nprobe`` nearest cells of ``cents`` — elementwise zip_with
+    subtraction, bit-exact mirrored by the oracle's list_transform."""
+    return (
+        probe(cents, batch, id_col, vec_col, nprobe=nprobe)
+        .join(F.broadcast(cents), F.col("cell") == F.col("cent_id"))
+        .select(
+            F.col("q_id").alias("vec_id"),
+            "cell",
+            F.zip_with("qv", "cent", lambda a, b: a - b).alias("rv"),
+        )
+    )
 
 
 class IvfPqIndex:
@@ -76,92 +109,66 @@ class IvfPqIndex:
         self.k = k
         self.dim = dim
         self.n_iter = n_iter
-        self.coarse = IvfIndex(
-            os.path.join(path, "coarse"),
-            n_centroids=n_cells,
-            n_iter=n_iter,
+        self.coarse = IvfIndex(path, n_centroids=n_cells, n_iter=n_iter)
+        self.gens = self.coarse.gens
+        self.coarse.zone = _CellGate(
+            self.gens, "codes", ("cell",), self.coarse.zone.grid, n_cells
         )
-        self._books_dir = os.path.join(path, "codebooks")
         self.zone = code_zone(
-            os.path.join(path, "codes"), self.codebooks, m * k,
-            partition_by=["cell"],
+            self.gens, self.codebooks, m * k, partition_by=["cell"]
         )
 
     def exists(self) -> bool:
-        return self.coarse.exists() and os.path.isdir(self._books_dir)
+        return bool(self.gens.paths("codebooks"))
 
     # -- training --------------------------------------------------------
 
-    def _residuals(
-        self, spark: SparkSession, batch: DataFrame, asg: DataFrame,
-        id_col: str, vec_col: str,
-    ) -> DataFrame:
-        """(vec_id, cell, rv = v − centroid[cell]) for ``batch`` given
-        its (vec_id, cell) assignment against the PERSISTED coarse
-        quantizer — elementwise zip_with subtraction, bit-exact
-        mirrored by the oracle's list_transform."""
-        v = batch.select(
-            F.col(id_col).alias("vec_id"),
-            V.as_double(F.col(vec_col)).alias("v"),
-        )
-        return (
-            v.join(asg, "vec_id")
-            .join(
-                F.broadcast(self.coarse.centroids(spark)),
-                F.col("cell") == F.col("cent_id"),
-            )
-            .select(
-                "vec_id",
-                "cell",
-                F.zip_with("v", "cent", lambda a, b: a - b).alias("rv"),
-            )
-        )
-
     def _encode_residuals(
-        self, spark: SparkSession, resid: DataFrame
+        self, books: DataFrame, resid: DataFrame
     ) -> DataFrame:
-        """(vec_id, m, code, cell): PQ-encode residuals against the
-        PERSISTED codebooks (one broadcast of m·k rows)."""
+        """(vec_id, m, code, cell): PQ-encode residuals against
+        ``books`` (one broadcast of m·k rows), keyed by (vec_id, cell)."""
         codes = pq_encode(
-            resid, self.codebooks(spark), "vec_id", "rv",
-            m=self.m, dim=self.dim,
-        ).withColumnRenamed("__id", "vec_id")
-        return codes.join(resid.select("vec_id", "cell"), "vec_id")
+            resid.select(F.struct("vec_id", "cell").alias("k"), "rv"),
+            books, "k", "rv", m=self.m, dim=self.dim,
+        )
+        return codes.select("__id.vec_id", "m", "code", "__id.cell")
 
     def train(
         self, corpus: DataFrame, id_col: str = "vec_id",
         vec_col: str = "embedding",
     ) -> None:
         """Train coarse cells, then shared codebooks on the RESIDUALS,
-        then persist each vector's codes partitioned by cell. Like
-        IvfIndex/PqIndex, every persisted artifact is re-read before
-        dependent computation so the disk state is authoritative."""
-        spark = corpus.sparkSession
-        self.coarse.train(corpus, id_col, vec_col)
-        # The residual frame feeds every remaining training step —
-        # n_iter Lloyd rounds, the encode pass, and the cell join —
-        # and each of those is an action that would otherwise replay
-        # the corpus⋈assignments⋈centroids join from scratch (guide
-        # §5: persist what is reused AND expensive to recompute). The
-        # frame is narrow (id, cell, rv).
+        then commit both with each vector's codes (partitioned by cell)
+        in one flip. Like IvfIndex/PqIndex, each model frame is read
+        back from the staged segment before dependent computation."""
         from hyppo_worker_spark.session import tracked_persist
 
-        resid = tracked_persist(
-            self._residuals(
-                spark, corpus,
-                self.coarse.assignments(spark).select("vec_id", "cell"),
-                id_col, vec_col,
+        cents = kmeans_centroids(
+            corpus, id_col=id_col, vec_col=vec_col,
+            n_centroids=self.n_cells, n_iter=self.n_iter,
+        )
+
+        def fill(out: str) -> None:
+            back = stage(cents, out, "centroids")
+            # The residual frame feeds every remaining training step —
+            # n_iter Lloyd rounds and the encode pass — each an action
+            # that would otherwise replay the corpus assignment (guide
+            # §5: persist what is reused AND expensive to recompute).
+            resid = tracked_persist(_residuals(back, corpus, id_col, vec_col))
+            books = pq_codebooks(
+                resid, "vec_id", "rv",
+                m=self.m, k=self.k, dim=self.dim, n_iter=self.n_iter,
             )
-        )
-        books = pq_codebooks(
-            resid, "vec_id", "rv",
-            m=self.m, k=self.k, dim=self.dim, n_iter=self.n_iter,
-        )
-        books.write.mode("overwrite").parquet(self._books_dir)
-        self.zone.write_base(self._encode_residuals(spark, resid))
+            self.zone.stage(
+                self._encode_residuals(stage(books, out, "codebooks"), resid),
+                out, admitted=False,
+            )
+
+        self.gens.replace(fill)
 
     def codebooks(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self._books_dir)
+        return self.gens.read(spark, "codebooks")
 
     def codes(self, spark: SparkSession) -> DataFrame:
         return self.zone.read(spark)
@@ -178,9 +185,9 @@ class IvfPqIndex:
         assigned centroid, PQ encode against the persisted codebooks
         (one broadcast of m·k rows). O(batch·(k + m·k)), independent
         of corpus size; no training anywhere."""
-        asg = self.coarse.assign(spark, batch, id_col, vec_col)
         return self._encode_residuals(
-            spark, self._residuals(spark, batch, asg, id_col, vec_col)
+            self.codebooks(spark),
+            _residuals(self.coarse.centroids(spark), batch, id_col, vec_col),
         )
 
     def admit(
@@ -228,42 +235,23 @@ class IvfPqIndex:
         to Catalyst/AQE: a selective attribute set broadcasts, a huge
         one shuffles — at layout time the better answer is embedding
         the hot attribute into the codes zone next to ``cell``."""
-        d = self.dim // self.m
-        q = self.coarse.probe_cells(
-            spark, queries, id_col, vec_col, nprobe=nprobe
+        qres = _residuals(
+            self.coarse.centroids(spark), queries, id_col, vec_col,
+            nprobe=nprobe,
         )
-        cents = self.coarse.centroids(spark)
-        qres = (
-            q.join(F.broadcast(cents), F.col("cell") == F.col("cent_id"))
-            .select(
-                "q_id",
-                "cell",
-                F.zip_with("qv", "cent", lambda a, b: a - b).alias("rqv"),
-            )
+        qsubs = pq_subvectors(  # keyed by (query, probed cell)
+            qres.select(F.struct("vec_id", "cell").alias("k"), "rv"),
+            "k", "rv", m=self.m, dim=self.dim,
         )
-        parts = F.array(
-            *[
-                F.struct(
-                    F.lit(mi).alias("m"),
-                    F.slice(F.col("rqv"), mi * d + 1, d).alias("sv"),
-                )
-                for mi in range(self.m)
-            ]
-        )
-        qsubs = qres.select(
-            "q_id", "cell", F.explode(parts).alias("p")
-        ).select("q_id", "cell", F.col("p.m").alias("m"), F.col("p.sv").alias("sv"))
         lut = qsubs.join(F.broadcast(self.codebooks(spark)), "m").select(
-            "q_id",
-            "cell",
-            "m",
+            F.col("__id.vec_id").alias("q_id"), "__id.cell", "m",
             F.col("cent_id").alias("code"),
             F.floor(V.sqdist(F.col("sv"), F.col("cent")) * ADC_SCALE)
             .cast("long")
             .alias("contrib"),
         )
         probed = sorted(
-            {r["cell"] for r in q.select("cell").distinct().collect()}
+            {r["cell"] for r in qres.select("cell").distinct().collect()}
         )  # bounded pull: ≤ n_queries·nprobe ints
         cand = self.codes(spark).filter(F.col("cell").isin(probed))
         if allowed is not None:

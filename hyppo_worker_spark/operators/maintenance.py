@@ -50,9 +50,10 @@ def compact(
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
     partition_by: list[str] | None = None,
+    frame: str = "",
 ) -> dict:
-    """Rewrite the generation table at ``path`` (``generations.py``)
-    into ~target-sized files.
+    """Rewrite the generation table at ``path`` (``generations.py``),
+    or only its named ``frame``, into ~target-sized files.
 
     Partition count = ceil(current bytes / target). The rewrite is the
     table's next generation and the swap is the pointer flip: a reader
@@ -65,15 +66,15 @@ def compact(
     on the compacted zone. Returns before/after file stats.
     """
     gens = Generations(path)
-    before = dataset_file_stats(*gens.paths())
+    before = dataset_file_stats(*gens.paths(frame))
     n_parts = max(1, -(-before["total_bytes"] // target_file_bytes))
-    df = gens.read(spark)
+    df = gens.read(spark, frame)
     if partition_by:
         df = df.repartition(*[F.col(c) for c in partition_by])
     else:
         df = df.repartition(n_parts)
-    gens.commit(df, partition_by=partition_by)
-    after = dataset_file_stats(*gens.paths())
+    gens.commit(df, partition_by=partition_by, frame=frame)
+    after = dataset_file_stats(*gens.paths(frame))
     return {"before": before, "after": after, "target_partitions": n_parts}
 
 

@@ -34,12 +34,11 @@ the only corpus-scale shuffle is the final per-query top-k.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from hyppo_worker_spark.functions import vectors as V
+from hyppo_worker_spark.generations import Generations, stage
 from hyppo_worker_spark.operators.index_zone import AdmittedZone
 from hyppo_worker_spark.operators.similarity import FIXED_POINT_SCALE
 
@@ -227,13 +226,13 @@ def pq_adc_topk(
 class PqIndex:
     """Filesystem-backed PQ index — the codes-side twin of
     ``ivf_index.IvfIndex``: codebooks train ONCE on the standing
-    corpus and persist (``codebooks/`` m×k rows, ``codes/`` narrow
-    (vec_id, m, code, admitted) rows in an append-only admitted zone,
-    ``operators/index_zone.py``); a new embedding batch is admitted by
-    ENCODING against the persisted codebooks (one broadcast of m·k
-    rows; O(batch·m·k), independent of corpus size). Retraining is
-    decided per SUBSPACE by the zone's basis-point drift gate grouped
-    by ``m``: a drifted subspace means that slice of the vectors
+    corpus and are committed with the corpus codes in one flip, as
+    the ``codebooks/`` (m×k rows) and ``codes/`` (admitted zone of
+    (vec_id, m, code, admitted) rows) frames of one generation table;
+    a batch is admitted by ENCODING against the persisted codebooks
+    (O(batch·m·k), one appended segment). Retraining is decided per
+    SUBSPACE by the zone's basis-point drift gate grouped by ``m``: a
+    drifted subspace means that slice of the vectors
     stopped resembling what its codebook was trained on
     (reconstruction error decays there first), and m-keyed drift
     tells you WHICH codebooks to retrain.
@@ -255,34 +254,40 @@ class PqIndex:
         self.dim = dim
         self.n_iter = n_iter
         self.drift_threshold_bp = drift_threshold_bp
-        self._books_dir = os.path.join(path, "codebooks")
-        self.zone = code_zone(
-            os.path.join(path, "codes"), self.codebooks, m * k
-        )
+        self.gens = Generations(path)
+        self.zone = code_zone(self.gens, self.codebooks, m * k)
 
     def exists(self) -> bool:
-        return os.path.isdir(self._books_dir)
+        return bool(self.gens.paths("codebooks"))
 
     def train(
         self, corpus: DataFrame, id_col: str = "vec_id",
         vec_col: str = "embedding",
     ) -> None:
-        """Train per-subspace codebooks on ``corpus`` and persist
-        codebooks + corpus codes; codes are computed against the
-        RELOADED codebooks so the persisted state is authoritative."""
-        spark = corpus.sparkSession
+        """Train per-subspace codebooks on ``corpus`` and commit them
+        with the corpus codes in one flip; codes are computed against
+        the STAGED codebooks read back, so the disk is authoritative."""
         books = pq_codebooks(
             corpus, id_col, vec_col,
             m=self.m, k=self.k, dim=self.dim, n_iter=self.n_iter,
         )
-        books.write.mode("overwrite").parquet(self._books_dir)
-        self.zone.write_base(self.encode(spark, corpus, id_col, vec_col))
+
+        def fill(out: str) -> None:
+            back = stage(books, out, "codebooks")
+            codes = self._encode(back, corpus, id_col, vec_col)
+            self.zone.stage(codes, out, admitted=False)
+
+        self.gens.replace(fill)
 
     def codebooks(self, spark) -> DataFrame:
-        return spark.read.parquet(self._books_dir)
+        return self.gens.read(spark, "codebooks")
 
     def codes(self, spark) -> DataFrame:
         return self.zone.read(spark)
+
+    def _encode(self, books, batch, id_col, vec_col) -> DataFrame:
+        out = pq_encode(batch, books, id_col, vec_col, m=self.m, dim=self.dim)
+        return out.withColumnRenamed("__id", "vec_id")
 
     def encode(
         self, spark, batch: DataFrame, id_col: str = "vec_id",
@@ -292,11 +297,7 @@ class PqIndex:
         codebooks (pq_encode's argmin contract — ties → lowest id, so
         an admitted vector codes exactly as a full retrain's encode
         pass would when the codebooks agree)."""
-        out = pq_encode(
-            batch, self.codebooks(spark), id_col, vec_col,
-            m=self.m, dim=self.dim,
-        )
-        return out.withColumnRenamed("__id", "vec_id")
+        return self._encode(self.codebooks(spark), batch, id_col, vec_col)
 
     def admit(
         self, spark, batch: DataFrame, id_col: str = "vec_id",
@@ -312,14 +313,15 @@ class PqIndex:
 
 
 def code_zone(
-    path: str, codebooks, grid_size: int,
+    gens: Generations, codebooks, grid_size: int,
     partition_by: list[str] | None = None,
 ) -> AdmittedZone:
-    """The admitted zone of a PQ-coded index: (vec_id, m, code, …)
-    rows keyed by (m, code) over the codebooks' grid, drift grouped
-    per subspace. Shared by ``PqIndex`` and ``IvfPqIndex``."""
+    """The ``codes`` admitted zone of a PQ-coded index: (vec_id, m,
+    code, …) rows keyed by (m, code) over the codebooks' grid, drift
+    grouped per subspace. Shared by ``PqIndex`` and ``IvfPqIndex``."""
     return AdmittedZone(
-        path,
+        gens,
+        "codes",
         ("m", "code"),
         lambda spark: codebooks(spark).select(
             "m", F.col("cent_id").alias("code")

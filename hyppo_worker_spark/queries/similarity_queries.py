@@ -1378,9 +1378,10 @@ def s14_incremental_pq_maintenance(
 # path s12/s13 built the write path for. Every earlier search row
 # (s04/s05) trains its quantizer INSIDE the query; the production read
 # path — the reason the index exists — loads the persisted artifacts
-# and runs NO training job: centroids/ is a k-row parquet read, the
-# probed cell list (bounded: ≤ |queries|·nprobe ints) becomes a
-# LITERAL partition filter on the cells/ inverted lists, and the only
+# and runs NO training job: the index's centroids frame is a k-row
+# parquet read, the probed cell list (bounded: ≤ |queries|·nprobe
+# ints) becomes a LITERAL partition filter on the cells frame's
+# inverted lists (cells/cell=<c>/g-<N>), and the only
 # corpus-side work is the pruned scan + per-query top-k. Both
 # properties are asserted FROM THE ENGINE and surfaced as columns:
 # plan_no_training (no ExistingRDD — Lloyd's localCheckpoint signature
@@ -1465,7 +1466,8 @@ def s15_persisted_ivf_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="hyppo-s15-")
 
     # ---- build job (amortized across every query in production):
-    # train once, persist centroids + assignments + inverted lists
+    # train once (centroids + assignments, one flip), then commit the
+    # inverted lists as the index's cells frame
     idx = IvfIndex(os.path.join(work, "ivf"), n_centroids=8, n_iter=2)
     idx.train(emb)
     idx.export_cells(spark, emb)
@@ -1527,8 +1529,9 @@ def s15_persisted_ivf_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 # encodes the RESIDUAL (v − centroid[cell]) per coarse cell — the
 # per-cell re-centering that lets shared codebooks spend their codes
 # on a tighter cloud (lower quantization error at the same bits).
-# Everything persists (operators/ivfpq.py:IvfPqIndex: coarse/ +
-# codebooks/ + codes/ partitioned BY CELL) and the read path trains
+# Everything persists (operators/ivfpq.py:IvfPqIndex: one generation
+# table of centroids/ + codebooks/ + codes/ partitioned BY CELL,
+# committed by one flip per train) and the read path trains
 # NOTHING: probe against persisted centroids, per-(query, cell)
 # residual ADC lookup table against persisted codebooks, table-lookup
 # sum over ONLY the probed cells' codes (literal partition filter —

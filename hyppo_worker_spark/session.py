@@ -396,7 +396,7 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE
             df = _read_parquet(spark, path)
             if dict(df.dtypes).get("ts") == "bigint":
                 df = df.withColumn(
-                    "ts", F.timestamp_micros((F.col("ts") / 1000).cast("long"))
+                    "ts", F.timestamp_micros(F.expr("ts div 1000"))
                 )
         else:
             df = _read_parquet(spark, path)

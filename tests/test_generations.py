@@ -24,10 +24,12 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
 from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from hyppo_worker_spark.generations import POINTER, Generations
+from hyppo_worker_spark.session import persist_scope
 
 
 class Crash(Exception):
@@ -518,7 +520,7 @@ def test_zone_compaction_drill(spark, tmp_path, monkeypatch):
     index().train(_corpus(spark))
     for tag in range(2, 5):
         index().admit(spark, _corpus(spark, n=5, tag=tag))
-    root = index().zone.path
+    root = index().path
     drift = {tuple(r) for r in index().drift_report(spark).collect()}
     n_before = dataset_file_stats(*Generations(root).paths())["n_files"]
 
@@ -534,19 +536,26 @@ def test_zone_compaction_drill(spark, tmp_path, monkeypatch):
         lambda: index().zone.compact(spark, max_files=2),
         crashed, applied,
     )
-    assert n_steps == 3  # the write, the pointer fsync + replace
+    # the write, its rename into the zone's frame dir, staging removal,
+    # the pointer fsync + replace
+    assert n_steps == 5
 
 
 # ---- appends: index zone, LSH index, dedup sink -------------------------
 
 
-def _append_drill(monkeypatch, base: str, root: str, run, rows) -> int:
+def _append_drill(
+    monkeypatch, base: str, root: str, run, rows, *, retry: bool = True
+) -> int:
     """Crash one append ``run()`` (no batch id, so not idempotent) at
     every step k, each time from a copy of the pre-append ``base``:
     ``rows()`` reads the pre-append rows until the flip and the
     post-append rows from it on — never a partial append — and after a
     crash before the flip, a retry appends exactly once and leaves none
-    of the crashed attempt's files. Returns the number of steps."""
+    of the crashed attempt's files (``retry=False`` skips the retries,
+    for a ``run`` that retrains a model: the recovery is the same
+    ``Generations._write`` the other drills retry). Returns the number
+    of steps."""
     template = base + ".pre"
     shutil.copytree(base, template)
     pre_seq = Generations(root).pointer()["seq"]
@@ -566,6 +575,8 @@ def _append_drill(monkeypatch, base: str, root: str, run, rows) -> int:
             assert rows() == post, f"k={k}"
             continue
         assert rows() == pre, f"k={k}: partial append visible"
+        if not retry:
+            continue
         left = {
             f for f in _data_files(root)
             if not any(f.startswith(p + os.sep) for p in Generations(root).paths())
@@ -596,7 +607,7 @@ def test_zone_append_drill(spark, tmp_path, monkeypatch):
         return IvfPqIndex(base, n_cells=3, m=2, k=4, dim=8, n_iter=2)
 
     index().train(corpus(40, 0))
-    root = index().zone.path
+    root = index().path
 
     def rows():
         return sorted(map(tuple, index().zone.read(spark).collect()))
@@ -606,6 +617,154 @@ def test_zone_append_drill(spark, tmp_path, monkeypatch):
         lambda: index().admit(spark, corpus(6, 1)), rows,
     )
     assert Generations(root).is_split()  # cells sit above the segments
+    assert n_steps >= 4  # the write, a rename per cell, fsync, replace
+
+
+# ---- index train, retrain and export: one flip each ----------------------
+
+
+def _vectors(spark, tag: int, dim: int, n: int = 24):
+    """``n`` small vectors; each ``tag`` shifts every value, so a
+    retrain on another tag changes the model."""
+    return spark.createDataFrame(
+        [
+            (tag * 1000 + i,
+             [float((i * 7 + j) % 5 + (i % 3) * 4 + 3 * tag) for j in range(dim)])
+            for i in range(n)
+        ],
+        "vec_id long, embedding array<double>",
+    )
+
+
+def _ivf(path):
+    from hyppo_worker_spark.operators.ivf_index import IvfIndex
+
+    return IvfIndex(path, n_centroids=3, n_iter=0)
+
+
+def _pq(path):
+    from hyppo_worker_spark.operators.pq import PqIndex
+
+    return PqIndex(path, m=2, k=3, dim=4, n_iter=0)
+
+
+def _ivfpq(path):
+    from hyppo_worker_spark.operators.ivfpq import IvfPqIndex
+
+    return IvfPqIndex(path, n_cells=2, m=2, k=3, dim=4, n_iter=0)
+
+
+# kind -> (handle, vector dim, the index's frames, the base rows of a
+# corpus re-assigned or re-encoded against the committed model)
+_INDEXES = {
+    "ivf": (
+        _ivf, 8, ("centroids", "assignments", "cells"),
+        lambda spark, idx, c: idx.assign(spark, c),
+    ),
+    "pq": (
+        _pq, 4, ("codebooks", "codes"),
+        lambda spark, idx, c: idx.encode(spark, c),
+    ),
+    "ivfpq": (
+        _ivfpq, 4, ("centroids", "codebooks", "codes"),
+        lambda spark, idx, c: idx.encode_batch(spark, c),
+    ),
+}
+
+
+def _train(make, base: str, corpus) -> None:
+    with persist_scope():  # release each run's training persists
+        make(base).train(corpus)
+
+
+def _index_state(spark, idx, frames) -> tuple:
+    """``exists()`` and every frame's rows, read from the pointer."""
+    return idx.exists(), [
+        sorted(map(tuple, idx.gens.read(spark, f).collect()))
+        if idx.gens.paths(f) else []
+        for f in frames
+    ]
+
+
+def _base_matches_model(spark, idx, corpus, encode) -> None:
+    """The committed base rows are the corpus re-assigned (re-encoded)
+    against the model read back from the committed segment."""
+    fresh = encode(spark, idx, corpus)
+    stored = idx.zone.read(spark).filter(~F.col("admitted"))
+    assert {tuple(r) for r in stored.select(*fresh.columns).collect()} == {
+        tuple(r) for r in fresh.collect()
+    }
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("retrain", [False, True], ids=["first", "retrain"])
+@pytest.mark.parametrize("kind", sorted(_INDEXES))
+def test_index_train_drill(spark, tmp_path, monkeypatch, kind, retrain):
+    """A train commits the model and the base rows as one segment with
+    one flip: a crash at any step leaves the index wholly old (on a
+    first train: ``exists()`` False, no frame readable) or wholly new —
+    model rows, zone rows and ``exists()`` agree. A retrain on another
+    corpus also drops the old frames in that flip: the admitted rows
+    and IVF's exported inverted lists, whose cells the new centroids
+    no longer define."""
+    make, dim, frames, encode = _INDEXES[kind]
+    base = str(tmp_path / kind)
+    os.makedirs(base)
+    old, new = _vectors(spark, 0, dim), _vectors(spark, 1, dim)
+    if retrain:
+        _train(make, base, old)
+        make(base).admit(spark, _vectors(spark, 2, dim, n=4))
+        if kind == "ivf":
+            make(base).export_cells(spark, old)
+        _base_matches_model(spark, make(base), old, encode)
+
+    def state():
+        return _index_state(spark, make(base), frames)
+
+    pre = state()
+    assert pre[0] is retrain and all(pre[1]) is retrain
+    n_steps = _append_drill(
+        monkeypatch, base, base, lambda: _train(make, base, new), state,
+        retry=False,
+    )
+    exists, rows = state()
+    assert exists and all(rows[:2])
+    if kind == "ivf":
+        assert rows[2] == []  # no inverted lists until export_cells
+    assert not make(base).zone.read(spark).filter(F.col("admitted")).count()
+    _base_matches_model(spark, make(base), new, encode)
+    # the model and base-row writes, a rename into each frame dir,
+    # staging removal, the pointer fsync + replace
+    assert n_steps >= 7
+
+
+@pytest.mark.slow
+def test_ivf_export_after_retrain_drill(spark, tmp_path, monkeypatch):
+    """After a retrain, ``search`` raises until ``export_cells`` runs;
+    the export replaces only the ``cells`` frame with one flip, so a
+    crash at any step leaves the model and zone as they were and the
+    lists either absent or whole, and the retry exports once."""
+    make, dim, frames, _ = _INDEXES["ivf"]
+    base = str(tmp_path / "ivf")
+    old, new = _vectors(spark, 0, dim), _vectors(spark, 1, dim)
+    _train(make, base, old)
+    make(base).export_cells(spark, old)
+    _train(make, base, new)
+    with pytest.raises(FileNotFoundError, match="cells"):
+        make(base).search(spark, new.limit(2))
+
+    def state():
+        return _index_state(spark, make(base), frames)
+
+    pre = state()
+    n_steps = _append_drill(
+        monkeypatch, base, base,
+        lambda: make(base).export_cells(spark, new), state,
+    )
+    exists, rows = state()
+    assert exists and rows[:2] == pre[1][:2]  # the model's segment carried over
+    assert {r[0] for r in rows[2]} == {r.vec_id for r in new.collect()}
+    assert make(base).search(spark, new.limit(2), k=2).count()
     assert n_steps >= 4  # the write, a rename per cell, fsync, replace
 
 

@@ -58,7 +58,7 @@ def test_admit_appends_without_rewriting(spark, tmp_path):
     idx.train(_corpus(spark))
     def files():  # the zone's live segments (an admission adds one)
         return {
-            p for seg in idx.zone.gens.paths()
+            p for seg in idx.zone.paths()
             for p in glob.glob(os.path.join(seg, "*.parquet"))
         }
 
@@ -284,7 +284,7 @@ def test_compact_assignments_preserves_counts_and_drift(spark, tmp_path):
     for tag in range(2, 10):
         idx.admit(spark, _corpus(spark, n=5, tag=tag))
     def n_files():  # the zone's live segments
-        return dataset_file_stats(*idx.zone.gens.paths())["n_files"]
+        return dataset_file_stats(*idx.zone.paths())["n_files"]
 
     before_files = n_files()
     before = {

@@ -31,7 +31,7 @@ def test_train_persists_cell_partitioned_codes(spark, tmp_path):
     )
     idx.train(_corpus(spark))
     assert idx.exists()
-    cell_dirs = {os.path.dirname(p) for p in idx.zone.gens.paths()}
+    cell_dirs = {os.path.dirname(p) for p in idx.zone.paths()}
     assert all(os.path.basename(d).startswith("cell=") for d in cell_dirs)
     assert len(cell_dirs) >= 2  # two separable clusters -> >= 2 lists
     # every vector carries exactly m codes
@@ -130,7 +130,7 @@ def test_compact_codes_keeps_partitioning_and_search(spark, tmp_path):
     q = corpus.filter(F.col("vec_id") < 4)
     before = {tuple(r) for r in idx.search(spark, q, topk=3).collect()}
     idx.zone.compact(spark)
-    segments = idx.zone.gens.paths()  # cell=<c>/g-<n>, one per cell
+    segments = idx.zone.paths()  # cell=<c>/g-<n>, one per cell
     cell_dirs = [
         p for p in segments
         if os.path.basename(os.path.dirname(p)).startswith("cell=")
@@ -154,16 +154,16 @@ def test_admit_appends_and_subspace_drift_gates(spark, tmp_path):
         str(tmp_path / "pq"), n_cells=4, m=4, k=4, dim=16, n_iter=2
     )
     idx.train(_corpus(spark))
-    before_files = set(
-        glob.glob(str(tmp_path / "pq" / "codes" / "**" / "*.parquet"),
-                  recursive=True)
-    )
+    def files():  # the codes zone's live segments
+        return {
+            p for seg in idx.zone.paths()
+            for p in glob.glob(os.path.join(seg, "*.parquet"))
+        }
+
+    before_files = files()
     codes = idx.admit(spark, _corpus(spark, n=10, tag=5)).collect()
     assert len(codes) == 10 * 4  # m codes per admitted vector
-    after_files = set(
-        glob.glob(str(tmp_path / "pq" / "codes" / "**" / "*.parquet"),
-                  recursive=True)
-    )
+    after_files = files()
     assert before_files <= after_files and len(after_files) > len(
         before_files
     )
@@ -246,3 +246,41 @@ def test_filtered_search_pre_filter_semantics(spark, tmp_path):
     )
     got = rid.search(spark, q, topk=5, allowed=allowed_even).collect()
     assert got and all(r["neighbor_id"] % 2 == 0 for r in got)
+
+
+def test_coarse_gate_counts_each_admitted_vector_once(spark, tmp_path):
+    """The coarse per-cell gate counts the codes' ``cell`` column, one
+    row per vector (its m = 0 code row): 30 copies of one vector
+    admitted into its cell show as 30 admissions there, n_base is the
+    base vectors per cell (not m times that), and the gate fires."""
+    rows = [
+        (i, [float((i * 7 + j) % 5 + (i % 3) * 4) for j in range(8)])
+        for i in range(40)
+    ]
+    schema = "vec_id long, embedding array<double>"
+    idx = IvfPqIndex(
+        str(tmp_path / "pq"), n_cells=3, m=2, k=4, dim=8, n_iter=2
+    )
+    idx.train(spark.createDataFrame(rows, schema))
+    idx.admit(
+        spark,
+        spark.createDataFrame([(5000 + i, rows[0][1]) for i in range(30)], schema),
+    )
+    base = {}
+    for r in (
+        idx.codes(spark).filter(~F.col("admitted"))
+        .select("vec_id", "cell").distinct().collect()
+    ):
+        base[r.cell] = base.get(r.cell, 0) + 1
+    (hot,) = {
+        r.cell for r in idx.codes(spark).filter(F.col("vec_id") >= 5000).collect()
+    }
+    rep = {r.cell: r for r in idx.coarse.drift_report(spark).collect()}
+    assert sum(base.values()) == 40 and len(rep) == 3
+    assert {c: r.n_base for c, r in rep.items()} == {
+        c: base.get(c, 0) for c in rep
+    }
+    assert {c: r.n_admitted for c, r in rep.items()} == {
+        c: 30 if c == hot else 0 for c in rep
+    }
+    assert all(r.retrain_needed for r in rep.values())

@@ -83,18 +83,28 @@ def test_events_nanos_read_as_microsecond_ts_on_every_load(spark, tmp_path):
     """An ``events`` table whose ts is INT64 TIMESTAMP(NANOS) reads
     through nanosAsLong and is truncated to microseconds, on the
     inferring read and on the cached-schema read alike."""
-    ns = [1_700_000_000_123_456_789, 1_700_000_001_000_000_001]
+    # the third value sits just below the next microsecond: a double
+    # division would round it up to ...21.000001
+    ns = [
+        1_700_000_000_123_456_789,
+        1_700_000_001_000_000_001,
+        1_700_000_001_000_000_999,
+    ]
     pq.write_table(
         pa.table(
             {
-                "event_id": pa.array([1, 2], pa.int64()),
+                "event_id": pa.array([1, 2, 3], pa.int64()),
                 "ts": pa.array(ns, pa.timestamp("ns")),
             }
         ),
         tmp_path / "events.parquet",
         version="2.6",
     )
-    want = ["2023-11-14 22:13:20.123456", "2023-11-14 22:13:21.000000"]
+    want = [
+        "2023-11-14 22:13:20.123456",
+        "2023-11-14 22:13:21.000000",
+        "2023-11-14 22:13:21.000000",
+    ]
     try:
         for _ in range(2):
             df = _load(spark, str(tmp_path), "events")

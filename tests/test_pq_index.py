@@ -48,7 +48,7 @@ def test_admit_appends_without_rewriting(spark, tmp_path):
     idx.train(_corpus(spark))
     def files():  # the zone's live segments (an admission adds one)
         return {
-            p for seg in idx.zone.gens.paths()
+            p for seg in idx.zone.paths()
             for p in glob.glob(os.path.join(seg, "*.parquet"))
         }
 
@@ -110,9 +110,9 @@ def test_zero_base_subspace_gate_fires_not_null(spark, tmp_path):
     codes = idx.codes(spark).withColumn(
         "admitted", F.lit(True)
     ).collect()
-    idx.zone.gens.commit(spark.createDataFrame(
+    idx.gens.commit(spark.createDataFrame(
         codes, "vec_id long, m int, code int, admitted boolean"
-    ))
+    ), frame="codes")
     rep = idx.drift_report(spark).collect()
     assert all(r.drift_bp is not None for r in rep)
     assert all(r.retrain_needed is True for r in rep)
@@ -131,7 +131,7 @@ def test_compact_codes_preserves_subspace_drift(spark, tmp_path):
     for tag in range(2, 8):
         idx.admit(spark, _corpus(spark, n=5, tag=tag))
     def n_files():  # the zone's live segments
-        return dataset_file_stats(*idx.zone.gens.paths())["n_files"]
+        return dataset_file_stats(*idx.zone.paths())["n_files"]
 
     before_files = n_files()
     before = {tuple(r) for r in idx.drift_report(spark).collect()}
