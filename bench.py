@@ -17,6 +17,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from hyppo_worker_spark.profile import profile
 from hyppo_worker_spark.queries import load_all
 from hyppo_worker_spark.session import clear_cache, get_spark
 
@@ -323,6 +324,7 @@ def main() -> None:
     # it); tail-safe summary scalars survive the driver's 2000-char
     # truncation.
     probe_rows: dict[str, float] = {}
+    layers: dict[str, dict] = {}
 
     def row_probe() -> float:
         t0 = time.time()
@@ -358,15 +360,27 @@ def main() -> None:
         # Min of three timed runs: single-run numbers at local[32]
         # swing up to 8x on identical plans (JIT recompilation + GC
         # pauses land on whichever query is executing); the minimum is
-        # the steady-state latency and is stable run-to-run.
+        # the steady-state latency and is stable run-to-run. The best
+        # run's profile (read after its timed region) goes to the sidecar.
         best = None
         for _ in range(3):
-            t0 = time.time()
-            df = q.spark_fn(spark, sf_dir)
-            n = df.count() if df.isStreaming is False else -1
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-            del n
+            walls = []
+
+            def run():
+                t0 = time.time()
+                df = q.spark_fn(spark, sf_dir)
+                if df.isStreaming is False:
+                    df.count()
+                walls.append(time.time() - t0)
+
+            try:
+                prof = profile(spark, run)[1]
+            except RuntimeError as e:  # an incomplete profile, if the row ran
+                if not walls:
+                    raise
+                prof = {"error": str(e)}
+            if best is None or walls[0] < best:
+                best, layers[name] = walls[0], prof
             clear_cache(spark, include_rdd_blocks=True)
         timings[name] = round(best, 3)
         sweep_scratch(scratch_before)
@@ -401,7 +415,8 @@ def main() -> None:
         )
         with open(detail_path, "w") as fh:
             json.dump(
-                {"probe_s": probe_rows, "plan_s": plan_times}, fh
+                {"probe_s": probe_rows, "plan_s": plan_times, "layers": layers},
+                fh,
             )
     except OSError as e:  # diagnostics only — never fail the bench
         print(f"bench_detail write failed: {e}", file=sys.stderr)

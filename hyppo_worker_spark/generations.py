@@ -38,9 +38,12 @@ import os
 import shutil
 from typing import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 POINTER = "_CURRENT.json"
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def publish(path: str, text: str) -> None:
@@ -65,6 +68,21 @@ def _remove(path: str) -> None:
         shutil.rmtree(path)
     else:
         os.remove(path)
+
+
+def _frame_of(segment: str) -> str:
+    """``corpus/g-3``, ``cells/cell=1/g-3`` -> their frame; ``g-3``,
+    ``bucket=1/g-3`` -> the table itself ('')."""
+    head = segment.split(os.sep, 1)[0]
+    return "" if head == segment or "=" in head else head
+
+
+def _footer_schema(segment_dir: str) -> dict | None:
+    """The Spark schema (JSON) of a segment's data columns, from one
+    part file's footer on the driver; None if Spark did not write it."""
+    part = min(f for f in os.listdir(segment_dir) if f.startswith("part-"))
+    meta = pq.read_schema(os.path.join(segment_dir, part)).metadata or {}
+    return json.loads(meta[SPARK_SCHEMA_KEY]) if SPARK_SCHEMA_KEY in meta else None
 
 
 def stage(df: DataFrame, out: str, frame: str) -> DataFrame:
@@ -104,12 +122,11 @@ class Generations:
 
     def paths(self, frame: str = "") -> list[str]:
         """The segments that make up the table (or its ``frame``) now."""
+        return self._paths(self.pointer(), frame)
+
+    def _paths(self, ptr: dict, frame: str) -> list[str]:
         prefix = os.path.join(frame, "") if frame else ""
-        return [
-            os.path.join(self.root, s)
-            for s in self.pointer()["segments"]
-            if s.startswith(prefix)
-        ]
+        return [os.path.join(self.root, s) for s in ptr["segments"] if s.startswith(prefix)]
 
     def exists(self) -> bool:
         return bool(self.pointer()["segments"])
@@ -119,11 +136,19 @@ class Generations:
         return any(os.path.dirname(s) for s in self.pointer()["segments"])
 
     def read(self, spark: SparkSession, frame: str = "") -> DataFrame:
-        paths = self.paths(frame)
+        """The table (or its ``frame``) now, with the schema recorded at
+        the flip: no inference job (partition columns are inferred from
+        their directory names). A pointer with no schema infers."""
+        ptr = self.pointer()
+        paths = self._paths(ptr, frame)
         base = os.path.join(self.root, frame) if frame else self.root
         if not paths:
             raise FileNotFoundError(f"{base}: nothing committed")
-        return spark.read.option("basePath", base).parquet(*paths)
+        reader = spark.read.option("basePath", base)
+        schema = ptr.get("schemas", {}).get(frame)
+        if schema is not None:
+            reader = reader.schema(T.StructType.fromJson(schema))
+        return reader.parquet(*paths)
 
     # ---- write side ------------------------------------------------------
 
@@ -192,10 +217,14 @@ class Generations:
             "parts": [s for s in mine if os.path.dirname(s) not in written],
             "all": mine,
         }[keep]
+        schemas = dict(ptr.get("schemas", {}))
+        for f, seg in {_frame_of(s): s for s in new}.items():
+            schemas[f] = _footer_schema(os.path.join(self.root, seg))
         self._publish({
             "batch": ptr["batch"] if batch_id is None else batch_id,
             "seq": n,
             "segments": kept + new,
+            "schemas": {f: s for f, s in schemas.items() if s},
         })
 
     def commit(

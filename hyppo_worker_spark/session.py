@@ -244,7 +244,7 @@ def local_frame(spark: SparkSession, rows, schema):
     rows into a PythonRDD scan, so every downstream action launches
     Python workers just to re-emit a handful of driver-known values —
     measured at ~4-5 s per action for an 8-row frame on this host
-    (tools/job_profile.py on s13: three ~5 s "parquet" jobs, one per
+    (a job profile of s13, see ``profile.py``: three ~5 s "parquet" jobs, one per
     trigger, all of them the k-row ledger write) versus ~0.2 s for the
     equivalent Arrow local relation. At 100 TB the same distinction
     holds on every bounded pull a query returns or re-writes: a k-row

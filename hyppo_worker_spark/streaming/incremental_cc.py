@@ -83,7 +83,7 @@ class IncrementalCCSink:
     the touched subgraph (new edges + affected-component membership
     stars) fits under the bound, the CC recompute runs driver-side
     with union-find instead of the distributed star-rounds operator.
-    Itemizing p08's cost at sf0.1 (tools/profile_p08.py) showed the
+    Itemizing p08's cost at sf0.1 (phase timers; jobs by call site: ``profile.py``) showed the
     distributed recompute was 10.6s of the 12.8s sink total — ~8
     star rounds x per-job fixed overhead over a few thousand edges;
     the data volume is irrelevant at that size. The pull is bounded

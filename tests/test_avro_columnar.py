@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from hyppo_worker_spark.profile import profile
 from hyppo_worker_spark.sources import avro_container as AC
 
 FLAT = T.StructType(
@@ -294,16 +295,6 @@ def test_block_length_mismatch_raises():
         AC.read_container(framed(1, AC.zigzag_encode(0) + b"\x04"))
 
 
-def _group_jobs(spark, group: str, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_write_avro_is_one_job_and_matches_row_writer(spark, tmp_path):
     rows = [
         (i, None if i % 5 == 0 else f"ключ-{i}", None if i % 3 == 0 else i - 20)
@@ -311,8 +302,8 @@ def test_write_avro_is_one_job_and_matches_row_writer(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows, FLAT).coalesce(1)
     out = str(tmp_path / "one")
-    n, jobs = _group_jobs(spark, "avro-columnar-write", lambda: AC.write_avro(df, out))
-    assert (n, jobs) == (5000, 1)
+    n, prof = profile(spark, lambda: AC.write_avro(df, out))
+    assert (n, prof["jobs"]) == (5000, 1)
     (part,) = [f for f in os.listdir(out) if f.endswith(".avro")]
     with open(os.path.join(out, part), "rb") as fh:
         blob = fh.read()

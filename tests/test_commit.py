@@ -21,6 +21,7 @@ import pytest
 
 from hyppo_worker_spark import generations
 from hyppo_worker_spark.generations import POINTER, Generations
+from hyppo_worker_spark.profile import profile
 
 
 class Crash(Exception):
@@ -167,3 +168,23 @@ def test_recover_generation_order_is_numeric(spark, tmp_path, monkeypatch):
     gens.commit(_tagged(spark, "batch-10"), 10)  # the replay
     assert _tags(spark, gens) == ["batch-10"]
     assert sorted(os.listdir(root)) == [POINTER, "g-10", "g-11"]
+
+
+@pytest.mark.parametrize("layout", ["whole", "split", "framed", "no-schema"])
+def test_read_takes_the_recorded_schema(spark, tmp_path, layout):
+    # no inference job, and what inference returns, partition columns
+    # included; a pointer without recorded schemas still infers
+    frame = "corpus" if layout == "framed" else ""
+    df = spark.createDataFrame([(i, i % 3, f"v{i}", [0.5 * i]) for i in range(6)],
+                               "id long, bucket int, v string, emb array<double>")
+    gens = Generations(str(tmp_path / "t"))
+    gens.commit(df, partition_by=["bucket"] if layout in ("split", "framed") else None,
+                split=layout == "split", frame=frame)
+    if layout == "no-schema":
+        gens._publish({k: v for k, v in gens.pointer().items() if k != "schemas"})
+    base = os.path.join(gens.root, frame)
+    inferred = spark.read.option("basePath", base).parquet(*gens.paths(frame))
+    read, prof = profile(spark, lambda: gens.read(spark, frame))
+    assert prof["jobs"] == (layout == "no-schema")
+    assert read.schema == inferred.schema
+    assert sorted(read.collect()) == sorted(inferred.collect())

@@ -10,6 +10,7 @@ import pytest
 from hyppo_worker_spark.operators.ivf_index import IvfIndex
 from hyppo_worker_spark.operators.ivfpq import IvfPqIndex
 from hyppo_worker_spark.operators.pq import PqIndex
+from hyppo_worker_spark.profile import profile
 from hyppo_worker_spark.session import persist_scope
 
 # Measured with the tests' session (local[4], 4 shuffle partitions) on
@@ -48,13 +49,7 @@ _INDEXES = {  # name -> (handle at the existing test sizes, vector dim)
 def test_train_job_count_at_pin(spark, tmp_path, name):
     make, dim = _INDEXES[name]
     corpus = _corpus(spark, dim)
-    sc = spark.sparkContext
-    group = f"{name}-train-job-pin"
-    sc.setJobGroup(group, group)
-    try:
-        with persist_scope():
-            make(str(tmp_path / name)).train(corpus)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    with persist_scope():
+        _, prof = profile(spark, lambda: make(str(tmp_path / name)).train(corpus))
     assert make(str(tmp_path / name)).exists()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= TRAIN_JOBS_PIN[name]
+    assert prof["jobs"] <= TRAIN_JOBS_PIN[name]

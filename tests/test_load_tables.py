@@ -12,19 +12,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from hyppo_worker_spark.plans.explain import has_pushed_filter, scan_reads_only
+from hyppo_worker_spark.profile import profile
 from hyppo_worker_spark.session import load_tables, scoped_conf
 
 SF_DIR = "/root/testdata/sf0.01"
-
-
-def _group_jobs(spark, group: str, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _load(spark, sf_dir, name):
@@ -36,13 +27,9 @@ def test_second_load_launches_no_schema_job(spark, tmp_path):
         pa.table({"k": pa.array([1, 2, 3], pa.int64()), "v": ["a", "b", "c"]}),
         tmp_path / "lt_probe.parquet",
     )
-    first, n_first = _group_jobs(
-        spark, "load-tables-first", lambda: _load(spark, str(tmp_path), "lt_probe")
-    )
-    second, n_second = _group_jobs(
-        spark, "load-tables-second", lambda: _load(spark, str(tmp_path), "lt_probe")
-    )
-    assert (n_first, n_second) == (1, 0)
+    first, p_first = profile(spark, lambda: _load(spark, str(tmp_path), "lt_probe"))
+    second, p_second = profile(spark, lambda: _load(spark, str(tmp_path), "lt_probe"))
+    assert (p_first["jobs"], p_second["jobs"]) == (1, 0)
     assert second.schema == first.schema
     assert sorted(map(tuple, second.collect())) == [(1, "a"), (2, "b"), (3, "c")]
     spark.catalog.dropTempView("lt_probe")

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 from hyppo_worker_spark.plans.explain import formatted_plan
+from hyppo_worker_spark.profile import profile
 from hyppo_worker_spark.session import load_tables, persist_scope, scoped_conf
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -33,11 +34,15 @@ def test_q67_job_count_at_pin(spark):
     sc.setJobGroup(group, group)
     try:
         with persist_scope():
-            rows = _q67(spark).collect()
+            rows, prof = profile(spark, lambda: _q67(spark).collect())
+        assert sc.getLocalProperty("spark.jobGroup.id") == group
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(rows) == 18
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= Q67_JOBS_PIN
+    assert prof["jobs"] == len(sc.statusTracker().getJobIdsForGroup(group))
+    assert prof["jobs"] <= Q67_JOBS_PIN
+    assert 0 <= prof["job_union_s"] <= prof["wall_s"]
+    assert prof["driver_gap_s"] >= 0 and prof["stages"] >= 1
 
 
 def test_q67_result_is_a_local_relation(spark):

@@ -1,8 +1,9 @@
 #!/bin/bash
 # Clean per-row A/B between two checkouts of this repo: a FRESH
-# process per (row, tree) — tools/microbench_rows.py single-row mode
-# (sf0.001 warm-up, min-of-3 timed runs, jobs/run) — alternating
-# trees so host drift cancels.
+# process per (row, tree) — this checkout's profiler,
+# hyppo_worker_spark/profile.py, run as a file with the tree's package
+# first on PYTHONPATH (sf0.001 warm-up, min-of-3 timed runs, jobs/run)
+# — alternating trees so host drift cancels.
 #
 # Why fresh processes: rows late in a shared session run up to 4x
 # faster than the same row first in a session (JIT + codegen warm-up),
@@ -12,8 +13,6 @@
 # isolated noop A/B had both read parity (OPTIMIZATION_r12.md item 1).
 #
 # Usage: tools/ab_clean_rows.sh /path/to/other/worktree row1 [row2 ...]
-# (the other worktree needs tools/microbench_rows.py — copy it in if
-# the commit predates the tool)
 set -u
 other="$1"; shift
 here="$(cd "$(dirname "$0")/.." && pwd)"
@@ -22,7 +21,8 @@ for row in "$@"; do
     cd "$tree" || exit 1
     # keep stderr in a file and flag failures explicitly (ADVICE r12):
     # a silent empty result must never read as a valid A/B data point
-    out=$(python tools/microbench_rows.py --runs 3 "$row" 2>/tmp/ab_clean_rows.stderr | grep -E "^$row")
+    out=$(PYTHONPATH="$tree" python "$here/hyppo_worker_spark/profile.py" \
+      --runs 3 "$row" 2>/tmp/ab_clean_rows.stderr | grep -E "^$row")
     rc=$?
     if [ $rc -ne 0 ] || [ -z "$out" ]; then
       echo "$(basename "$tree") $row FAILED (rc=$rc; stderr tail:" \
