@@ -19,6 +19,8 @@ _log = logging.getLogger(__name__)
 # local_frame calls that fell back to a pickled-rows PythonRDD scan
 LOCAL_FRAME_FALLBACKS = 0
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "hyppo_worker_spark",
@@ -32,6 +34,13 @@ def get_spark(
     coalescing, skew-join splitting, dynamic broadcast) — this is the
     scale path: the same job that runs on local[32] re-plans itself on
     a 1000-executor cluster without code changes.
+
+    Python workers fork from the engine's daemon module
+    (``pydaemon.py``), which keeps their zip import caches across
+    tasks; this package's parent directory is appended to
+    ``spark.executorEnv.PYTHONPATH`` (after any entries the caller
+    passes in ``extra_conf``) so the workers find it from any working
+    directory.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     master = master or f"local[{cpus}]"
@@ -54,8 +63,15 @@ def get_spark(
         # prune whole ingestion tasks via pushFilters — off by default
         # in Spark 4.1.
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        .config("spark.python.daemon.module", "hyppo_worker_spark.pydaemon")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    key = "spark.executorEnv.PYTHONPATH"
+    paths = [p for p in conf.get(key, "").split(os.pathsep) if p]
+    if _PACKAGE_PARENT not in paths:
+        paths.append(_PACKAGE_PARENT)
+    conf[key] = os.pathsep.join(paths)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -63,12 +63,14 @@ from hyppo_worker_spark.model import (
 # and an op-4 task with more raw bytes (its manifests' sizes) is
 # scanned and encoded on the executors instead of on the driver.
 # tools/crossover_records_read.py, local[3], 4-core host, best of the
-# rounds: the records read wins by ~30% up to 1 MiB, ties at 2 MiB and
-# loses from 4 MiB; op 4 (--op4, 1 or 4 raw files) wins by 20-27% up to
-# 0.5 MiB of gzipped raw and ties or loses from 1 MiB, where one driver
+# rounds, with workers forked from the engine's daemon (pydaemon.py):
+# the records read wins by 15% at
+# 0.25 MiB, is within 10% at 0.5 MiB and loses from 1 MiB; op 4
+# (--op4) wins by 11-22% up to 0.25 MiB of gzipped raw in one file and
+# 0.5 MiB in four, and ties or loses past that, where one driver
 # thread encodes what three Python workers encode in parallel. The
 # lower crossover sets the gate.
-LOCAL_READ_MAX_BYTES = 1 << 19
+LOCAL_READ_MAX_BYTES = 1 << 18
 # Read size for the driver-side hashing that streams.
 _HASH_CHUNK = 1 << 20
 

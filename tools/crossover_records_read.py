@@ -71,7 +71,6 @@ PATHS = {"driver": float("inf"), "spark": 0}
 def _spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", str(CORES))
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "2g")
-    os.environ["PYTHONPATH"] = ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
     from hyppo_worker_spark.session import get_spark
 
     spark = get_spark("crossover-records-read")
